@@ -126,10 +126,15 @@ object Tables {
     * pinPairsIfSmall into pinning a huge pair set — the exact ENOSPC the
     * threshold exists to prevent). Spark parquet writers UUID their part
     * files, so any regeneration changes the full list; hashing it keys the
-    * cache on actual layout identity without paying an FS stat on hit. */
-  private def layoutKey(spark: SparkSession, files: Array[String]): (String, String) =
+    * cache on actual layout identity without paying an FS stat on hit.
+    * The first path anchors the key: two different tables whose lists
+    * collide on the 32-bit hash still differ in it, and a dataset
+    * regenerated in place still changes the hash. */
+  private def layoutKey(spark: SparkSession, files: Array[String]): (String, String) = {
+    val sorted = files.sorted
     (sessionKey(spark),
-      s"${scala.util.hashing.MurmurHash3.orderedHash(files.sorted.toSeq)}:${files.length}")
+      s"${sorted.head}:${scala.util.hashing.MurmurHash3.orderedHash(sorted.toSeq)}:${files.length}")
+  }
 
   /** spread decisions keyed by file layout ([[layoutKey]]) and threshold:
     * the decision is a pure function of (layout, floor), and the per-file

@@ -125,12 +125,12 @@ object DedupOps {
 
   /** doc_id → distinct word-3-gram shingle array. */
   private def docShingles(s: SparkSession, d: String): DataFrame =
-    TextOps.withShingles(Tables.spread(Tables.load(s, d, "documents"))).select("doc_id", "sh")
+    shinglesOf(Tables.spread(Tables.load(s, d, "documents")))
 
   /** Full MinHash+LSH near-dup pair detection over any (doc_id, text)
     * frame: signatures → banded candidates → exact-Jaccard verify.
     * Returns (a, b, jac) with a < b; used by q51 and [[DedupPipeline]]. */
-  def minHashNearDupPairs(docs: DataFrame): DataFrame = {
+  def minHashNearDupPairs(docs: DataFrame): DataFrame =
     // The shingled frame feeds three subtrees (signatures + both verify
     // sides), and their differently-specialized projections defeat
     // exchange reuse — each subtree re-ran the scan + shingle pass.
@@ -138,17 +138,28 @@ object DedupOps {
     // note that predates lazy pins): one shingle pass, blocks shared by
     // all three subtrees, no unpersist obligation — ContextCleaner
     // reclaims the blocks with the RDD (see [[shingleBlocks]]).
-    val shingled = TextOps.withShingles(docs).select("doc_id", "sh")
-      .transform(Tables.pin)
-    val banded = bandedSignatures(shingled)
-    val candidates = banded.as("x")
-      .join(banded.as("y"),
+    minHashNearDupPairs(sketchOf(shinglesOf(docs).transform(Tables.pin)))
+
+  /** [[minHashNearDupPairs]] over an already-computed sketch (the batch's
+    * own shingles and bands — [[indexCorpus]] of the docs): the band
+    * self-join finds candidates, the sketch's shingles verify them. */
+  def minHashNearDupPairs(sketch: MinHashCorpusIndex): DataFrame = {
+    val candidates = sketch.bands.as("x")
+      .join(sketch.bands.as("y"),
         col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    verifyJaccard(shingled, candidates)
+    verifyJaccard(sketch.shingles, candidates)
   }
+
+  /** doc_id → distinct word-3-gram shingle array of a (doc_id, text) frame. */
+  private def shinglesOf(docs: DataFrame): DataFrame =
+    TextOps.withShingles(docs).select("doc_id", "sh")
+
+  /** The (shingles, bands) pair of a doc_id → shingles frame. */
+  private def sketchOf(sh: DataFrame): MinHashCorpusIndex =
+    MinHashCorpusIndex(sh, bandedSignatures(sh))
 
   /** LSH band table for a (doc_id, sh) frame: one row per (doc, band) with
     * the band signature. Band signature = the raw minhash slice (4 longs),
@@ -189,7 +200,10 @@ object DedupOps {
     * batch (per micro-batch recompute of the corpus side — the side that
     * dwarfs each batch — is the first thing to hurt at scale). `persist()`
     * before a multi-batch drain; at 100 TB both frames live as bucketed
-    * tables (bands bucketed on the band key → co-located candidate join). */
+    * tables (bands bucketed on the band key → co-located candidate join).
+    * The same pair is a batch's SKETCH: [[minHashCrossDupPairs]],
+    * [[minHashNearDupPairs]] and [[appendToCorpusIndex]] each take one,
+    * so a caller that needs several of them shingles the batch once. */
   final case class MinHashCorpusIndex(shingles: DataFrame, bands: DataFrame) {
     def persist(): this.type = {
       shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -250,13 +264,23 @@ object DedupOps {
     * writer assumed, as with [[graft.sources.PartitionedSink]] compaction;
     * at cluster scale a transactional table format makes this one commit). */
   def appendToCorpusIndex(namePrefix: String, newDocs: DataFrame): Unit = {
-    val spark = newDocs.sparkSession
+    val sketch = indexCorpus(newDocs)
+    // both writes read the shingle pipeline; cache it for the duration so
+    // the batch is shingled once
+    sketch.shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try appendToCorpusIndex(namePrefix, sketch) finally sketch.shingles.unpersist()
+  }
+
+  /** [[appendToCorpusIndex]] of an already-computed batch sketch: its
+    * shingle rows, then its band rows, are appended as they are. */
+  def appendToCorpusIndex(namePrefix: String, sketch: MinHashCorpusIndex): Unit = {
+    val spark = sketch.shingles.sparkSession
     // re-admitting an id whose TOMBSTONE is still pending is a silent data
     // loss trap: the tombstone anti-join would hide the fresh rows at read
     // time, and a later compaction would delete them outright. Fail fast;
     // compact first, then re-admit.
     if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = newDocs.select("doc_id")
+      val clash = sketch.shingles.select("doc_id")
         .join(spark.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
         .limit(1).collect()
       require(clash.isEmpty,
@@ -266,15 +290,11 @@ object DedupOps {
           "rows hidden until compaction deletes them)")
     }
     val nBuckets = bucketCountOf(spark, s"${namePrefix}_bands")
-    val sh = TextOps.withShingles(newDocs).select("doc_id", "sh")
-    sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sh.write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_shingles")
-      bandedSignatures(sh).write.mode("append").format("parquet")
-        .bucketBy(nBuckets, "bucket_key", "band", "bsig")
-        .saveAsTable(s"${namePrefix}_bands")
-    } finally sh.unpersist()
+    sketch.shingles.write.mode("append").format("parquet")
+      .saveAsTable(s"${namePrefix}_shingles")
+    sketch.bands.write.mode("append").format("parquet")
+      .bucketBy(nBuckets, "bucket_key", "band", "bsig")
+      .saveAsTable(s"${namePrefix}_bands")
   }
 
   /** Heal a corpus index after a crashed [[appendToCorpusIndex]]: bands are
@@ -375,30 +395,30 @@ object DedupOps {
           "by a graft index saveAsTables writer"))
 
   /** Index a (doc_id, text) corpus for incremental dedup. */
-  def indexCorpus(corpus: DataFrame): MinHashCorpusIndex = {
-    val sh = TextOps.withShingles(corpus).select("doc_id", "sh")
-    MinHashCorpusIndex(sh, bandedSignatures(sh))
-  }
+  def indexCorpus(corpus: DataFrame): MinHashCorpusIndex = sketchOf(shinglesOf(corpus))
 
   /** INCREMENTAL dedup pair detection: match a NEW batch of (doc_id, text)
     * documents against an EXISTING indexed corpus — the nightly-ingest
     * shape (never corpus × corpus). Candidates are an equi-join of the
     * (small) batch band table against the corpus band table.
     * Returns (new_id, corpus_id, jac). */
-  def minHashCrossDupPairs(newDocs: DataFrame, corpus: MinHashCorpusIndex): DataFrame = {
-    val shNew = TextOps.withShingles(newDocs).select("doc_id", "sh")
+  def minHashCrossDupPairs(newDocs: DataFrame, corpus: MinHashCorpusIndex): DataFrame =
+    minHashCrossDupPairs(indexCorpus(newDocs), corpus)
+
+  /** [[minHashCrossDupPairs]] of an already-computed batch sketch. */
+  def minHashCrossDupPairs(batch: MinHashCorpusIndex, corpus: MinHashCorpusIndex): DataFrame = {
     // bucket_key leads the join keys: against a saveAsTables-bucketed
     // corpus the scan's HashPartitioning(bucket_key) satisfies the join's
     // clustering requirement, so the corpus side joins WITHOUT a shuffle
     // (only the small batch side repartitions)
-    val candidates = bandedSignatures(shNew).as("x")
+    val candidates = batch.bands.as("x")
       .join(corpus.bands.as("y"),
         col("x.bucket_key") === col("y.bucket_key") &&
           col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig"))
       .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("corpus_id"))
       .distinct()
     candidates
-      .join(shNew.select(col("doc_id").as("new_id"), col("sh").as("sh_a")), "new_id")
+      .join(batch.shingles.select(col("doc_id").as("new_id"), col("sh").as("sh_a")), "new_id")
       .join(corpus.shingles.select(col("doc_id").as("corpus_id"), col("sh").as("sh_b")), "corpus_id")
       .withColumn("jac",
         round(graft.plans.JaccardSimilarity.of(col("sh_a"), col("sh_b")), 4))

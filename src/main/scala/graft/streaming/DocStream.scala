@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -22,55 +22,56 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object DocStream {
 
-  /** Drain a (doc_id, text) document stream, flagging each doc's best
-    * verified corpus near-duplicate (`dup_of`, `dup_jac` — null when none
-    * at `threshold`), writing results under `root` partitioned by batch_id.
-    *
-    * Effectively-once: foreachBatch is at-least-once, so a batch REPLAYED
-    * after a crash re-derives the same batch_id and dynamic partition
-    * overwrite replaces exactly that partition — a plain append would
-    * duplicate the batch's rows (same idempotency scheme as
-    * [[EventStream.toPartitionedParquet]]). The corpus is indexed ONCE and
-    * persisted across micro-batches — per-batch recompute of the corpus
-    * shingle/sketch/band pipeline (the side that dwarfs each batch) is the
-    * expensive mistake here. Re-invoking on a schedule with the same
-    * checkpoint drains only new arrivals. */
   /** Streaming ADMISSION CONTROL against the AT-REST corpus index — the
     * production ingest gate [[incrementalDedupDrain]] only flags: each
     * micro-batch of (doc_id, text) docs is near-deduped against the
     * DURABLE index ([[graft.operators.DedupOps.loadCorpusIndex]],
     * tombstone-aware) AND within itself, rejects are recorded, and the
-    * surviving novel docs are ADMITTED — appended to the index with
-    * [[graft.operators.DedupOps.appendToCorpusIndex]] — so LATER
-    * micro-batches dedup against EARLIER admissions, not just the
-    * day-0 corpus. This closes the loop a nightly pipeline runs in
-    * batch, at arrival latency.
+    * surviving novel docs are ADMITTED — appended to the index — so LATER
+    * micro-batches dedup against EARLIER admissions, not just the day-0
+    * corpus. This closes the loop a nightly pipeline runs in batch, at
+    * arrival latency.
     *
-    * Per batch: corpus rejects = best verified index match at
-    * `threshold` (the [[incrementalDedupDrain]] contract); within-batch
-    * rejects = non-representatives of the batch's own near-dup clusters
-    * (smallest doc_id survives — [[graft.operators.DedupPipeline]]'s
-    * senior-keeper policy). The audit row (`admitted`, `dup_of`,
-    * `dup_jac`; within-batch rejects carry their surviving senior as
-    * `dup_of`) lands under `root` partitioned by batch_id with dynamic
-    * partition overwrite — a replayed batch rewrites exactly its own
-    * partition.
+    * Per batch, on the caller's session ([[EventStream.onCaller]] — the
+    * batch reuses the classes earlier drains compiled instead of
+    * recompiling them on the stream's cloned session), each step once:
+    *  1. SKETCH: the batch is shingled and MinHash-banded once
+    *     ([[graft.operators.DedupOps.indexCorpus]]), cached for the batch;
+    *  2. PAIRS: corpus pairs (sketch bands × index bands) and within-batch
+    *     pairs (sketch bands × themselves) both read that sketch;
+    *  3. VERDICT: corpus rejects = best verified index match at
+    *     `threshold` (the [[incrementalDedupDrain]] contract); within-batch
+    *     rejects = non-representatives of the batch's own near-dup
+    *     clusters (smallest doc_id survives —
+    *     [[graft.operators.DedupPipeline]]'s senior-keeper policy). The
+    *     verdict and each doc's admit flag are pinned once, lineage
+    *     severed; the survivor set, the audit and the append read those
+    *     blocks;
+    *  4. AUDIT: the audit row (`admitted`, `dup_of`, `dup_jac`;
+    *     within-batch rejects carry their surviving senior as `dup_of`)
+    *     lands under `root` partitioned by batch_id with dynamic partition
+    *     overwrite — a replayed batch rewrites exactly its own partition;
+    *  5. APPEND: the admitted docs' rows OF THE SAME SKETCH are appended
+    *     to the index ([[graft.operators.DedupOps.appendToCorpusIndex]]) —
+    *     the batch is not shingled again.
+    * Every frame the batch caches or pins is released when it ends.
     *
     * REPLAY safety for the index side: foreachBatch is at-least-once and
-    * [[graft.operators.DedupOps.appendToCorpusIndex]] is not idempotent,
-    * so survivors are anti-joined against the `_admissions` MANIFEST —
-    * one (batch_id, doc_id) row per doc EVER admitted, seeded from the
-    * index's day-0 ids on first use — before the append: a replayed
-    * batch (or a doc re-sent in a later file) can never double-admit,
-    * and the steady-state probe is O(admitted docs) against a tiny
-    * two-column table, never a scan of the shingle table
-    * ([[replayProbe]]; plan-asserted). A probe-skipped survivor (its id
-    * was admitted by an EARLIER batch, the day-0 corpus, or was later
-    * purged — ids are never reused) audits as `admitted = false` with
-    * `dup_of` null, distinguishing it from a dedup reject.
+    * the index append is not idempotent, so survivors are anti-joined
+    * against the `_admissions` MANIFEST — one (batch_id, doc_id) row per
+    * doc EVER admitted, seeded from the index's day-0 ids on first use —
+    * before the append: a replayed batch (or a doc re-sent in a later
+    * file) can never double-admit, and the steady-state probe is
+    * O(admitted docs) against a tiny two-column table, never a scan of the
+    * shingle table ([[replayProbe]]; plan-asserted). A probe-skipped
+    * survivor (its id was admitted by an EARLIER batch, the day-0 corpus,
+    * or was later purged — ids are never reused) audits as
+    * `admitted = false` with `dup_of` null, distinguishing it from a dedup
+    * reject.
     *
     * CRASH PROTOCOL: a (batch_id, null) marker row is written before a
-    * batch's index append, its (batch_id, doc_id) completion rows after.
+    * batch's index append, its (batch_id, doc_id) completion rows after;
+    * one read of the batch's manifest rows tells the three cases apart.
     * A replayed batch with a marker but no completion rows hits the
     * RECOVERY path: the precise shingle-id probe (the O(corpus) scan —
     * paid only here) splits its survivors into docs whose shingles
@@ -96,14 +97,14 @@ object DocStream {
     require(threshold >= 0.7,
       f"admissionDrain: LSH candidate recall at jaccard $threshold%.2f is too " +
         "low — same floor as DedupPipeline.dedupAgainstCorpus")
-    seedAdmissions(docsStream.sparkSession, namePrefix)
+    val spark = docsStream.sparkSession
+    seedAdmissions(spark, namePrefix)
     val q = docsStream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.toDF().select("doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val pins = new BatchPins
         try {
+          val b = pins.cache(EventStream.onCaller(spark, batch).select("doc_id", "text"))
           // tombstone fail-fast FIRST — before any audit or index write
           // claims anything about this batch
           if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
@@ -116,13 +117,16 @@ object DocStream {
                 "reused; run compactCorpusIndex, then re-run the drain (the " +
                 "checkpoint resumes at this batch)")
           }
-          val manifest = spark.table(s"${namePrefix}_admissions")
-          val started = manifest
-            .filter(col("batch_id") === batchId && col("doc_id").isNull)
-            .limit(1).collect().nonEmpty
-          val completed = started && manifest
-            .filter(col("batch_id") === batchId && col("doc_id").isNotNull)
-            .limit(1).collect().nonEmpty
+          // the kinds of manifest row this batch has (true = marker, false
+          // = completion) in ONE job: each partition reports its distinct
+          // kinds — a global aggregate would add a shuffle stage
+          val kinds = spark.table(s"${namePrefix}_admissions")
+            .filter(col("batch_id") === batchId)
+            .select(col("doc_id").isNull)
+            .as(Encoders.scalaBoolean)
+            .mapPartitions(_.toSet.iterator)(Encoders.scalaBoolean)
+            .collect().toSet
+          val started = kinds(true)
           // REPLAY OF A COMPLETED BATCH: recorded no-op. The audit
           // partition already holds the original attempt's rows; a rewrite
           // here would NOT be byte-identical (rejects recomputed now see
@@ -130,22 +134,14 @@ object DocStream {
           // rejected doc's dup_of/dup_jac attribution to a same-batch
           // admitted copy — ADVICE r11), and there is nothing to admit or
           // heal, so the partition is left untouched.
-          if (!completed)
-            processBatch(spark, b, batchId, started, namePrefix, threshold, root)
-        } finally b.unpersist()
+          if (!(started && kinds(false)))
+            processBatch(spark, b, batchId, started, namePrefix, threshold, root, pins)
+        } finally pins.release()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // the appends ran on foreachBatch's CLONED sessions; the caller's
-    // session may hold a stale cached relation (file list) for the index
-    // tables from a pre-drain read — invalidate so post-drain reads see
-    // every admitted batch
-    val caller = docsStream.sparkSession
-    for (t <- Seq("shingles", "bands", "tombstones", "admissions"))
-      if (caller.catalog.tableExists(s"${namePrefix}_$t"))
-        caller.catalog.refreshTable(s"${namePrefix}_$t")
   }
 
   /** STREAMING split maintenance — the q118/q119 nightly loop run per
@@ -207,11 +203,11 @@ object DocStream {
   def splitDrain(docsStream: DataFrame, indexPrefix: String,
                  splitPrefix: String, clusterRoot: String,
                  checkpoint: String): Unit = {
+    val spark = docsStream.sparkSession
     val q = docsStream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.toDF().select("doc_id", "text", "n_chars")
+        val b = EventStream.onCaller(spark, batch).select("doc_id", "text", "n_chars")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val span = b.agg(min("doc_id"), max("doc_id")).head()
@@ -288,11 +284,6 @@ object DocStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val caller = docsStream.sparkSession
-    for (t <- Seq(s"${indexPrefix}_prefix", s"${indexPrefix}_df",
-        s"${indexPrefix}_shingles", s"${splitPrefix}_assign",
-        s"${splitPrefix}_meta", s"${splitPrefix}_moves", s"${splitPrefix}_pairs"))
-      if (caller.catalog.tableExists(t)) caller.catalog.refreshTable(t)
   }
 
   /** STREAMING media ingest — the multimodal twin of the text drains:
@@ -358,11 +349,11 @@ object DocStream {
     require(splitPrefix.isEmpty == clusterRoot.isEmpty,
       "mediaDrain: splitPrefix and clusterRoot come together — the split " +
         "assignment flows through the committed cluster merge")
+    val spark = mediaStream.sparkSession
     val q = mediaStream.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val b = batch.toDF().select("doc_id", "kind", "payload")
+        val b = EventStream.onCaller(spark, batch).select("doc_id", "kind", "payload")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val span = b.agg(min("doc_id"), max("doc_id")).head()
@@ -440,11 +431,6 @@ object DocStream {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val caller = mediaStream.sparkSession
-    for (t <- Seq("chunks", "meta", "tombstones").map(t => s"${indexPrefix}_$t") ++
-        splitPrefix.toSeq.flatMap(sp => Seq(s"${sp}_assign", s"${sp}_meta",
-          s"${sp}_moves", s"${sp}_pairs")))
-      if (caller.catalog.tableExists(t)) caller.catalog.refreshTable(t)
   }
 
   /** The media drain's per-batch audit row: each batch asset with its
@@ -467,89 +453,132 @@ object DocStream {
       .parquet(root)
   }
 
-  /** One non-completed-replay micro-batch of [[admissionDrain]]: dedup,
-    * audit, admit. `started` = a marker row exists but no completion rows
-    * (a prior attempt crashed mid-append) — the one path that pays the
-    * precise O(corpus) recovery probe; a fresh batch arrives with
-    * `started = false`. Completed replays never reach here. */
+  /** One non-completed-replay micro-batch of [[admissionDrain]]: sketch,
+    * pairs, verdict, audit, admit. `started` = a marker row exists but no
+    * completion rows (a prior attempt crashed mid-append) — the one path
+    * that pays the precise O(corpus) recovery probe; a fresh batch arrives
+    * with `started = false`. Completed replays never reach here. */
   private def processBatch(spark: SparkSession, b: DataFrame, batchId: Long,
                            started: Boolean, namePrefix: String,
-                           threshold: Double, root: String): Unit = {
+                           threshold: Double, root: String, pins: BatchPins): Unit = {
+    import graft.operators.{DedupOps, DedupPipeline}
+    // the batch's ONE shingle + MinHash pass: both pair searches and the
+    // index append read these blocks. A plain cache is safe here — the
+    // sketch derives from the batch alone, so no index write below can
+    // invalidate it.
+    val sketch = DedupOps.indexCorpus(b)
+    Seq(sketch.shingles, sketch.bands).foreach(pins.cache)
     // loaded PER BATCH deliberately: the catalog read is footer-cheap
     // and must see the appends earlier batches committed
-    val index = graft.operators.DedupOps.loadCorpusIndex(spark, namePrefix)
-    val corpusBest = graft.operators.DedupOps
-      .minHashCrossDupPairs(b, index)
+    val index = DedupOps.loadCorpusIndex(spark, namePrefix)
+    val corpusBest = DedupOps.minHashCrossDupPairs(sketch, index)
       .filter(col("jac") >= threshold)
       .groupBy("new_id")
       .agg(max_by(col("corpus_id"), struct(col("jac"), -col("corpus_id"))).as("dup_of"),
         max("jac").as("dup_jac"))
-    val batchPairs = graft.operators.DedupOps.minHashNearDupPairs(b)
+    val batchPairs = DedupOps.minHashNearDupPairs(sketch)
       .filter(col("jac") >= threshold)
-    val juniors = graft.operators.DedupPipeline
-      .clusters(batchPairs.select("a", "b"), maxIter = 100)
-      .toDF().filter(col("node") =!= col("label"))
+    val juniors = pins.adopt(DedupPipeline
+      .clusters(batchPairs.select("a", "b"), maxIter = 100))
+      .filter(col("node") =!= col("label"))
       .select(col("node").as("new_id"), col("label").as("dup_of"))
-    val rejects = corpusBest.select("new_id", "dup_of", "dup_jac")
+    // the reject verdict, pinned ONCE: the survivor probe and the
+    // decision below both read it. Lineage-severed, not cached, like
+    // every pin below: they read the index tables or the manifest, and the
+    // appends re-plan any cache over a table they write — between the
+    // shingle and band appends a re-evaluated admit decision would
+    // silently append ZERO band rows.
+    val verdict = pins.sever(corpusBest.select("new_id", "dup_of", "dup_jac")
       .unionByName(juniors.withColumn("dup_jac", lit(null).cast("double")))
       // a doc can be both a corpus dup and a within-batch junior;
       // keep the corpus verdict (it carries the verified jac)
       .groupBy("new_id")
       .agg(max_by(struct(col("dup_of"), col("dup_jac")), col("dup_jac").isNotNull).as("r"))
-      .select(col("new_id"), col("r.dup_of").as("dup_of"), col("r.dup_jac").as("dup_jac"))
-    val survivors = b.join(rejects.select("new_id"),
-      b("doc_id") === rejects("new_id"), "left_anti")
-    val fresh = replayProbe(spark, namePrefix, survivors)
-    // EAGER localCheckpoint, not persist: appendToCorpusIndex's
-    // FIRST write (shingles) invalidates any cached plan over the
-    // tables `fresh` derives from — its second write (bands) would
-    // then re-evaluate the probe against UPDATED tables and
-    // silently append ZERO band rows. Severing the lineage pins the
-    // batch's row set across both writes. (Batch-sized frames —
-    // checkpoint cost is the batch.)
-    val (freshFinal, healed) =
+      .select(col("new_id"), col("r.dup_of").as("dup_of"), col("r.dup_jac").as("dup_jac")))
+    val judged = b.join(verdict, b("doc_id") === verdict("new_id"), "left")
+    val fresh = replayProbe(spark, namePrefix,
+      judged.filter(col("new_id").isNull).select("doc_id")).distinct()
+    // the decision: each batch doc's verdict and whether this batch admits
+    // it (survived dedup, not yet in the manifest) — the audit and the
+    // append read these blocks
+    val (decided, nAdmitted) = pins.severCounted(col("admitted"))(judged
+      .join(fresh.withColumn("admitted", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"), col("text"), col("dup_of"), col("dup_jac"),
+        coalesce(col("admitted"), lit(false)).as("admitted")))
+    val admitted = decided.filter(col("admitted")).select("doc_id")
+    val (freshFinal, nFresh, healed) =
       if (started) {
         // RECOVERY: a prior attempt crashed mid-append — the one
         // path that pays the precise O(corpus) shingle-id probe
         val committed = spark.table(s"${namePrefix}_shingles")
           .select("doc_id").distinct()
-        (fresh.join(committed, Seq("doc_id"), "left_anti")
-            .localCheckpoint(eager = true),
-          fresh.join(committed, Seq("doc_id"), "left_semi")
-            .select("doc_id").localCheckpoint(eager = true))
+        val (missing, n) = pins.severCounted(lit(true))(
+          admitted.join(committed, Seq("doc_id"), "left_anti"))
+        (missing, n, pins.sever(admitted.join(committed, Seq("doc_id"), "left_semi")))
       } else
-        (fresh.localCheckpoint(eager = true),
-          spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0))
-    // the admit decision is now FINAL — only now write the audit:
-    // admitted = survived dedup AND actually entered the index (this
-    // attempt or a healed crashed one)
-    val admittedIds = freshFinal.select("doc_id").unionByName(healed).distinct()
-    b.join(rejects, b("doc_id") === rejects("new_id"), "left")
-      .join(admittedIds.withColumn("adm", lit(true)), Seq("doc_id"), "left")
-      .withColumn("admitted",
-        col("new_id").isNull && coalesce(col("adm"), lit(false)))
-      .drop("new_id", "adm")
-      .withColumn("batch_id", lit(batchId))
+        (admitted, nAdmitted, spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0))
+    // the admit decision is FINAL — only now write the audit: admitted =
+    // survived dedup AND enters the index (this attempt, or a crashed one
+    // whose rows are healed below)
+    decided.withColumn("batch_id", lit(batchId))
       .write
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .mode("overwrite")
       .parquet(root)
-    val toAppend = freshFinal.limit(1).collect().nonEmpty
+    val toAppend = nFresh > 0
     if (toAppend && !started)
       spark.range(1)
         .select(lit(batchId).as("batch_id"), lit(null).cast("long").as("doc_id"))
         .write.mode("append").format("parquet")
         .saveAsTable(s"${namePrefix}_admissions")
     if (toAppend)
-      graft.operators.DedupOps.appendToCorpusIndex(namePrefix, freshFinal)
+      DedupOps.appendToCorpusIndex(namePrefix, DedupOps.MinHashCorpusIndex(
+        sketch.shingles.join(freshFinal, Seq("doc_id"), "left_semi"),
+        sketch.bands.join(freshFinal, Seq("doc_id"), "left_semi")))
     if (started)
-      graft.operators.DedupOps.repairCorpusIndex(spark, namePrefix)
-    val newRows = freshFinal.select("doc_id").unionByName(healed)
+      DedupOps.repairCorpusIndex(spark, namePrefix)
     if (toAppend || healed.limit(1).collect().nonEmpty)
-      newRows.select(lit(batchId).as("batch_id"), col("doc_id"))
+      freshFinal.unionByName(healed).select(lit(batchId).as("batch_id"), col("doc_id"))
         .write.mode("append").format("parquet")
         .saveAsTable(s"${namePrefix}_admissions")
+  }
+
+  /** The frames one micro-batch caches or pins, released together in the
+    * drain's `finally` — a batch leaves no blocks behind. [[cache]] is for
+    * frames derived from the batch alone; [[sever]] (an eager
+    * localCheckpoint) for frames that read tables the batch then writes;
+    * [[adopt]] takes over the checkpoints an operator returns a frame
+    * over. */
+  private final class BatchPins {
+    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val severed = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+
+    def cache(df: DataFrame): DataFrame = {
+      cached += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+
+    def sever(df: DataFrame): DataFrame = adopt(df.localCheckpoint(eager = true))
+
+    def adopt(df: DataFrame): DataFrame = {
+      severed ++= df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD if lr.rdd.isCheckpointed => lr.rdd
+      }
+      df
+    }
+
+    /** [[sever]], with the rows matching `cond` counted by the same job. */
+    def severCounted(cond: org.apache.spark.sql.Column)(df: DataFrame): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val out = sever(df.observe(obs, count(when(cond, 1)).as("n")))
+      (out, obs.get("n").asInstanceOf[Long])
+    }
+
+    def release(): Unit = {
+      cached.foreach(_.unpersist())
+      severed.foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** The drain's FAST-PATH replay probe: batch survivors not yet in the
@@ -578,6 +607,19 @@ object DocStream {
         .select(lit(-1L).as("batch_id"), col("doc_id"))
         .write.format("parquet").saveAsTable(s"${namePrefix}_admissions")
 
+  /** Drain a (doc_id, text) document stream, flagging each doc's best
+    * verified corpus near-duplicate (`dup_of`, `dup_jac` — null when none
+    * at `threshold`), writing results under `root` partitioned by batch_id.
+    *
+    * Effectively-once: foreachBatch is at-least-once, so a batch REPLAYED
+    * after a crash re-derives the same batch_id and dynamic partition
+    * overwrite replaces exactly that partition — a plain append would
+    * duplicate the batch's rows (same idempotency scheme as
+    * [[EventStream.toPartitionedParquet]]). The corpus is indexed ONCE and
+    * persisted across micro-batches — per-batch recompute of the corpus
+    * shingle/sketch/band pipeline (the side that dwarfs each batch) is the
+    * expensive mistake here. Re-invoking on a schedule with the same
+    * checkpoint drains only new arrivals. */
   def incrementalDedupDrain(docsStream: DataFrame, corpus: DataFrame,
                             threshold: Double, root: String, checkpoint: String): Unit = {
     val index = graft.operators.DedupOps.indexCorpus(corpus).persist()
@@ -585,15 +627,15 @@ object DocStream {
       val q = docsStream.writeStream
         .outputMode(OutputMode.Append)
         .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          val b = EventStream.onCaller(docsStream.sparkSession, batch)
           val pairs = graft.operators.DedupOps
-            .minHashCrossDupPairs(batch.toDF(), index)
+            .minHashCrossDupPairs(b, index)
             .filter(col("jac") >= threshold)
           val best = pairs
             .groupBy("new_id")
             .agg(max_by(col("corpus_id"), struct(col("jac"), -col("corpus_id"))).as("dup_of"),
               max("jac").as("dup_jac"))
-          batch.toDF()
-            .join(best, batch("doc_id") === best("new_id"), "left")
+          b.join(best, b("doc_id") === best("new_id"), "left")
             .drop("new_id")
             .withColumn("batch_id", lit(batchId))
             .write

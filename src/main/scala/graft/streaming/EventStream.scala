@@ -118,6 +118,18 @@ object EventStream {
       .toDF()
   }
 
+  /** A foreachBatch micro-batch rebound to the session that started the
+    * stream. Structured Streaming hands each batch over on the query's
+    * CLONED session, and Spark gives every session its own executor class
+    * loader — the codegen cache is keyed by class loader, so batch work run
+    * on a fresh clone recompiles every generated class each drain. On the
+    * caller's session it reuses the classes earlier drains compiled, runs
+    * with the caller's settings (AQE included — the clone turns it off),
+    * and its table writes invalidate the caller's own cached relations. */
+  private[streaming] def onCaller(caller: SparkSession,
+                                  batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): DataFrame =
+    org.apache.spark.sql.GraftBridge.ofRows(caller, batch.queryExecution.logical)
+
   /** Streaming → idempotent partitioned parquet via foreachBatch. Each
     * micro-batch writes under (load_date, batch_id), with load_date derived
     * from the rows' EVENT TIME (`tsCol`) — not processing time, so a batch
@@ -125,9 +137,9 @@ object EventStream {
     * the crash. Dynamic partition overwrite then replaces EXACTLY the
     * (date, batch) partitions present in the replayed data: no wiping of
     * the day's other batches, no duplicates. */
-  private def writePartitionedBatch(batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+  private def writePartitionedBatch(batch: DataFrame,
                                     batchId: Long, root: String, tsCol: String): Unit =
-    batch.toDF()
+    batch
       .withColumn(graft.sources.PartitionedSink.LoadDateCol,
         date_format(col(tsCol), "yyyyMMdd"))
       .withColumn("batch_id", lit(batchId))
@@ -148,7 +160,7 @@ object EventStream {
     val w = df.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writePartitionedBatch(batch, batchId, root, tsCol)
+        writePartitionedBatch(onCaller(df.sparkSession, batch), batchId, root, tsCol)
       }
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
@@ -542,7 +554,7 @@ object EventStream {
     val q = df.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        writePartitionedBatch(batch, batchId, root, tsCol)
+        writePartitionedBatch(onCaller(df.sparkSession, batch), batchId, root, tsCol)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

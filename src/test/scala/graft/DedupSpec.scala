@@ -280,6 +280,25 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists(_._1 == 5000002L), "novel doc spuriously matched")
   }
 
+  test("sketch-based pair functions equal the DataFrame ones on sf0.001 documents") {
+    import graft.operators.DedupOps
+    val docs = Tables.load(spark, TestSpark.sf, "documents").select("doc_id", "text")
+    val batch = docs.filter(col("doc_id") % 10 === 0)
+    val corpus = DedupOps.indexCorpus(docs.filter(col("doc_id") % 10 =!= 0))
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(!a.isEmpty, "vacuous parity: no pairs")
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    // the sketches cached, as a caller computing them once holds them
+    val batchSketch = DedupOps.indexCorpus(batch).persist()
+    val docsSketch = DedupOps.indexCorpus(docs).persist()
+    try {
+      same(DedupOps.minHashCrossDupPairs(batchSketch, corpus),
+        DedupOps.minHashCrossDupPairs(batch, corpus))
+      same(DedupOps.minHashNearDupPairs(docsSketch), DedupOps.minHashNearDupPairs(docs))
+    } finally { batchSketch.unpersist(); docsSketch.unpersist() }
+  }
+
   test("bucketed corpus index round-trips and joins without shuffling the corpus side") {
     import graft.operators.DedupOps
     val docs = Tables.load(spark, TestSpark.sf, "documents").select("doc_id", "text")

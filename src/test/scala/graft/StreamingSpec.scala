@@ -800,6 +800,82 @@ class StreamingSpec extends AnyFunSuite {
     } finally dropAdmTables("graft_adm4_idx")
   }
 
+  test("admissionDrain: two drains audit like the DataFrame operators, leave the index equal to indexCorpus(day 0 ∪ admitted), recompile nothing and leak no pin") {
+    import graft.operators.DedupOps
+    import spark.implicits._
+    def words(tag: String): String = (1 to 40).map(i => f"$tag$i%02d").mkString(" ")
+    val day0 = Seq((100L, words("da")), (101L, words("db"))).toDF("doc_id", "text")
+    // each night: a corpus twin, a near-dup of an earlier ADMISSION (night
+    // 1), a novel senior with its within-batch junior, and a novel doc —
+    // both nights take every branch of the per-batch flow
+    val nights = Seq(
+      Seq((1L, words("da")), (2L, words("ea")), (3L, words("eb")), (4L, words("eb") + " tail")),
+      Seq((5L, words("ea") + " extra"), (6L, words("fa")), (7L, words("fa") + " tail"),
+        (8L, words("db")), (9L, words("fb"))))
+      .map(_.toDF("doc_id", "text"))
+    val juniors = Map(4L -> 3L, 7L -> 6L)
+    val srcDir = java.nio.file.Files.createTempDirectory("graft-adm5-src")
+    val sinkRoot = java.nio.file.Files.createTempDirectory("graft-adm5-sink").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-adm5-ck").toString
+    val sc = spark.sparkContext
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame): Boolean =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    try {
+      DedupOps.indexCorpus(day0).saveAsTables("graft_adm5_idx", nBuckets = 4)
+      val preDrain = sc.getPersistentRDDs.keySet
+      val compiled = nights.zipWithIndex.map { case (night, n) =>
+        night.repartition(1).write.parquet(srcDir.resolve(s"n$n").toString)
+        val c0 = compiles()
+        graft.streaming.DocStream.admissionDrain(
+          spark.readStream.schema(night.schema).parquet(srcDir.toString + "/*"),
+          "graft_adm5_idx", 0.8, sinkRoot, ckpt)
+        compiles() - c0
+      }
+      // no pin outlives its batch: every frame the drains cached or
+      // checkpointed is released (each within-batch cluster here is one
+      // pair, so the clustering converges in its first, adopted cut)
+      val leftover = sc.getPersistentRDDs.keySet.filterNot(preDrain)
+      assert(leftover.isEmpty, s"pins left by the drains: $leftover")
+      val audit = spark.read.parquet(sinkRoot)
+      val admitted = audit.filter(col("admitted")).select("doc_id")
+      // the audit against the DataFrame operators: each night's corpus
+      // rejects are its best verified match in day 0 ∪ the earlier nights'
+      // admissions, the planted juniors carry their senior, the rest admit
+      nights.zipWithIndex.foreach { case (night, n) =>
+        val corpus = nights.take(n).foldLeft(day0)((c, earlier) =>
+          c.unionByName(earlier.join(admitted, "doc_id")))
+        val best = DedupOps.minHashCrossDupPairs(night, corpus)
+          .filter(col("jac") >= 0.8).groupBy("new_id")
+          .agg(max_by(col("corpus_id"), struct(col("jac"), -col("corpus_id"))).as("dup_of"),
+            max("jac").as("dup_jac"))
+          .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, Option(r._3)))).toMap
+        val expect = night.select("doc_id").as[Long].collect().map { id =>
+          val verdict = best.get(id).orElse(juniors.get(id).map(_ -> Option.empty[Double]))
+          id -> ((verdict.isEmpty, verdict.map(_._1), verdict.flatMap(_._2)))
+        }.toMap
+        val got = audit.filter(col("batch_id") === n.toLong)
+          .select("doc_id", "admitted", "dup_of", "dup_jac")
+          .as[(Long, Boolean, Option[Long], Option[Double])].collect()
+          .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+        assert(got == expect, s"night $n audit")
+      }
+      assert(admitted.as[Long].collect().toSet == Set(2L, 3L, 6L, 9L))
+      // the index equals a fresh build over day 0 ∪ admitted
+      val fresh = DedupOps.indexCorpus(day0.unionByName(
+        nights.reduce(_ unionByName _).join(admitted, "doc_id")))
+      val loaded = DedupOps.loadCorpusIndex(spark, "graft_adm5_idx")
+      assert(same(loaded.shingles.select("doc_id", "sh"), fresh.shingles))
+      val bandCols = fresh.bands.columns.toSeq.map(col)
+      assert(same(loaded.bands.select(bandCols: _*), fresh.bands))
+      // the second drain runs on the caller's session and reuses the
+      // classes the first compiled — a batch run on the stream's fresh
+      // cloned session compiles them all again
+      assert(compiled(1) <= 20, s"second drain compiled ${compiled(1)} classes")
+    } finally dropAdmTables("graft_adm5_idx")
+  }
+
   test("foreachBatch streams into the idempotent partitioned sink") {
     val root = java.nio.file.Files.createTempDirectory("graft-stream-sink").toString
     val stream = EventStream.fromDirectory(spark, eventsDir)

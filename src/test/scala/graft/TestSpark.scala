@@ -12,6 +12,9 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    // Bench's codegen cache: the default 100 entries evict a streaming
+    // drain's generated classes before the next drain can reuse them
+    .config("spark.sql.codegen.cache.maxEntries", "2000")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .config("spark.ui.enabled", "false")
