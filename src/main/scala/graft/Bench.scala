@@ -439,6 +439,8 @@ object Bench {
           .mkString("{", ",", "}")}}""" + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     println(line(qs))
+    // drop the warm caches (and the session their frames hold) before stop
+    operators.WarmState.releaseAll(spark)
     spark.stop()
   }
 }

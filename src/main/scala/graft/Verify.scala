@@ -48,6 +48,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // drop the warm caches (and the session their frames hold) before stop
+    operators.WarmState.releaseAll(spark)
     spark.stop()
   }
 }

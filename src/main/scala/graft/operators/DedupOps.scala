@@ -1490,11 +1490,11 @@ object DedupOps {
 
     // Cluster ASSIGNMENT for the near-dup graph: n-gram-Jaccard edges at
     // threshold 0.5 → connected components via DedupPipeline.clusters
-    // (min-label propagation: one join + agg per iteration — the shape that
-    // scales to billion-edge graphs). Every node converges to the smallest
-    // doc_id reachable from it; the oracle replays the closure with a
-    // recursive CTE, so the DISTRIBUTED iterative algorithm is hash-checked
-    // against a declarative transitive-closure ground truth.
+    // (driver search for graphs this size, min-label propagation — one join
+    // + agg per iteration — for billion-edge ones). Every node is labeled
+    // with the smallest doc_id reachable from it; the oracle replays the
+    // closure with a recursive CTE, so the labels are hash-checked against
+    // a declarative transitive-closure ground truth.
     "q58_dedup_clusters" -> ((s, d) => {
       // threshold folded into the pair generator (minJac): prefix-filtered
       // candidates + exact verify, so sub-threshold pairs never reach the

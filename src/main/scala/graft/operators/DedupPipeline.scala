@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** User-facing corpus deduplication API — the operator a training-data
   * pipeline actually calls: hand it a corpus, get back the kept rows.
@@ -126,85 +127,44 @@ object DedupPipeline {
     docs.join(dropped, Seq(idCol), "left_anti")
   }
 
-  /** Connected components over a near-dup pair graph via min-label
-    * propagation: every node converges to the smallest id reachable from it
-    * (its cluster representative). Returns (node, label).
+  /** Symmetric edge rows (two per pair) up to which [[clusters]] labels the
+    * graph on the driver: 200,000 rows of two longs, a few MB collected. */
+  val DriverMaxEdges: Long = 200000L
+
+  /** Connected components over a near-dup pair graph: every node is labeled
+    * with the smallest id in its component (its cluster representative).
+    * Returns (node, label) for every node on an edge.
     *
-    * Each iteration is one join + aggregation — the hash-to-min pattern that
-    * scales to billions of edges; iterations are materialized so the loop
-    * adds plan DEPTH not plan WIDTH, and lineage is cut every round —
-    * localCheckpoint (executor-block storage) by default, or a RELIABLE
-    * checkpoint when `checkpointDir` is set: on a real cluster a lost
-    * executor invalidates localCheckpoint blocks mid-propagation, so
-    * production runs should point `checkpointDir` at durable storage
-    * (HDFS/S3). Near-dup graphs have tiny diameters (dup clusters are
-    * near-cliques), so convergence is typically 2–3 iterations.
+    * Both paths first persist the symmetric edge frame and count it exactly.
+    *  - DRIVER path, taken when `checkpointDir` is empty, the ids are longs
+    *    and 0 < edge rows <= [[DriverMaxEdges]]: the cached edges are
+    *    collected (one job) and a breadth-first search from each component's
+    *    minimum id labels it. The result is a local relation: no checkpoint
+    *    behind it, nothing to release. Batch-sized graphs (admission, the
+    *    contracted graphs of [[updateClusters]] and [[removeFromClusters]],
+    *    q58/q87 at test scales) all take it.
+    *  - DISTRIBUTED path, for larger graphs and whenever `checkpointDir` is
+    *    set: min-label propagation, one join + aggregation per hop (the
+    *    hash-to-min pattern that scales to billions of edges), each hop
+    *    materialized and lineage-cut — localCheckpoint (executor blocks) by
+    *    default, or a RELIABLE checkpoint against `checkpointDir`: on a real
+    *    cluster a lost executor invalidates localCheckpoint blocks
+    *    mid-propagation, so production runs should point `checkpointDir` at
+    *    durable storage (HDFS/S3). A superseded hop's blocks and files are
+    *    released as soon as the next hop is materialized.
     *
-    * Non-convergence at `maxIter` (a component wider than maxIter hops)
-    * THROWS by default: a partial assignment silently splits components,
-    * and a library caller has no cheap way to notice. Pass
-    * `strict = false` to accept the partial assignment (logged as a WARN)
-    * — e.g. when a bounded number of rounds is the point and a coarser
+    * `maxIter` bounds the propagation hops. Propagation converges exactly
+    * when every component's eccentricity from its minimum id is below
+    * `maxIter`; the driver path measures those eccentricities and, if any
+    * reaches `maxIter` (or an id is null), falls through to the distributed
+    * loop, so on every path a graph deeper than `maxIter` hops behaves the
+    * same. Non-convergence THROWS by default: a partial assignment silently
+    * splits components, and a library caller has no cheap way to notice.
+    * Pass `strict = false` to accept the partial assignment (logged as a
+    * WARN) — e.g. when a bounded number of rounds is the point and a coarser
     * over-segmentation is acceptable. */
   def clusters(pairs: DataFrame, maxIter: Int = 10, strict: Boolean = true,
                checkpointDir: Option[String] = None): DataFrame = {
-    // Lineage cut per iteration: localCheckpoint (executor blocks — fast,
-    // but a lost executor kills the job mid-propagation) by default;
-    // a reliable checkpoint against `checkpointDir` (HDFS/S3/local FS)
-    // when given — the cluster-scale mode for the flagship iterative op.
-    // setCheckpointDir mutates GLOBAL SparkContext state, so only install
-    // the caller's dir when the application has not configured one; an
-    // already-configured dir wins (clobbering it would silently redirect
-    // every OTHER checkpoint in the app and outlive this call).
-    val sc = pairs.sparkSession.sparkContext
-    checkpointDir.foreach { d =>
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-      else org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"clusters(): checkpoint dir already configured " +
-          s"(${sc.getCheckpointDir.get}); caller's '$d' not installed")
-    }
-    // Partition discipline for the loop (optimization r18, guide §2.4/§2.6):
-    // the iteration frames are (node, label) longs — a few MB per million
-    // nodes — but they inherit partition COUNT from whatever plan produced
-    // them (the r17 shape: edges = union of two 32-partition selects = 64
-    // cached partitions, so every localCheckpoint job and every post-
-    // checkpoint read scheduled 64 near-empty tasks; StageProbe measured
-    // 0.2–0.4 s of pure task dispatch per such stage, ×3 per iteration).
-    // `looseK` below derives a byte-sized partition budget from the exact
-    // edge count (≈256k rows ≈ 8 MB per task) and the cut/edge frames are
-    // coalesced to it — a NARROW merge, no extra shuffle. Large graphs
-    // blow past the budget and keep their native width (coalesce is
-    // skipped when the budget ≥ the session's shuffle width), so this is
-    // an identity at 100 TB and a ~10× task-count cut on batch-sized
-    // contracted graphs (q87/q110/q118) and toy-scale full builds.
-    var looseK = Int.MaxValue // set after the edge count is known
-    val shuffleWidth = pairs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def cut(df: DataFrame): DataFrame = {
-      val sized = if (looseK < shuffleWidth) df.coalesce(looseK) else df
-      if (checkpointDir.isDefined) sized.checkpoint(eager = true)
-      else sized.localCheckpoint(eager = true)
-    }
-    // Reliable-mode bookkeeping: resolve the checkpoint files backing a cut
-    // so a SUPERSEDED iteration's files are deleted as soon as the next cut
-    // stops reading them. Without this, maxIter full copies of the label
-    // table accumulate on durable storage per call —
-    // spark.cleaner.referenceTracking.cleanCheckpoints is off by default
-    // and only fires on driver GC. The LAST cut's files are kept: they back
-    // the returned DataFrame.
-    def ckptPath(df: DataFrame): Option[org.apache.hadoop.fs.Path] =
-      if (checkpointDir.isEmpty) None
-      else df.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_))
-        case _ => None
-      }
-    def dropCkpt(p: org.apache.hadoop.fs.Path): Unit =
-      try { p.getFileSystem(sc.hadoopConfiguration).delete(p, true); () }
-      catch { case e: Throwable =>
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"clusters(): failed to clean superseded checkpoint $p", e)
-      }
     require(maxIter >= 1, s"clusters(): maxIter must be >= 1 (got $maxIter)")
     // Symmetric edges via ONE explode pass, not union(select, select): the
     // union shape concatenated two copies of the pair pipeline's output
@@ -218,15 +178,151 @@ object DedupPipeline {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Materialize the edge cache NOW and learn the exact edge count: one
-    // extra (cheap) job that (a) lets every later frame in the loop get a
-    // byte-sized partition budget instead of an inherited one, (b) makes
-    // the empty graph a zero-iteration exit (it previously paid a full
-    // cut + isEmpty probe), and (c) moves the pair pipeline's cost out of
-    // hop-2's checkpoint job into a labeled, attributable one.
+    // Materialize the edge cache NOW and learn the exact edge count: the
+    // size the driver path dispatches on (measured, never a default), the
+    // distributed loop's partition budget, and a zero-iteration exit for
+    // the empty graph. It also moves the pair pipeline's cost into jobs of
+    // its own, ahead of any labeling.
     val nEdges = edges.count()
-    looseK = math.max(1L, nEdges / 262144L + 1L)
+    val longIds = Seq("src", "dst").forall(c =>
+      edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    // an empty edge set is vacuously converged (q110-style takedown repairs
+    // routinely hand this an empty surviving subgraph)
+    val onDriver =
+      if (nEdges == 0L) Some(Seq.empty[Row])
+      else if (checkpointDir.isEmpty && longIds && nEdges <= DriverMaxEdges)
+        driverLabels(edges.collect(), maxIter)
+      else None
+    onDriver match {
+      case Some(rows) =>
+        val schema = seed(edges).schema
+        edges.unpersist()
+        pairs.sparkSession.createDataFrame(rows.asJava, schema)
+      case None => propagate(edges, nEdges, maxIter, strict, checkpointDir)
+    }
+  }
+
+  /** Hop 1 of min-label propagation over symmetric (src, dst) edges: with
+    * every label initialized to its node id, the first neighbor-min is
+    * simply min(src) per dst — no label join, and no separate distinct over
+    * endpoints (symmetric edges make every node a dst). Its schema is the
+    * result schema of [[clusters]] on every path. */
+  private def seed(edges: DataFrame): DataFrame = edges.groupBy(col("dst").as("node"))
+    .agg(min("src").as("m"))
+    .select(col("node"), least(col("node"), col("m")).as("label"))
+
+  /** The driver path of [[clusters]]: label the collected symmetric edge
+    * rows by a breadth-first search from each component's minimum id (the
+    * node ids are visited in ascending order, so the first unlabeled one
+    * is its component's minimum). None when an id is null or some node
+    * lies `maxIter` or more hops from its component's minimum — exactly
+    * the graphs on which `maxIter` rounds of propagation do not converge. */
+  private def driverLabels(rows: Array[Row], maxIter: Int): Option[Seq[Row]] = {
+    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val src = rows.map(_.getLong(0))
+    // symmetric rows: every endpoint is some row's src
+    val ids = src.distinct.sorted
+    val at = (id: Long) => java.util.Arrays.binarySearch(ids, id)
+    // adjacency in CSR form: node i's neighbours are adj(off(i) until off(i+1))
+    val off = new Array[Int](ids.length + 1)
+    src.foreach(s => off(at(s) + 1) += 1)
+    for (i <- ids.indices) off(i + 1) += off(i)
+    val adj = new Array[Int](rows.length)
+    val fill = off.clone()
+    rows.foreach { r =>
+      val i = at(r.getLong(0))
+      adj(fill(i)) = at(r.getLong(1)); fill(i) += 1
+    }
+    val label = Array.fill(ids.length)(-1)
+    val hops = new Array[Int](ids.length)
+    val queue = new Array[Int](ids.length)
+    var tail = 0
+    var root = 0
+    while (root < ids.length) {
+      if (label(root) < 0) {
+        label(root) = root
+        var head = tail
+        queue(tail) = root; tail += 1
+        while (head < tail) {
+          val u = queue(head); head += 1
+          var k = off(u)
+          while (k < off(u + 1)) {
+            val v = adj(k)
+            if (label(v) < 0) {
+              hops(v) = hops(u) + 1
+              if (hops(v) >= maxIter) return None
+              label(v) = root
+              queue(tail) = v; tail += 1
+            }
+            k += 1
+          }
+        }
+      }
+      root += 1
+    }
+    Some(ids.indices.map(i => Row(ids(i), ids(label(i)))))
+  }
+
+  /** The distributed path of [[clusters]]: hop-by-hop min-label propagation
+    * over the cached symmetric `edges` (unpersisted on return). */
+  private def propagate(edges: DataFrame, nEdges: Long, maxIter: Int, strict: Boolean,
+                        checkpointDir: Option[String]): DataFrame = {
+    // Lineage cut per iteration: localCheckpoint (executor blocks — fast,
+    // but a lost executor kills the job mid-propagation) by default;
+    // a reliable checkpoint against `checkpointDir` (HDFS/S3/local FS)
+    // when given — the cluster-scale mode for the flagship iterative op.
+    // setCheckpointDir mutates GLOBAL SparkContext state, so only install
+    // the caller's dir when the application has not configured one; an
+    // already-configured dir wins (clobbering it would silently redirect
+    // every OTHER checkpoint in the app and outlive this call).
+    val sc = edges.sparkSession.sparkContext
+    checkpointDir.foreach { d =>
+      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
+      else org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"clusters(): checkpoint dir already configured " +
+          s"(${sc.getCheckpointDir.get}); caller's '$d' not installed")
+    }
+    // Partition discipline for the loop (optimization r18, guide §2.4/§2.6):
+    // the iteration frames are (node, label) longs — a few MB per million
+    // nodes — but they inherit partition COUNT from whatever plan produced
+    // them (the r17 shape: edges = union of two 32-partition selects = 64
+    // cached partitions, so every localCheckpoint job and every post-
+    // checkpoint read scheduled 64 near-empty tasks; StageProbe measured
+    // 0.2–0.4 s of pure task dispatch per such stage, ×3 per iteration).
+    // `looseK` derives a byte-sized partition budget from the exact edge
+    // count (≈256k rows ≈ 8 MB per task) and the cut/edge frames are
+    // coalesced to it — a NARROW merge, no extra shuffle. Large graphs
+    // blow past the budget and keep their native width (coalesce is
+    // skipped when the budget ≥ the session's shuffle width), so this is
+    // an identity at 100 TB and a ~10× task-count cut on mid-sized graphs.
+    val looseK = math.max(1L, nEdges / 262144L + 1L)
       .min(Int.MaxValue.toLong).toInt
+    val shuffleWidth = edges.sparkSession.conf
+      .get("spark.sql.shuffle.partitions").toInt
+    def cut(df: DataFrame): DataFrame = {
+      val sized = if (looseK < shuffleWidth) df.coalesce(looseK) else df
+      if (checkpointDir.isDefined) sized.checkpoint(eager = true)
+      else sized.localCheckpoint(eager = true)
+    }
+    // Release a SUPERSEDED cut once the next one stops reading it: drop the
+    // checkpointed RDD's blocks (a localCheckpoint's data; Dataset.unpersist
+    // would only touch CacheManager entries, which a cut has none of) and a
+    // reliable checkpoint's files. Without this, maxIter copies of the
+    // label table accumulate per call until a driver GC —
+    // spark.cleaner.referenceTracking.cleanCheckpoints is off by default.
+    // The LAST cut is kept: it backs the returned DataFrame.
+    def release(cutDf: DataFrame): Unit = cutDf.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_)).foreach { p =>
+        try { p.getFileSystem(sc.hadoopConfiguration).delete(p, true); () }
+        catch { case e: Throwable =>
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"clusters(): failed to clean superseded checkpoint $p", e)
+        }
+      }
+    }
     // the cached edge partitions inherit the pair pipeline's width (32 on
     // the bench session) — every iteration's map side then schedules that
     // many near-empty tasks (~75 ms each of broadcast-fetch + codegen
@@ -236,24 +332,12 @@ object DedupPipeline {
       if (looseK < shuffleWidth && edges.rdd.getNumPartitions > looseK)
         edges.coalesce(looseK)
       else edges
-    // Hop 1 fused into the seed: with every label initialized to its node
-    // id, the first propagation's neighbor-min is simply min(src) per dst —
-    // no label join, and no separate distinct over endpoints (symmetric
-    // edges make every node a dst). The seed is NOT materialized on its
-    // own: hop 2's checkpoint job computes it in the same stage chain, so
-    // fusing removes one shuffle and one job versus seeding with identity
-    // labels. Counts toward maxIter as iteration 1.
-    val labels1 = edgesR.groupBy(col("dst").as("node"))
-      .agg(min("src").as("m"))
-      .select(col("node"), least(col("node"), col("m")).as("label"))
-    // zero-iteration exit: an empty edge set is vacuously converged — the
-    // empty (node, label) frame IS the answer (the r17 shape still paid a
-    // checkpoint job plus an isEmpty probe for it; q110-style takedown
-    // repairs routinely hand this an empty surviving subgraph)
-    if (nEdges == 0L) { edges.unpersist(); return labels1 }
-    var labels: DataFrame = labels1
+    // The seed counts toward maxIter as iteration 1. It is NOT materialized
+    // on its own: hop 2's checkpoint job computes it in the same stage
+    // chain, so fusing removes one shuffle and one job versus seeding with
+    // identity labels.
+    var labels: DataFrame = seed(edgesR)
     var prevCut: DataFrame = null // last iteration's checkpointed frame
-    var prevCkpt: Option[org.apache.hadoop.fs.Path] = None
     var converged = false
     var i = 1
     while (!converged && i < maxIter) {
@@ -276,22 +360,14 @@ object DedupPipeline {
             .as("changed"))
         .observe(obs, count(when(col("changed"), lit(1))).as("n_changed")))
       converged = obs.get("n_changed").asInstanceOf[Long] == 0L
-      // the new cut is materialized and no longer reads the old one: release
-      // the previous iteration's blocks (and reliable-checkpoint files) NOW
-      // rather than holding maxIter copies of the label table until GC gets
-      // around to them
-      if (prevCut ne null) prevCut.unpersist()
-      prevCkpt.foreach(dropCkpt)
+      if (prevCut ne null) release(prevCut)
       prevCut = next
-      prevCkpt = ckptPath(next)
       labels = next.select(col("node"), col("newLabel").as("label"))
       i += 1
     }
     edges.unpersist()
-    // An empty graph is vacuously converged (no components to mislabel);
-    // only reachable when the loop ran out of rounds, so the extra probe
-    // never taxes the normal path.
-    if (!converged && labels.isEmpty) converged = true
+    // the edge set is non-empty here, so the labels are too: not converging
+    // means some component is wider than maxIter hops
     if (!converged) {
       val msg = s"clusters(): label propagation did not converge within $maxIter " +
         "iterations — components wider than maxIter hops carry multiple " +

@@ -549,7 +549,8 @@ object DocStream {
     * frames derived from the batch alone; [[sever]] (an eager
     * localCheckpoint) for frames that read tables the batch then writes;
     * [[adopt]] takes over the checkpoints an operator returns a frame
-    * over. */
+    * over, if it has any (`DedupPipeline.clusters` returns a local
+    * relation, with none, on a batch-sized graph). */
   private final class BatchPins {
     private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private val severed = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]

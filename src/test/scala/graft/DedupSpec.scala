@@ -401,6 +401,85 @@ class DedupSpec extends AnyFunSuite {
     assert(full.size == 31 && full.values.forall(_ == 0L))
   }
 
+  /** The checkpointed RDDs behind a frame `clusters` returned: none on the
+    * driver path, the final cut on the distributed one. */
+  private def cutRdds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  test("clusters: the driver path and the distributed loop give identical labels, " +
+    "up to the maxIter boundary") {
+    import graft.operators.DedupPipeline
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-parity").toFile
+    val rnd = new scala.util.Random(61)
+    // random graphs over shuffled, spread ids: the minimum sits anywhere
+    def random(nodes: Int, edges: Int): Seq[(Long, Long)] = {
+      val ids = rnd.shuffle((0 until nodes).map(i => i * 1000L + rnd.nextInt(1000) - 7000L))
+      Seq.fill(edges)((ids(rnd.nextInt(nodes)), ids(rnd.nextInt(nodes))))
+    }
+    // 0-1-...-n: the minimum's eccentricity is n
+    def chain(n: Int): Seq[(Long, Long)] = (0L until n).map(i => (i + 1, i))
+    val m = 8
+    // (name, pairs, maxIter, converges within maxIter)
+    val graphs = Seq(
+      ("empty", Seq.empty[(Long, Long)], m, true),
+      ("chain", chain(4), m, true),
+      ("star", (1L to 20L).map(i => (50L, 50L - i)), m, true),
+      (s"chain of eccentricity ${m - 1}", chain(m - 1), m, true),
+      (s"chain of eccentricity $m", chain(m), m, false)) ++
+      Seq((60, 40), (60, 70), (90, 80)).map { case (n, e) =>
+        (s"random $n/$e", random(n, e), 100, true)
+      }
+    def rddDirs(): Set[String] = spark.sparkContext.getCheckpointDir.toSet.flatMap { (d: String) =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.toString).filter(_.contains("/rdd-")).toSet
+      else Set.empty[String]
+    }
+    val dirsBefore = rddDirs()
+    try graphs.foreach { case (name, g, maxIter, converges) =>
+      val pairs = g.toDF("a", "b")
+      val driver = DedupPipeline.clusters(pairs, maxIter, strict = false)
+      val distributed = DedupPipeline.clusters(pairs, maxIter, strict = false,
+        checkpointDir = Some(ckpt.getAbsolutePath))
+      assert(cutRdds(driver).isEmpty == converges, s"$name: wrong path taken")
+      assert(cutRdds(distributed).nonEmpty || g.isEmpty, s"$name: distributed path not taken")
+      assert(driver.schema == distributed.schema, name)
+      val labels = driver.as[(Long, Long)].collect().toMap
+      assert(labels == distributed.as[(Long, Long)].collect().toMap, name)
+      assert(labels.keySet == g.flatMap { case (a, b) => Seq(a, b) }.toSet, name)
+      (cutRdds(driver) ++ cutRdds(distributed)).foreach(_.unpersist())
+    } finally {
+      (rddDirs() -- dirsBefore).foreach { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
+        f.delete()
+      }
+      rm(ckpt)
+    }
+  }
+
+  test("clusters: the distributed loop releases every superseded cut") {
+    import graft.operators.DedupPipeline
+    // path graph 0-1-...-30 with maxIter 20: too deep for the driver path
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val partial = DedupPipeline.clusters(chain, maxIter = 20, strict = false)
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    val finalCut = cutRdds(partial).map(_.id).toSet
+    assert(finalCut.nonEmpty, "31-node chain at maxIter 20 took the driver path")
+    assert(fresh.subsetOf(finalCut), s"superseded cuts left persisted: ${fresh -- finalCut}")
+    // 20 hops of min-label propagation: node v holds the minimum within 20 hops
+    assert(partial.as[(Long, Long)].collect().toMap ==
+      (0L to 30L).map(v => v -> math.max(0L, v - 20)).toMap)
+    cutRdds(partial).foreach(_.unpersist())
+  }
+
   test("prefix-filtered ngramJaccardPairs == exhaustive pairs filtered at the threshold") {
     import graft.operators.DedupOps
     val exhaustiveAll = DedupOps.ngramJaccardPairs(spark, TestSpark.sf)
