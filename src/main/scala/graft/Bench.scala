@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line for the driver.
@@ -72,51 +71,8 @@ object Bench {
     require(!Tables.noPin,
       "SPARK_GRAFT_NOPIN=1 set: explain-only mode must not run Bench — unset it")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // interleaved sweeps touch every query's generated classes once per
-      // sweep; the default 100-entry codegen cache evicts them all between
-      // a query's trials (measured +35% total from recompiles)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // shuffle files live until a JVM GC lets ContextCleaner notice the
-      // dropped ShuffleDependency; Spark's default periodic forced GC is
-      // 30 MINUTES, and the r15 sf10 chunk-2 sweep (31 heavy queries,
-      // 4200 s warmup + 2900 s timed in ONE JVM) accumulated enough live
-      // shuffle on /tmp to fill the disk — q122 died with "No space left
-      // on device" (scratch/BENCH_SF10_c2.json, stage 363/1006). 2 min
-      // bounds the accumulation window at every scale; the GC itself runs
-      // on the cleaner's thread and is billed to gc_sec like any other.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      // spark.sql.objectHashAggregate.sortBased.fallbackThreshold stays at
-      // its DEFAULT (128): r16 A/B at sf10 measured the sort-based fallback
-      // FASTER than a large hash map for every sketch aggregate tried
-      // (q114 132.6 vs 176.9 s, q101 47.4 vs 63.5, q51 32.5 vs 41.7,
-      // q96 35.6 vs 41.7 at threshold 131072) — the big per-group buffers
-      // thrash cache/GC harder than the fallback's streaming sort.
-      // AQE coalescing sizes shuffle-read partitions by BYTES with a 1 MB
-      // floor (coalescePartitions.minPartitionSize) — correct for scan-like
-      // stages, but the exact-verify joins read small, CPU-DENSE shuffles
-      // (154k candidate pairs ≈ 1.4 MB whose array_intersect costs ~2.3 s):
-      // the 1 MB floor coalesced that stage to ONE task and serialized the
-      // whole verify (StageProbe r18, q114 stage 27). 64 KB keeps such
-      // stages parallel; measured q114 3.6→1.2 s, q129 3.1→1.2, q93
-      // 3.2→1.5, q87 3.3→1.6 at sf0.1 with every byte-bound query within
-      // noise. SCALE POSTURE: the floor only governs shuffles smaller than
-      // cores×minPartitionSize — at production volumes partitions are
-      // sized by advisoryPartitionSizeInBytes and this setting is inert;
-      // it is a small-shuffle parallelism refinement, not a local[32] tune.
-      // Env-overridable for A/B (SPARK_GRAFT_MINPART).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "64KB"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // BOX-SPEED CALIBRATION (VERDICT r17 item 3/4): fixed single-threaded
     // CPU-bound work, timed before anything Spark touches the machine. The
     // r17 driver box ran fixed work 1.39× slower than r16's and nothing in
@@ -439,8 +395,6 @@ object Bench {
           .mkString("{", ",", "}")}}""" + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
     println(line(qs))
-    // drop the warm caches (and the session their frames hold) before stop
-    operators.WarmState.releaseAll(spark)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Per-query formatted-plan dumper for the optimization rounds' committed
@@ -20,18 +19,7 @@ object ExplainDump {
     val suffix = args(1)
     val wanted = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Bench.defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MINPART", "64KB"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
     val all = SparkEntry.queries
     wanted.foreach { prefix =>
@@ -48,6 +36,6 @@ object ExplainDump {
         println(s"dumped $name")
       }
     }
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans for the headline queries to PLANS.md —
@@ -36,15 +35,7 @@ object PlanDump {
     "q128_media_dedup_reps", "q129_containment_reps")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
@@ -99,6 +90,6 @@ object PlanDump {
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md written (${headline.size} static + ${aqeQueries.size} AQE plans)")
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -76,15 +76,8 @@ object ScaleUp {
     // scale-test operators that never read it)
     val tables = args.lift(2).map(_.split(",").toSet)
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try run(spark, src, dst, k, tables) finally spark.stop()
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try run(spark, src, dst, k, tables) finally GraftSession.stop(spark)
   }
 
   def run(spark: SparkSession, src: String, dst: String, k: Int,

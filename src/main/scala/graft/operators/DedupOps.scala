@@ -1521,8 +1521,9 @@ object DedupOps {
     // propagates a batch-sized graph. The oracle replays the
     // recursive-CTE closure over the UNION of old+new edges — i.e. the
     // O(corpus) recluster — so a green row PROVES the O(batch) path
-    // computes the identical assignment. (Cost scaling is measured in
-    // ScaleProbe: update cost stays flat as the corpus grows with the
+    // computes the identical assignment. (Cost scaling is in BUILDLOG,
+    // round 5 "Scaling probe (16×)" and round 9 "ScaleProbe refreshed on
+    // final r9 code": update cost stays flat as the corpus grows with the
     // batch fixed.)
     "q87_incremental_clusters" -> ((s, d) => {
       val isBatch = (c: org.apache.spark.sql.Column) => c % 10 === 0

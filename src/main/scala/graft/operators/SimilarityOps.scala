@@ -114,10 +114,11 @@ object SimilarityOps {
   }
 
   /** Per-table sign-LSH bucket signatures: (vec_id, t, code) with adaptive
-    * bit width (see [[lshSimilarPairs]]). Factored out so ScaleProbe can
-    * audit the candidate count (Σ per-bucket C(m,2)) WITHOUT paying the
+    * bit width (see [[lshSimilarPairs]]). Factored out so the candidate
+    * count (Σ per-bucket C(m,2)) can be audited WITHOUT paying the
     * candidate join itself — the direct measurement that the adaptive width
-    * holds candidates ∝ n at sweep scale.
+    * holds candidates ∝ n at sweep scale (BUILDLOG round 7 "The sf1 sweep":
+    * candidates grow 7.4× for a 10× corpus, cand/n 135→100).
     *
     * `bitsPerTable` ≤ 0 (the default) sizes buckets to the corpus: a FIXED
     * bit width is quadratic in disguise — at 4 bits a random pair collides
@@ -419,7 +420,8 @@ object SimilarityOps {
     // SemDeDup uses k≈10⁵ for 10⁹ docs). THIS query keeps the label-seeded
     // build because its per-position-mean centroids are replayable in the
     // DuckDB oracle SQL, which a sampled k-means++ seeding is not; the
-    // k-scaling path is spec-checked (IvfSpec) and probed (ScaleProbe).
+    // k-scaling path is spec-checked (SimilaritySpec); its append cost at
+    // 8× is in BUILDLOG r9 "ScaleProbe refreshed on final r9 code".
     "q83_semantic_dedup" -> ((s, d) => {
       cellNearestNeighbor(IvfIndex.build(vectors(s, d)).assigned, tau = 0.3)
         .orderBy("vec_id")

@@ -186,8 +186,12 @@ object TextOps {
       .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
       .getOrElse(64L << 20)
 
+  /** A frame with no input files (in-memory, cached or streamed docs) has
+    * no known size, so it takes the skew-safe join path: reading its 0
+    * input bytes as "small" would send an unbounded corpus down the window
+    * whose hot-token partition cannot be split (ADVICE r19). */
   private[graft] def tokenWindowSafe(docs: DataFrame): Boolean =
-    Tables.inputBytes(docs) < TokenWindowMaxBytes
+    docs.inputFiles.nonEmpty && Tables.inputBytes(docs) < TokenWindowMaxBytes
 
   /** q57's body over any (doc_id, text) frame — df computed along the path
     * [[tokenWindowSafe]] picked; ONE tokenize pass on both paths (the r18

@@ -52,6 +52,27 @@ class SmokeSpec extends AnyFunSuite {
         "test-tree line to match the number of *Spec.scala files")
   }
 
+  test("GraftSession is the only session builder in src/") {
+    // a second builder is how the entry points' settings drifted apart
+    // (Verify ran without Bench's minPartitionSize, ScaleUp without
+    // GraftExtensions), so the oracle-checked plans were not the timed ones
+    val root = java.nio.file.Paths.get(
+      sys.props.getOrElse("graft.project.root", "."))
+    import scala.jdk.CollectionConverters._
+    // the needle is split so this file does not match itself
+    val builders = Seq("src/main", "src/test").flatMap { d =>
+      val walk = java.nio.file.Files.walk(root.resolve(d))
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+        .filter(p => java.nio.file.Files.readString(p).contains("SparkSession" + ".builder"))
+        .map(_.getFileName.toString).toList
+      finally walk.close()
+    }
+    assert(builders == Seq("GraftSession.scala"),
+      s"SparkSession builders outside GraftSession.scala: $builders — " +
+        "build sessions through GraftSession.local")
+  }
+
   test("PlanDump headline list stays in sync with the query inventory") {
     // no stale names (a renamed query must not silently drop its plan dump)
     val stale = PlanDump.headline.toSet -- SparkEntry.queries.keySet

@@ -47,4 +47,10 @@ class TokenStatsSpec extends AnyFunSuite {
     assert(operators.TextOps.tokenWindowSafe(scanned),
       "a kilobyte corpus must stay on the window path")
   }
+
+  test("dispatch: an in-memory corpus (unknown size) takes the join path") {
+    assert(docs.inputFiles.isEmpty)
+    assert(!operators.TextOps.tokenWindowSafe(docs),
+      "a frame with no input files has no known size and must not take the window path")
+  }
 }
