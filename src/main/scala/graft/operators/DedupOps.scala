@@ -1834,7 +1834,7 @@ object DedupOps {
         corpusSpan.getLong(0), corpusSpan.getLong(1))
       val batch = docs.filter(col("doc_id") > thr)
       val incident = ngramJaccardPairsVsIndex(batch, idx)
-        .localCheckpoint(eager = true) // reused: record + contraction
+        .transform(Tables.pinEager(_)) // reused: record + contraction
       val batchSpan = batch.agg(min("doc_id"), max("doc_id")).head()
       SplitState.recordPairs(s, p, incident,
         batchSpan.getLong(0), batchSpan.getLong(1))
@@ -1895,11 +1895,11 @@ object DedupOps {
           .select(col("rk"), col("comp").as("cb")), "rk")
         .select((lit(thr) + lit(1000000L) + col("rk")).cast("bigint").as("doc_id"),
           col("ct"), col("cb"))
-        .localCheckpoint(eager = true)
+        .transform(Tables.pinEager(_))
       val pairs = bridges.select(col("doc_id").as("a"), col("ct").as("b"))
         .unionByName(bridges.select(col("doc_id").as("a"), col("cb").as("b")))
       val updated = DedupPipeline.updateClusters(corpusLabels, pairs, maxIter = 100)
-        .localCheckpoint(eager = true)
+        .transform(Tables.pinEager(_))
       SplitState.assign(s, p, bridges.select("doc_id"), updated) // seq 1
       SplitState.resolve(s, p, updated)                          // seq 2
       p
@@ -2016,25 +2016,6 @@ object DedupOps {
     val (as, bs) = MinHashPermAgg.coeffs(numHashes)
     (0 until numHashes).map(i => s"($i, ${as(i)}, ${bs(i)})").mkString(", ")
   }
-
-  /** PRE-CHECKPOINT plan twins for PlanDump (VERDICT r17 item 6): the
-    * committed dumps of the write-then-sort queries end at
-    * `Scan ExistingRDD` — the localCheckpoint pin truncates exactly the
-    * candidate+verify join tree a plan reviewer needs to audit. These
-    * build the SAME pipelines without the pin (and without the final sort
-    * the pin exists to feed) — explain-only, never benchmarked or
-    * oracle-checked. */
-  val planOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q114_containment_pairs" -> ((s, d) => ngramContainmentPairs(
-      Tables.spread(Tables.load(s, d, "documents")).select("doc_id", "text"), 0.8)),
-    "q129_containment_reps" -> ((s, d) => ngramContainmentReps(
-      Tables.spread(Tables.load(s, d, "documents")).select("doc_id", "text"), 0.8)),
-    "q116_containment_vs_index" -> ((s, d) => {
-      val (thr, idx) = q116ContainmentIndex(s, d)
-      ngramContainmentPairsVsIndex(
-        Tables.spread(Tables.load(s, d, "documents")).select("doc_id", "text")
-          .filter(col("doc_id") > thr), idx)
-    }))
 
   val oracleSql: Map[String, String] = Map(
     "q50_dedup_exact" ->

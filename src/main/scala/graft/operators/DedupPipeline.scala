@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
+import graft.Tables
 
 /** User-facing corpus deduplication API — the operator a training-data
   * pipeline actually calls: hand it a corpus, get back the kept rows.
@@ -302,7 +303,7 @@ object DedupPipeline {
     def cut(df: DataFrame): DataFrame = {
       val sized = if (looseK < shuffleWidth) df.coalesce(looseK) else df
       if (checkpointDir.isDefined) sized.checkpoint(eager = true)
-      else sized.localCheckpoint(eager = true)
+      else Tables.pinEager(sized)
     }
     // Release a SUPERSEDED cut once the next one stops reading it: drop the
     // checkpointed RDD's blocks (a localCheckpoint's data; Dataset.unpersist
@@ -311,9 +312,7 @@ object DedupPipeline {
     // label table accumulate per call until a driver GC —
     // spark.cleaner.referenceTracking.cleanCheckpoints is off by default.
     // The LAST cut is kept: it backs the returned DataFrame.
-    def release(cutDf: DataFrame): Unit = cutDf.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach { rdd =>
+    def release(cutDf: DataFrame): Unit = Tables.pinnedRdds(cutDf).foreach { rdd =>
       rdd.unpersist(blocking = false)
       rdd.getCheckpointFile.map(new org.apache.hadoop.fs.Path(_)).foreach { p =>
         try { p.getFileSystem(sc.hadoopConfiguration).delete(p, true); () }

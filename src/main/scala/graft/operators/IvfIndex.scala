@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Persistent IVF (inverted-file) ANN index: build ONCE — centroids plus a
   * cell assignment for every corpus vector — then answer many top-k queries,
@@ -80,7 +81,7 @@ final case class IvfIndex(centroids: DataFrame, assigned: DataFrame) {
     // checkpointed frame is also the at-rest state the caller keeps (the
     // durable equivalent is save/load around each batch)
     val appended = IvfIndex(centroids,
-      append(newVecs).assigned.localCheckpoint(eager = true))
+      Tables.pinEager(append(newVecs).assigned))
     if (appended.imbalanceFactor > threshold)
       (IvfIndex.build(appended.assigned.select("vec_id", "emb"), k), true)
     else (appended, false)
@@ -392,7 +393,7 @@ object IvfIndex {
     * clustering. */
   def refine(index: IvfIndex, iters: Int): IvfIndex = {
     var centroids = index.centroids
-    var assigned = index.assigned.localCheckpoint(true)
+    var assigned = Tables.pinEager(index.assigned)
     for (_ <- 1 to iters) {
       val unit = assigned
         .withColumn("n2", aggregate(transform(col("emb"), x => x * x), lit(0.0), (a, x) => a + x))
@@ -400,7 +401,7 @@ object IvfIndex {
           when(col("n2") > 0, transform(col("emb"), x => x / sqrt(col("n2"))))
             .otherwise(col("emb")))
       centroids = centroidsOf(unit.select(col("cell").as("k"), col("emb")), "k", "cell")
-      assigned = assign(assigned.select("vec_id", "emb"), centroids).localCheckpoint(true)
+      assigned = Tables.pinEager(assign(assigned.select("vec_id", "emb"), centroids))
     }
     IvfIndex(centroids, assigned)
   }

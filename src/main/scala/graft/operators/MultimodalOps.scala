@@ -384,7 +384,7 @@ object MultimodalOps {
     phashChunks(mediaFingerprint(media))
       .join(loadMediaPhashChunks(s, namePrefix).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true) // severs the read of the append target
+      .transform(Tables.pinEager(_)) // severs the read of the append target
       .write.mode("append").format("parquet")
       .bucketBy(nB, "c", "ch")
       .saveAsTable(s"${namePrefix}_chunks")
@@ -497,28 +497,6 @@ object MultimodalOps {
     if (Tables.inputBytes(basis) <= (1L << 30))
       Tables.pin(pairs)
     else pairs
-
-  /** PRE-CHECKPOINT plan twins (same contract as [[DedupOps.planOnly]]):
-    * the candidate+verify trees the write-then-sort pins hide from the
-    * committed plan dumps. Explain-only — never benchmarked or
-    * oracle-checked. */
-  val planOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q122_media_neardup" -> ((s, d) =>
-      mediaNearDupPairs(q122Corpus(s, d), maxHamming = 10)),
-    "q127_media_neardup_h7" -> ((s, d) =>
-      mediaNearDupPairs(q122Corpus(s, d), maxHamming = 7)),
-    "q128_media_dedup_reps" -> ((s, d) =>
-      mediaDedupReps(q122Corpus(s, d), maxHamming = 10)),
-    "q125_media_vs_index" -> ((s, d) => {
-      val (thr, p) = q125IndexPrefix(s, d)
-      val media = mediaOf(s, d).toDF()
-      val organic = media.filter(col("doc_id") > thr)
-      val planted = media.filter(col("doc_id") % 5 === 0 && col("doc_id") <= thr)
-        .select((col("doc_id") + plantOffset).as("doc_id"), col("kind"),
-          concat(col("payload").cast("string"), lit(" zz"),
-            (col("doc_id") % 7).cast("string")).cast("binary").as("payload"))
-      mediaNearDupVsIndex(organic.unionByName(planted), s, p, maxHamming = 10)
-    }))
 
   /** The planted q122/q127/q128 corpus (originals ∪ perturbed copies of
     * every 5th asset) — one definition, three queries. */
@@ -708,7 +686,7 @@ object MultimodalOps {
                 "j -> concat('pq', cast(k as string), 'x', cast(j as string))))")))
             .cast("binary").as("payload"))
       val sigs = mediaFingerprint(variants.withColumn("kind", lit("image")))
-        .transform(Tables.pinEager) // read by both pair endpoints
+        .transform(Tables.pinEager(_)) // read by both pair endpoints
       val origs = sigs.filter(col("doc_id") % 13 === 0)
         .select(col("doc_id").as("base"), col("phash").as("po"))
       val copies = sigs

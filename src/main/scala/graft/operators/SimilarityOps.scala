@@ -165,7 +165,7 @@ object SimilarityOps {
     // pipeline hit in r14), which the r15 profile measured as ~80% of q66's
     // sf1 wall (9 of 11 s). 24 B/vector — the same order as the media
     // sig pin (16 B/asset).
-    val v = lshSignatures(vecs, tables, bitsPerTable).localCheckpoint()
+    val v = Tables.pinEager(lshSignatures(vecs, tables, bitsPerTable))
     val candidates = v.as("x")
       .join(v.as("y"),
         col("x.t") === col("y.t") && col("x.code") === col("y.code") &&

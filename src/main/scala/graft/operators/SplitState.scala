@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** DURABLE train/valid/test split assignment — the FIFTH at-rest artifact
   * (after the MinHash, prefix, first-seen and containment indexes plus
@@ -300,7 +301,7 @@ object SplitState {
       // pinned BEFORE the writes: both the assign append and the moves
       // append below would otherwise re-evaluate this frame against the
       // tables they just updated (the documented append-invalidates trap)
-      .localCheckpoint(eager = true)
+      .transform(Tables.pinEager(_))
     appendRows(s, namePrefix, rows, next)
     // quarantine ENTRY is recorded in the durable `_moves` audit trail —
     // not just as an assign row — so the aging/pool analytics survive
@@ -371,7 +372,7 @@ object SplitState {
           "purge them, then retry")
       val nB = DedupOps.bucketCountOf(s, pairsT(namePrefix))
       rows.join(orphans, Seq("a", "b"), "left_anti")
-        .localCheckpoint(eager = true) // severs the read of the append target
+        .transform(Tables.pinEager(_)) // severs the read of the append target
         .write.mode("append").format("parquet")
         .bucketBy(nB, "a")
         .saveAsTable(pairsT(namePrefix))
@@ -433,7 +434,7 @@ object SplitState {
       .filter(col("split") =!= col("canon"))
       .select(col("doc_id"), col("split").as("from_split"),
         col("canon").as("to_split"))
-      .localCheckpoint(eager = true) // one derivation; reused across writes
+      .transform(Tables.pinEager(_)) // one derivation; reused across writes
     if (changes.limit(1).collect().isEmpty) return
     appendRows(s, namePrefix,
       changes.select(col("doc_id"), col("to_split").as("split"),
@@ -486,7 +487,7 @@ object SplitState {
       .select(col("doc_id"), lit(null).cast("string").as("from_split"),
         lit("quarantine").as("to_split"),
         lit("quarantine_enter").as("reason"), col("seq"))
-      .localCheckpoint(eager = true) // severs the read of the append target
+      .transform(Tables.pinEager(_)) // severs the read of the append target
     val n = missing.count()
     if (n > 0)
       missing.write.mode("append").format("parquet")
@@ -504,7 +505,7 @@ object SplitState {
       else moves.join(
         s.table(movesT(namePrefix)).filter(col("seq") === next).select("doc_id"),
         Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = true) // severs the read of the append target
+        .transform(Tables.pinEager(_)) // severs the read of the append target
     dedup.select("doc_id", "from_split", "to_split", "reason", "seq")
       .write.mode("append").format("parquet")
       .saveAsTable(movesT(namePrefix))
@@ -730,7 +731,7 @@ object SplitState {
     // table this write appends to — sever the lineage so the append never
     // re-lists its own source (batch-sized frame)
     rows.join(orphans, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true)
+      .transform(Tables.pinEager(_))
       .write.mode("append").format("parquet")
       .bucketBy(nBuckets, "doc_id")
       .saveAsTable(assignT(namePrefix))

@@ -125,7 +125,7 @@ object TextOps {
     // md5 + 256-perm sketch — a second whole-corpus pass for a
     // |sources|×k result (20 rows × 256 longs here). At-rest size is
     // sources×k×8 B: always pinnable.
-    val sigs = vocabSignatures(docs, numHashes).localCheckpoint(true)
+    val sigs = Tables.pinEager(vocabSignatures(docs, numHashes))
     sigs.as("x")
       .join(sigs.as("y"), col("x.source") < col("y.source"))
       .select(col("x.source").as("source_x"), col("y.source").as("source_y"),
@@ -179,12 +179,8 @@ object TextOps {
     * in one task comfortably), above it the join path's fixed costs are
     * amortized and the unsplittable-partition hazard is real. Both paths
     * compute identical values — the q57/q75 oracles hash-check each
-    * (sf0.01 drives the window path; TokenStatsSpec pins the join path).
-    * Env-overridable for A/B (SPARK_GRAFT_TOKWIN_MAX, byte syntax). */
-  private[graft] val TokenWindowMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_TOKWIN_MAX")
-      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-      .getOrElse(64L << 20)
+    * (sf0.01 drives the window path; TokenStatsSpec pins the join path). */
+  private[graft] val TokenWindowMaxBytes: Long = 64L << 20
 
   /** A frame with no input files (in-memory, cached or streamed docs) has
     * no known size, so it takes the skew-safe join path: reading its 0

@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * lets benched trials pay only the per-batch cost each incremental
   * operator exists to isolate.
   *
-  * [[pin]] severs lineage like `localCheckpoint(eager = true)` but stores
+  * [[pin]] severs lineage like `Tables.pinEager` at its default but stores
   * the blocks MEMORY_AND_DISK_SER instead of the deserialized default:
   * serialized blocks are per-partition byte arrays the block manager can
   * EVICT TO DISK under execution pressure, so a session holding every
@@ -53,10 +53,8 @@ object WarmState {
   def pinHot(df: DataFrame): DataFrame = pinAt(df, hotLevel)
 
   private def pinAt(df: DataFrame, at: StorageLevel): DataFrame = {
-    val out = df.localCheckpoint(eager = true, at)
-    out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.foreach(pinnedIds.add)
+    val out = graft.Tables.pinEager(df, at)
+    graft.Tables.pinnedRdds(out).foreach(rdd => pinnedIds.add(rdd.id))
     out
   }
 

@@ -250,7 +250,7 @@ object DocStream {
                 else have.unionByName(
                   spark.table(s"${splitPrefix}_tombstones").select("doc_id"))
               val missing = b.join(haveOrDead, Seq("doc_id"), "left_anti")
-                .localCheckpoint(eager = true)
+                .transform(graft.Tables.pinEager(_))
               if (missing.limit(1).collect().nonEmpty)
                 graft.operators.DedupOps.appendToNgramPrefixIndex(indexPrefix, missing)
               graft.operators.DedupOps.repairNgramPrefixIndex(spark, indexPrefix)
@@ -259,7 +259,7 @@ object DocStream {
             } else {
               val pairs = graft.operators.DedupOps.ngramJaccardPairsVsIndex(
                 b, graft.operators.DedupOps.loadNgramPrefixIndex(spark, indexPrefix))
-                .localCheckpoint(eager = true) // reused: record + contraction
+                .transform(graft.Tables.pinEager(_)) // reused: record + contraction
               // persist the verified pairs FIRST — recordPairs' own meta
               // row makes any later replay of this step a fingerprint-
               // verified no-op (pair discovery is deterministic until the
@@ -270,7 +270,7 @@ object DocStream {
                 .insert(pairs.select("a", "b"), maxIter = 100)
               // materialize BEFORE save: save() prunes the version the
               // loaded frames read (the documented terminal-step contract)
-              val labels = st.labels.localCheckpoint(eager = true)
+              val labels = graft.Tables.pinEager(st.labels)
               st.save(clusterRoot)
               graft.operators.SplitState.assign(spark, splitPrefix,
                 b.select("doc_id"), labels)
@@ -391,7 +391,7 @@ object DocStream {
                   else have.unionByName(
                     spark.table(s"${indexPrefix}_tombstones").select("doc_id"))
                 val missing = b.join(haveOrDead, Seq("doc_id"), "left_anti")
-                  .localCheckpoint(eager = true)
+                  .transform(graft.Tables.pinEager(_))
                 if (missing.limit(1).collect().nonEmpty)
                   graft.operators.MultimodalOps.appendToMediaPhashIndex(
                     spark, indexPrefix, missing)
@@ -400,7 +400,7 @@ object DocStream {
               } else {
                 val pairs = graft.operators.MultimodalOps
                   .mediaNearDupVsIndex(b, spark, indexPrefix, maxHamming)
-                  .localCheckpoint(eager = true) // audit + record + contract
+                  .transform(graft.Tables.pinEager(_)) // audit + record + contract
                 writeMediaAudit(b, pairs, batchId, root)
                 // the pair artifact is modality-agnostic: Hamming rides
                 // in as the [0, 1] similarity 1 − h/64
@@ -410,7 +410,7 @@ object DocStream {
                   span.getLong(0), span.getLong(1))
                 val st = graft.operators.ClusterState.load(spark, cr)
                   .insert(pairs.select("a", "b"), maxIter = 100)
-                val labels = st.labels.localCheckpoint(eager = true)
+                val labels = graft.Tables.pinEager(st.labels)
                 st.save(cr)
                 graft.operators.SplitState.assign(spark, sp,
                   b.select("doc_id"), labels)
@@ -547,7 +547,7 @@ object DocStream {
   /** The frames one micro-batch caches or pins, released together in the
     * drain's `finally` — a batch leaves no blocks behind. [[cache]] is for
     * frames derived from the batch alone; [[sever]] (an eager
-    * localCheckpoint) for frames that read tables the batch then writes;
+    * pin) for frames that read tables the batch then writes;
     * [[adopt]] takes over the checkpoints an operator returns a frame
     * over, if it has any (`DedupPipeline.clusters` returns a local
     * relation, with none, on a batch-sized graph). */
@@ -560,12 +560,10 @@ object DocStream {
       df
     }
 
-    def sever(df: DataFrame): DataFrame = adopt(df.localCheckpoint(eager = true))
+    def sever(df: DataFrame): DataFrame = adopt(graft.Tables.pinEager(df))
 
     def adopt(df: DataFrame): DataFrame = {
-      severed ++= df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD if lr.rdd.isCheckpointed => lr.rdd
-      }
+      severed ++= graft.Tables.pinnedRdds(df)
       df
     }
 

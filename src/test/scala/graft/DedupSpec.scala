@@ -401,13 +401,6 @@ class DedupSpec extends AnyFunSuite {
     assert(full.size == 31 && full.values.forall(_ == 0L))
   }
 
-  /** The checkpointed RDDs behind a frame `clusters` returned: none on the
-    * driver path, the final cut on the distributed one. */
-  private def cutRdds(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   test("clusters: the driver path and the distributed loop give identical labels, " +
     "up to the maxIter boundary") {
     import graft.operators.DedupPipeline
@@ -443,13 +436,14 @@ class DedupSpec extends AnyFunSuite {
       val driver = DedupPipeline.clusters(pairs, maxIter, strict = false)
       val distributed = DedupPipeline.clusters(pairs, maxIter, strict = false,
         checkpointDir = Some(ckpt.getAbsolutePath))
-      assert(cutRdds(driver).isEmpty == converges, s"$name: wrong path taken")
-      assert(cutRdds(distributed).nonEmpty || g.isEmpty, s"$name: distributed path not taken")
+      assert(Tables.pinnedRdds(driver).isEmpty == converges, s"$name: wrong path taken")
+      assert(Tables.pinnedRdds(distributed).nonEmpty || g.isEmpty,
+        s"$name: distributed path not taken")
       assert(driver.schema == distributed.schema, name)
       val labels = driver.as[(Long, Long)].collect().toMap
       assert(labels == distributed.as[(Long, Long)].collect().toMap, name)
       assert(labels.keySet == g.flatMap { case (a, b) => Seq(a, b) }.toSet, name)
-      (cutRdds(driver) ++ cutRdds(distributed)).foreach(_.unpersist())
+      (Tables.pinnedRdds(driver) ++ Tables.pinnedRdds(distributed)).foreach(_.unpersist())
     } finally {
       (rddDirs() -- dirsBefore).foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
@@ -471,13 +465,13 @@ class DedupSpec extends AnyFunSuite {
     val before = sc.getPersistentRDDs.keySet
     val partial = DedupPipeline.clusters(chain, maxIter = 20, strict = false)
     val fresh = sc.getPersistentRDDs.keySet -- before
-    val finalCut = cutRdds(partial).map(_.id).toSet
+    val finalCut = Tables.pinnedRdds(partial).map(_.id).toSet
     assert(finalCut.nonEmpty, "31-node chain at maxIter 20 took the driver path")
     assert(fresh.subsetOf(finalCut), s"superseded cuts left persisted: ${fresh -- finalCut}")
     // 20 hops of min-label propagation: node v holds the minimum within 20 hops
     assert(partial.as[(Long, Long)].collect().toMap ==
       (0L to 30L).map(v => v -> math.max(0L, v - 20)).toMap)
-    cutRdds(partial).foreach(_.unpersist())
+    Tables.pinnedRdds(partial).foreach(_.unpersist())
   }
 
   test("prefix-filtered ngramJaccardPairs == exhaustive pairs filtered at the threshold") {

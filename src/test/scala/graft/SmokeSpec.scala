@@ -52,25 +52,38 @@ class SmokeSpec extends AnyFunSuite {
         "test-tree line to match the number of *Spec.scala files")
   }
 
+  /** Names of the source files under `dirs` whose text contains `needle`;
+    * callers split the needle so this file does not match itself. */
+  private def sourcesContaining(needle: String, dirs: String*): Seq[String] = {
+    val root = java.nio.file.Paths.get(
+      sys.props.getOrElse("graft.project.root", "."))
+    import scala.jdk.CollectionConverters._
+    dirs.flatMap { d =>
+      val walk = java.nio.file.Files.walk(root.resolve(d))
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
+        .filter(p => java.nio.file.Files.readString(p).contains(needle))
+        .map(_.getFileName.toString).toList
+      finally walk.close()
+    }
+  }
+
   test("GraftSession is the only session builder in src/") {
     // a second builder is how the entry points' settings drifted apart
     // (Verify ran without Bench's minPartitionSize, ScaleUp without
     // GraftExtensions), so the oracle-checked plans were not the timed ones
-    val root = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.project.root", "."))
-    import scala.jdk.CollectionConverters._
-    // the needle is split so this file does not match itself
-    val builders = Seq("src/main", "src/test").flatMap { d =>
-      val walk = java.nio.file.Files.walk(root.resolve(d))
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
-        .filter(p => java.nio.file.Files.readString(p).contains("SparkSession" + ".builder"))
-        .map(_.getFileName.toString).toList
-      finally walk.close()
-    }
+    val builders = sourcesContaining("SparkSession" + ".builder", "src/main", "src/test")
     assert(builders == Seq("GraftSession.scala"),
       s"SparkSession builders outside GraftSession.scala: $builders — " +
         "build sessions through GraftSession.local")
+  }
+
+  test("Tables is the only local-checkpoint site in src/main") {
+    // a raw checkpoint records no pre-pin plan, so the plan dumps stop at
+    // its bare `Scan ExistingRDD`; pin through Tables.pin/pinEager instead
+    val sites = sourcesContaining("localCheckpoint" + "(", "src/main")
+    assert(sites == Seq("Tables.scala"),
+      s"local checkpoints outside Tables.scala: $sites — pin through Tables.pin/pinEager")
   }
 
   test("PlanDump headline list stays in sync with the query inventory") {

@@ -20,10 +20,7 @@ class WarmStateSpec extends AnyFunSuite {
     val plan = pinned.queryExecution.executedPlan.toString
     assert(plan.contains("Scan ExistingRDD") || plan.contains("LogicalRDD")
       || !plan.contains("Range"), s"lineage not severed:\n$plan")
-    def ckptId(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.head
+    def ckptId(df: org.apache.spark.sql.DataFrame): Int = Tables.pinnedRdds(df).head.id
     val pinnedId = ckptId(pinned)
     val hot = WarmState.pinHot(spark.range(10).toDF("id"))
     assert(hot.count() == 10L)
@@ -46,6 +43,28 @@ class WarmStateSpec extends AnyFunSuite {
     assert(bystanderIds.subsetOf(after.keySet),
       "releaseAll swept a persist it did not create")
     bystander.unpersist(blocking = false)
+  }
+
+  test("plan dumps expand nested pins; the pins stay; releaseAll frees only WarmState's pins") {
+    val inner = Tables.pin(spark.range(0, 600, 1, 2).toDF("id").repartition(3))
+    val outer = Tables.pinEager(inner.withColumn("y", col("id") + 1))
+    val Seq(innerRdd) = Tables.pinnedRdds(inner)
+    val Seq(outerRdd) = Tables.pinnedRdds(outer)
+    val txt = ExplainDump.explain(outer)
+    // the spread sits two pins down, yet the dump shows it, one section per pin
+    assert(txt.contains("RoundRobinPartitioning(3)"), txt)
+    assert("== Pinned RDD (\\d+) ==".r.findAllMatchIn(txt).map(_.group(1).toInt).toSeq ==
+      Seq(outerRdd.id, innerRdd.id), txt)
+    // the top plan still reads the pin, not its input
+    val top = txt.split("\n== Pinned RDD ").head
+    assert(top.contains("Scan ExistingRDD") && !top.contains("RoundRobinPartitioning"), top)
+    val Seq(warmRdd) = Tables.pinnedRdds(WarmState.pin(spark.range(10).toDF("id")))
+    WarmState.releaseAll(spark)
+    val after = spark.sparkContext.getPersistentRDDs
+    assert(!after.contains(warmRdd.id), "WarmState.pin's blocks survived releaseAll")
+    assert(after.contains(innerRdd.id) && after.contains(outerRdd.id),
+      "releaseAll freed pins WarmState did not make")
+    Seq(innerRdd, outerRdd).foreach(_.unpersist(blocking = false))
   }
 
   test("releaseAll clears the query warm caches; queries rebuild and answer identically") {
