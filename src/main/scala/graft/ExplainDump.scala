@@ -22,7 +22,8 @@ object ExplainDump {
     val sb = new StringBuilder(df.queryExecution.explainString(FormattedMode).trim)
     val seen = scala.collection.mutable.Set.empty[Int]
     def expand(d: DataFrame): Unit =
-      for (rdd <- Tables.pinnedRdds(d); plan <- Tables.pinnedPlan(rdd) if seen.add(rdd.id)) {
+      for (rdd <- Tables.pinnedRdds(d); plan <- Option(Tables.pinPlans.get(rdd))
+           if seen.add(rdd.id)) {
         val under = org.apache.spark.sql.GraftBridge.ofRows(d.sparkSession, plan)
         sb.append(s"\n\n== Pinned RDD ${rdd.id} ==\n")
         sb.append(under.queryExecution.explainString(FormattedMode).trim)

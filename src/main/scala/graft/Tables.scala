@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, expr}
@@ -243,51 +245,57 @@ object Tables {
   /** The ONE spelling of the lazy write-then-read pin (see call sites for
     * per-operator rationale; scale notes in [[sortOnce]]'s scaladoc and
     * the r18 optimization log). */
-  def pin(df: DataFrame): DataFrame = pinned(df)(_.localCheckpoint(eager = false))
+  def pin(df: DataFrame): DataFrame = recorded(df, df.localCheckpoint(eager = false))
 
   /** Eager twin of [[pin]] — for frames multiple subtrees read where the
     * materialization must happen before plan assembly (the media sigs
     * pattern), or that must stop reading a table before it is written.
     * `level` is where the blocks live; the default is Spark's own. */
   def pinEager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    pinned(df)(_.localCheckpoint(eager = true, level))
+    recorded(df, df.localCheckpoint(eager = true, level))
 
   /** Each pin's pre-pin analyzed plan, keyed weakly by its checkpoint RDD:
     * a pin truncates every plan above it at `Scan ExistingRDD`, and the
     * plan dumps ([[ExplainDump.explain]]) expand it from here. Nothing on
-    * the execution path reads it; an entry lives as long as its pin. */
-  private val pinPlans = java.util.Collections.synchronizedMap(
+    * the execution path reads it; an entry lives as long as its pin, and
+    * the pins a recorded plan scans are held only as [[PinRef]]s. */
+  private[graft] val pinPlans = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[RDD[_], LogicalPlan]())
 
-  /** Checkpoints `df` and records its plan under the checkpoint RDD.
-    * Spark names that RDD and its job after the first frame outside Spark,
-    * which would be this file for every pin; the call site is set to the
-    * first frame outside the pin layer instead, so stage names and plan
-    * dumps keep pointing at the operator that pinned. */
-  private def pinned(df: DataFrame)(checkpoint: DataFrame => DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val saved = sc.getLocalProperty("callSite.short")
-    Thread.currentThread.getStackTrace.find { f =>
-      f.getClassName.startsWith("graft.") &&
-        !Seq("graft.Tables", "graft.operators.WarmState").exists(f.getClassName.startsWith)
-    }.foreach(f => sc.setCallSite(s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
-    val out = try checkpoint(df) finally sc.setLocalProperty("callSite.short", saved)
+  /** Records `df`'s plan, with each pin it scans named by a [[PinRef]],
+    * under the checkpoint RDD of `out`, its pin. */
+  private def recorded(df: DataFrame, out: DataFrame): DataFrame = {
     out.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
-      .foreach(pinPlans.put(_, df.queryExecution.analyzed))
+      .foreach(pinPlans.put(_, df.queryExecution.analyzed.transformWithSubqueries {
+        case lr: LogicalRDD if isPin(lr.rdd) => lr.makeCopy(
+          lr.productIterator.map(_.asInstanceOf[AnyRef]).toArray.updated(1, new PinRef(lr.rdd)))
+      }))
     out
   }
 
-  /** The pre-pin plan [[pin]]/[[pinEager]] recorded for `rdd`, if any. */
-  private[graft] def pinnedPlan(rdd: RDD[_]): Option[LogicalPlan] =
-    Option(pinPlans.get(rdd))
+  /** Stands for pin `pin` in a recorded plan. A strong reference would keep
+    * the pin's RDD, and so its blocks, alive while the recording pin lives:
+    * Spark frees a checkpoint's blocks only once its RDD is collected. */
+  private final class PinRef(pin: RDD[_]) extends RDD[InternalRow](pin.context, Nil) {
+    val ref = new java.lang.ref.WeakReference[RDD[_]](pin)
+    private val pinId = pin.id
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      Iterator.empty
+    override protected def getPartitions: Array[Partition] = Array.empty
+    override def toString: String = s"pinned RDD $pinId"
+  }
+
+  private def isPin(rdd: RDD[_]): Boolean = rdd.isCheckpointed || pinPlans.containsKey(rdd)
 
   /** The checkpoint RDDs under `df`: every scanned RDD that is
     * checkpointed (locally or reliably) or that a pin made, in plan order —
-    * what the release paths free and the plan dumps expand. */
+    * what the release paths free and the plan dumps expand. In a recorded
+    * plan, the live pins its [[PinRef]]s name. */
   def pinnedRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectWithSubqueries {
-      case lr: LogicalRDD if lr.rdd.isCheckpointed || pinPlans.containsKey(lr.rdd) => lr.rdd
-    }.distinct
+      case LogicalRDD(_, r: PinRef, _, _, _, _) => Option(r.ref.get)
+      case lr: LogicalRDD if isPin(lr.rdd) => Some(lr.rdd)
+    }.flatten.distinct
 
   /** Register every table as a temp view so `spark.sql` / SQL-surface tests
     * can address them by the same names the DuckDB oracle uses. */

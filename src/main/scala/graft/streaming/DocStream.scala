@@ -562,10 +562,7 @@ object DocStream {
 
     def sever(df: DataFrame): DataFrame = adopt(graft.Tables.pinEager(df))
 
-    def adopt(df: DataFrame): DataFrame = {
-      severed ++= graft.Tables.pinnedRdds(df)
-      df
-    }
+    def adopt(df: DataFrame): DataFrame = { severed ++= graft.Tables.pinnedRdds(df); df }
 
     /** [[sever]], with the rows matching `cond` counted by the same job. */
     def severCounted(cond: org.apache.spark.sql.Column)(df: DataFrame): (DataFrame, Long) = {

@@ -52,8 +52,7 @@ class SmokeSpec extends AnyFunSuite {
         "test-tree line to match the number of *Spec.scala files")
   }
 
-  /** Names of the source files under `dirs` whose text contains `needle`;
-    * callers split the needle so this file does not match itself. */
+  /** Source files under `dirs` containing `needle` (split it, or this file matches). */
   private def sourcesContaining(needle: String, dirs: String*): Seq[String] = {
     val root = java.nio.file.Paths.get(
       sys.props.getOrElse("graft.project.root", "."))
