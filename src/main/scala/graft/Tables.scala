@@ -245,14 +245,29 @@ object Tables {
   /** The ONE spelling of the lazy write-then-read pin (see call sites for
     * per-operator rationale; scale notes in [[sortOnce]]'s scaladoc and
     * the r18 optimization log). */
-  def pin(df: DataFrame): DataFrame = recorded(df, df.localCheckpoint(eager = false))
+  def pin(df: DataFrame): DataFrame = atCaller(df)(df.localCheckpoint(eager = false))
 
   /** Eager twin of [[pin]] — for frames multiple subtrees read where the
     * materialization must happen before plan assembly (the media sigs
     * pattern), or that must stop reading a table before it is written.
     * `level` is where the blocks live; the default is Spark's own. */
   def pinEager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    recorded(df, df.localCheckpoint(eager = true, level))
+    atCaller(df)(df.localCheckpoint(eager = true, level))
+
+  /** Makes the pin with Spark's short call site set to the first stack
+    * frame outside Tables, WarmState, Spark, Scala and the JDK, so its
+    * checkpoint RDD and eager job are named after the operator that
+    * pinned, and records it. */
+  private def atCaller(df: DataFrame)(pin: => DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("callSite.short")
+    Thread.currentThread.getStackTrace.find(f => !Seq("java.", "jdk.", "scala.",
+        "org.apache.spark.", "graft.Tables$", "graft.operators.WarmState$")
+        .exists(f.getClassName.startsWith))
+      .foreach(f => sc.setLocalProperty("callSite.short",
+        s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    try recorded(df, pin) finally sc.setLocalProperty("callSite.short", prev)
+  }
 
   /** Each pin's pre-pin analyzed plan, keyed weakly by its checkpoint RDD:
     * a pin truncates every plan above it at `Scan ExistingRDD`, and the

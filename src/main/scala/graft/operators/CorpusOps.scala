@@ -131,9 +131,7 @@ object CorpusOps {
   def saveFirstSeenIndex(docs: DataFrame, namePrefix: String,
                          nBuckets: Int = 32): Unit = {
     val s = docs.sparkSession
-    firstSeenOf(docs).write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "g")
-      .saveAsTable(s"${namePrefix}_firstseen")
+    AtRest.save(firstSeenOf(docs), s"${namePrefix}_firstseen", nBuckets, Seq("g"))
     import s.implicits._
     val span = docs.agg(min("doc_id"), max("doc_id")).head()
     val rows = if (span.isNullAt(0)) Seq.empty[(Long, Long, Long, Long)]
@@ -141,8 +139,7 @@ object CorpusOps {
                  val (n, fp) = contentFingerprint(docs)
                  Seq((span.getLong(0), span.getLong(1), n, fp))
                }
-    rows.toDF("lo", "hi", "n", "fp").write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${namePrefix}_meta")
+    AtRest.save(rows.toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
   }
 
   /** Order-independent content fingerprint of a (doc_id, text) frame's
@@ -173,14 +170,8 @@ object CorpusOps {
     * compaction, which is the only point the index can see surviving
     * TEXT again (it stores one (g, first_doc) row per shingle, not
     * postings). */
-  def loadFirstSeenIndex(s: SparkSession, namePrefix: String): DataFrame = {
-    val fs = s.table(s"${namePrefix}_firstseen")
-    if (!s.catalog.tableExists(s"${namePrefix}_tombstones")) fs
-    else {
-      val dead = s.table(s"${namePrefix}_tombstones").select("doc_id").distinct()
-      fs.join(dead, fs("first_doc") === dead("doc_id"), "left_anti")
-    }
-  }
+  def loadFirstSeenIndex(s: SparkSession, namePrefix: String): DataFrame =
+    AtRest.live(s, namePrefix, s.table(s"${namePrefix}_firstseen"), "first_doc")
 
   /** The highest doc_id ever admitted to the index (save + appends), read
     * from `_meta` at O(1) — None for an index written before the meta
@@ -200,9 +191,7 @@ object CorpusOps {
     * crashed between drop and rename, so the watermark table is never
     * observed missing. */
   private def healMetaMigrate(s: SparkSession, namePrefix: String): Unit =
-    if (!s.catalog.tableExists(s"${namePrefix}_meta") &&
-        s.catalog.tableExists(s"${namePrefix}_meta_migrate"))
-      s.sql(s"ALTER TABLE ${namePrefix}_meta_migrate RENAME TO ${namePrefix}_meta")
+    AtRest.healMigration(s, s"${namePrefix}_meta")
 
   /** O(batch) novelty of a NEW batch against an existing first-seen index:
     * [[ngramNovelty]]'s output for exactly the batch docs, without touching
@@ -262,38 +251,24 @@ object CorpusOps {
     * GUARDS: the append-only id contract is REQUIRED against the `_meta`
     * watermark — a batch whose min id is not above every admitted id is
     * rejected (unless its exact (lo, hi) span is already recorded: that
-    * is the crash-recovery re-run below, which must pass). A batch id
-    * with a PENDING TOMBSTONE also fails fast — ids are never reused
-    * after takedown, and admitting one would hide the new rows at read
-    * time until compaction deletes them (the
-    * [[DedupOps.appendToCorpusIndex]] data-loss trap).
+    * is the crash-recovery re-run, which must pass). A batch id with a
+    * pending tombstone fails fast ([[AtRest]]).
     *
-    * CRASH PROTOCOL: rows are written FIRST, the `_meta` span row LAST,
-    * and the anti-join re-derives exactly the not-yet-admitted shingles —
-    * so a crashed append is healed by simply RE-RUNNING it (committed
-    * shingles are skipped, missing ones admitted, the span row appended;
-    * duplicates are impossible, and a replay of a COMPLETED batch is a
-    * recorded no-op). The replay must re-present the ORIGINAL batch: the
-    * span row records a content fingerprint and a same-span re-run with
-    * different text fails fast instead of silently admitting divergent
-    * shingles. Simpler than the MinHash index's two-table repair
-    * because first-seen state has no cross-table invariant. Single writer
-    * assumed, as with every graft index writer. */
+    * RECOVERY: rows are written first, the `_meta` span row last, and the
+    * anti-join re-derives exactly the not-yet-admitted shingles — so a
+    * crashed append is healed by RE-RUNNING it (a replay of a completed
+    * batch is a recorded no-op). The replay must re-present the ORIGINAL
+    * batch: the span row records a content fingerprint and a same-span
+    * re-run with different text fails fast instead of silently admitting
+    * divergent shingles. */
   def appendToFirstSeenIndex(s: SparkSession, namePrefix: String,
                              batch: DataFrame): Unit = {
     healMetaMigrate(s, namePrefix)
     val span = batch.agg(min("doc_id"), max("doc_id")).head()
     if (span.isNullAt(0)) return // empty batch
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
-    if (s.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = batch.select("doc_id")
-        .join(s.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendToFirstSeenIndex: doc_id ${clash.head.get(0)} has a pending " +
-          s"tombstone in ${namePrefix}_tombstones — ids are never reused; " +
-          "run compactFirstSeenIndex before admitting new batches")
-    }
+    AtRest.requireNoPendingTombstone("appendToFirstSeenIndex", namePrefix, batch,
+      "compactFirstSeenIndex")
     val metaRow = if (!s.catalog.tableExists(s"${namePrefix}_meta")) None
       else s.table(s"${namePrefix}_meta")
         .filter(col("lo") === bLo && col("hi") === bHi).limit(1).collect().headOption
@@ -325,11 +300,9 @@ object CorpusOps {
     val bmin = TextOps.withShingles(batch)
       .select(col("doc_id"), explode(col("sh")).as("g"))
       .groupBy("g").agg(min("doc_id").as("first_doc"))
-    val nBuckets = DedupOps.bucketCountOf(s, s"${namePrefix}_firstseen")
-    bmin.join(loadFirstSeenIndex(s, namePrefix).select("g"), Seq("g"), "left_anti")
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "g")
-      .saveAsTable(s"${namePrefix}_firstseen")
+    AtRest.append(
+      bmin.join(loadFirstSeenIndex(s, namePrefix).select("g"), Seq("g"), "left_anti"),
+      s"${namePrefix}_firstseen")
     if (!replay) {
       import s.implicits._
       val mT = s"${namePrefix}_meta"
@@ -340,19 +313,12 @@ object CorpusOps {
       // watermark table never risks a non-atomic overwrite (ADVICE r12;
       // a crash between drop and rename is healed at the entry check).
       if (s.catalog.tableExists(mT) &&
-          !s.table(mT).schema.fieldNames.contains("fp")) {
-        s.table(mT)
+          !s.table(mT).schema.fieldNames.contains("fp"))
+        AtRest.migrate(s, mT, s.table(mT)
           .withColumn("n", lit(null).cast("long"))
-          .withColumn("fp", lit(null).cast("long"))
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${mT}_migrate")
-        s.sql(s"DROP TABLE $mT")
-        s.sql(s"ALTER TABLE ${mT}_migrate RENAME TO $mT")
-      }
+          .withColumn("fp", lit(null).cast("long")))
       val (n, fp) = contentFingerprint(batch)
-      Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp")
-        .write.mode("append").format("parquet")
-        .saveAsTable(mT)
+      AtRest.append(Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"), mT)
     }
   }
 
@@ -369,8 +335,7 @@ object CorpusOps {
     * blocking them, and [[compactFirstSeenIndex]] folds the removal into
     * the files. Idempotent; unknown ids are read-time no-ops. */
   def removeFromFirstSeenIndex(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_tombstones")
+    AtRest.tombstone(namePrefix, docIds)
 
   /** Fold accumulated tombstones into the first-seen files and RESTORE
     * exact parity with a from-scratch index over the surviving corpus:
@@ -386,45 +351,27 @@ object CorpusOps {
     * orphaned shingle compete in the same min, so an incomplete frame can
     * never lose an existing attribution. Cost: one shingle pass over the
     * survivors SEMI-JOINED to the orphan set — compaction-cadence work,
-    * exactly like the other families' rewrites.
-    *
-    * Crash protocol mirrors [[DedupOps.compactCorpusIndex]]: staging
-    * write, then drop+rename (a dangling `_compact` from a previous crash
-    * is healed first); the tombstone table is dropped LAST. The `_meta`
-    * watermark is untouched — ids are never reused, so it stays the
-    * append-only fence. */
+    * exactly like the other families' rewrites ([[AtRest.compact]]). The
+    * `_meta` watermark is untouched — ids are never reused, so it stays
+    * the append-only fence. */
   def compactFirstSeenIndex(spark: SparkSession, namePrefix: String,
-                            survivingDocs: DataFrame): Unit = {
-    val fsName = s"${namePrefix}_firstseen"
-    if (!spark.catalog.tableExists(fsName) &&
-        spark.catalog.tableExists(s"${fsName}_compact"))
-      spark.sql(s"ALTER TABLE ${fsName}_compact RENAME TO $fsName")
-    val ts = s"${namePrefix}_tombstones"
-    if (!spark.catalog.tableExists(ts)) return
-    val nBuckets = DedupOps.bucketCountOf(spark, fsName)
-    val dead = spark.table(ts).select("doc_id").distinct()
-    val fs = spark.table(fsName)
-    val live = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_anti")
-    val orphanG = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_semi")
-      .select("g").distinct()
-    val survivorPostings = TextOps.withShingles(
-        survivingDocs.select("doc_id", "text")
-          .join(dead, Seq("doc_id"), "left_anti"))
-      .select(col("doc_id"), explode(col("sh")).as("g"))
-      .join(orphanG, Seq("g"), "left_semi")
-    val reattributed = survivorPostings.select("g", "doc_id")
-      .unionByName(live.join(orphanG, Seq("g"), "left_semi")
-        .select(col("g"), col("first_doc").as("doc_id")))
-      .groupBy("g").agg(min("doc_id").as("first_doc"))
-    live.join(orphanG, Seq("g"), "left_anti")
-      .unionByName(reattributed)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "g")
-      .saveAsTable(s"${fsName}_compact")
-    spark.sql(s"DROP TABLE IF EXISTS $fsName")
-    spark.sql(s"ALTER TABLE ${fsName}_compact RENAME TO $fsName")
-    spark.sql(s"DROP TABLE IF EXISTS $ts")
-  }
+                            survivingDocs: DataFrame): Unit =
+    AtRest.compact(spark, namePrefix, "firstseen") { _ =>
+      val dead = AtRest.dead(spark, namePrefix)
+      val fs = spark.table(s"${namePrefix}_firstseen")
+      val live = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_anti")
+      val orphanG = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_semi")
+        .select("g").distinct()
+      val survivorPostings = TextOps.withShingles(
+          survivingDocs.select("doc_id", "text").join(dead, Seq("doc_id"), "left_anti"))
+        .select(col("doc_id"), explode(col("sh")).as("g"))
+        .join(orphanG, Seq("g"), "left_semi")
+      val reattributed = survivorPostings.select("g", "doc_id")
+        .unionByName(live.join(orphanG, Seq("g"), "left_semi")
+          .select(col("g"), col("first_doc").as("doc_id")))
+        .groupBy("g").agg(min("doc_id").as("first_doc"))
+      live.join(orphanG, Seq("g"), "left_anti").unionByName(reattributed)
+    }
 
   /** Session cache for q115's corpus-side index (the q87PrefixIndex
     * warm-state pattern): built once per (session, dir), localCheckpointed

@@ -226,11 +226,8 @@ object DedupOps {
       // so the expensive sketch aggregation runs once, not twice
       shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        shingles.write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${namePrefix}_shingles")
-        bands.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "bucket_key", "band", "bsig")
-          .saveAsTable(s"${namePrefix}_bands")
+        AtRest.save(shingles, s"${namePrefix}_shingles")
+        AtRest.save(bands, s"${namePrefix}_bands", nBuckets, Seq("bucket_key", "band", "bsig"))
       } finally shingles.unpersist()
     }
   }
@@ -241,8 +238,8 @@ object DedupOps {
     * [[compactCorpusIndex]]. */
   def loadCorpusIndex(s: SparkSession, namePrefix: String): MinHashCorpusIndex =
     MinHashCorpusIndex(
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_shingles")),
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_bands")))
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_bands")))
 
   /** APPEND a new batch to an at-rest corpus index written by
     * [[MinHashCorpusIndex.saveAsTables]] — the admit step of the nightly
@@ -254,15 +251,8 @@ object DedupOps {
     * and new files land in the correct buckets: subsequent batch joins stay
     * corpus-stationary (zero corpus-side shuffle — parity with a full
     * rebuild is spec-asserted). Callers own batch-vs-corpus doc_id
-    * uniqueness.
-    *
-    * CRASH PROTOCOL (two tables, no cross-table transaction on plain
-    * parquet): shingles are written FIRST, so the only reachable
-    * inconsistency is shingle rows whose band rows never landed. After a
-    * failed append, call [[repairCorpusIndex]] and SKIP re-appending the
-    * same batch — a blind retry duplicates the batch's shingle rows (single
-    * writer assumed, as with [[graft.sources.PartitionedSink]] compaction;
-    * at cluster scale a transactional table format makes this one commit). */
+    * uniqueness. Shingles are the base table, bands derive from them:
+    * after a failed append call [[repairCorpusIndex]] ([[AtRest]]). */
   def appendToCorpusIndex(namePrefix: String, newDocs: DataFrame): Unit = {
     val sketch = indexCorpus(newDocs)
     // both writes read the shingle pipeline; cache it for the duration so
@@ -274,27 +264,10 @@ object DedupOps {
   /** [[appendToCorpusIndex]] of an already-computed batch sketch: its
     * shingle rows, then its band rows, are appended as they are. */
   def appendToCorpusIndex(namePrefix: String, sketch: MinHashCorpusIndex): Unit = {
-    val spark = sketch.shingles.sparkSession
-    // re-admitting an id whose TOMBSTONE is still pending is a silent data
-    // loss trap: the tombstone anti-join would hide the fresh rows at read
-    // time, and a later compaction would delete them outright. Fail fast;
-    // compact first, then re-admit.
-    if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = sketch.shingles.select("doc_id")
-        .join(spark.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendToCorpusIndex: doc_id ${clash.head.get(0)} has a pending " +
-          s"tombstone in ${namePrefix}_tombstones — run compactCorpusIndex " +
-          "before re-admitting purged ids (appending now would leave the " +
-          "rows hidden until compaction deletes them)")
-    }
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_bands")
-    sketch.shingles.write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_shingles")
-    sketch.bands.write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "bucket_key", "band", "bsig")
-      .saveAsTable(s"${namePrefix}_bands")
+    AtRest.requireNoPendingTombstone("appendToCorpusIndex", namePrefix,
+      sketch.shingles, "compactCorpusIndex")
+    AtRest.append(sketch.shingles, s"${namePrefix}_shingles")
+    AtRest.append(sketch.bands, s"${namePrefix}_bands")
   }
 
   /** Heal a corpus index after a crashed [[appendToCorpusIndex]]: bands are
@@ -303,24 +276,8 @@ object DedupOps {
     * rows but no band rows and append them into the same bucket layout.
     * Idempotent (a healthy index repairs zero docs). Returns the number of
     * repaired doc_ids. */
-  def repairCorpusIndex(spark: SparkSession, namePrefix: String): Long = {
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_bands")
-    val sh = spark.table(s"${namePrefix}_shingles")
-    val missing = sh.select("doc_id").distinct()
-      .join(spark.table(s"${namePrefix}_bands").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = missing.count()
-      if (n > 0) {
-        bandedSignatures(sh.join(missing, "doc_id"))
-          .write.mode("append").format("parquet")
-          .bucketBy(nBuckets, "bucket_key", "band", "bsig")
-          .saveAsTable(s"${namePrefix}_bands")
-      }
-      n
-    } finally missing.unpersist()
-  }
+  def repairCorpusIndex(spark: SparkSession, namePrefix: String): Long =
+    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_bands")(bandedSignatures)
 
   /** TAKEDOWN for the at-rest corpus index — the index-side half of the
     * deletion story ([[ClusterState.remove]] is the cluster-side half):
@@ -335,64 +292,12 @@ object DedupOps {
     * accumulate. Idempotent (re-removing an id just adds a redundant
     * tombstone row); removing an unknown id is a no-op at read time. */
   def removeFromCorpusIndex(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_tombstones")
+    AtRest.tombstone(namePrefix, docIds)
 
   /** Fold accumulated tombstones into the index files: rewrite both tables
-    * WITHOUT the tombstoned docs (same bucket spec, read from catalog
-    * metadata), swap them in, drop the tombstone table. Staging-and-rename
-    * because Spark (correctly) refuses to overwrite a table it is reading.
-    * Crash protocol: the swap is per-table drop+rename. A crash between a
-    * table's DROP and its RENAME leaves that name dangling with the data
-    * safe in `_compact` — the next compactCorpusIndex call HEALS it first
-    * (rename `_compact` into the missing live name) before doing any new
-    * work. A crash between the two table swaps leaves one table compacted
-    * and one not, which is CONSISTENT (tombstones are only dropped last,
-    * and applying a tombstone to an already-compacted table is a no-op);
-    * a crash before any swap leaves stale `_compact` staging tables the
-    * next run overwrites. Single writer assumed, as with
-    * [[appendToCorpusIndex]]. */
-  def compactCorpusIndex(spark: SparkSession, namePrefix: String): Unit = {
-    // heal a previous run that died between DROP and RENAME
-    for (t <- Seq("shingles", "bands"))
-      if (!spark.catalog.tableExists(s"${namePrefix}_$t") &&
-          spark.catalog.tableExists(s"${namePrefix}_${t}_compact"))
-        spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    val ts = s"${namePrefix}_tombstones"
-    if (!spark.catalog.tableExists(ts)) return
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_bands")
-    val dead = spark.table(ts).select("doc_id").distinct()
-    spark.table(s"${namePrefix}_shingles")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${namePrefix}_shingles_compact")
-    spark.table(s"${namePrefix}_bands")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "bucket_key", "band", "bsig")
-      .saveAsTable(s"${namePrefix}_bands_compact")
-    for (t <- Seq("shingles", "bands")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${namePrefix}_$t")
-      spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $ts")
-  }
-
-  private def tombstoneFiltered(spark: SparkSession, namePrefix: String,
-                                df: DataFrame): DataFrame =
-    if (!spark.catalog.tableExists(s"${namePrefix}_tombstones")) df
-    else df.join(
-      spark.table(s"${namePrefix}_tombstones").select("doc_id").distinct(),
-      Seq("doc_id"), "left_anti")
-
-  private[operators] def bucketCountOf(spark: SparkSession, table: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table exists but carries no bucket spec — not a table written " +
-          "by a graft index saveAsTables writer"))
+    * without the tombstoned docs and swap them in ([[AtRest.compact]]). */
+  def compactCorpusIndex(spark: SparkSession, namePrefix: String): Unit =
+    AtRest.compact(spark, namePrefix, "shingles", "bands")()
 
   /** Index a (doc_id, text) corpus for incremental dedup. */
   def indexCorpus(corpus: DataFrame): MinHashCorpusIndex = sketchOf(shinglesOf(corpus))
@@ -811,18 +716,11 @@ object DedupOps {
       val s = prefix.sparkSession
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        df.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "blk", "t")
-          .saveAsTable(s"${namePrefix}_df")
-        prefix.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "blk", "t")
-          .saveAsTable(s"${namePrefix}_prefix")
-        shingles.write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${namePrefix}_shingles")
+        AtRest.save(df, s"${namePrefix}_df", nBuckets, Seq("blk", "t"))
+        AtRest.save(prefix, s"${namePrefix}_prefix", nBuckets, Seq("blk", "t"))
+        AtRest.save(shingles, s"${namePrefix}_shingles")
         import s.implicits._
-        Seq(threshold).toDF("threshold")
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${namePrefix}_meta")
+        AtRest.save(Seq(threshold).toDF("threshold"), s"${namePrefix}_meta")
       } finally df.unpersist()
     }
   }
@@ -836,9 +734,9 @@ object DedupOps {
     * under. */
   def loadNgramPrefixIndex(s: SparkSession, namePrefix: String): NgramPrefixIndex =
     NgramPrefixIndex(
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_prefix")),
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_prefix")),
       s.table(s"${namePrefix}_df"),
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_shingles")),
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
       s.table(s"${namePrefix}_meta").head().getDouble(0))
 
   /** APPEND a new batch of (doc_id, text, n_chars) docs to an at-rest
@@ -853,37 +751,21 @@ object DedupOps {
     * Recall remains exact: the AllPairs lemma needs one COMMON total
     * order, and (coalesce(df, 0), t) is the same order for every past and
     * future doc — parity with a from-scratch rebuild over the union is
-    * spec-asserted.
-    *
-    * CRASH PROTOCOL: shingles are written FIRST; prefixes are a pure
-    * function of shingles + the frozen order, so after a failed append
-    * call [[repairNgramPrefixIndex]] and SKIP re-appending the batch
-    * (a blind retry duplicates shingle rows). Fails fast when a batch id
-    * still has a pending tombstone — same data-loss trap as
-    * [[appendToCorpusIndex]]: compact first, then re-admit. Callers own
-    * batch-vs-corpus doc_id uniqueness. */
+    * spec-asserted. Shingles are the base table, prefixes derive from
+    * them and the frozen order: after a failed append call
+    * [[repairNgramPrefixIndex]] ([[AtRest]]). Callers own batch-vs-corpus
+    * doc_id uniqueness. */
   def appendToNgramPrefixIndex(namePrefix: String, newDocs: DataFrame): Unit = {
     val spark = newDocs.sparkSession
-    if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = newDocs.select("doc_id")
-        .join(spark.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendToNgramPrefixIndex: doc_id ${clash.head.get(0)} has a " +
-          s"pending tombstone in ${namePrefix}_tombstones — run " +
-          "compactNgramPrefixIndex before re-admitting purged ids")
-    }
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_prefix")
+    AtRest.requireNoPendingTombstone("appendToNgramPrefixIndex", namePrefix, newDocs,
+      "compactNgramPrefixIndex")
     val t0 = spark.table(s"${namePrefix}_meta").head().getDouble(0)
     val shB = shingleBlocks(newDocs)
     shB.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      shB.select("doc_id", "blk", "sh").write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_shingles")
-      rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0))
-        .write.mode("append").format("parquet")
-        .bucketBy(nBuckets, "blk", "t")
-        .saveAsTable(s"${namePrefix}_prefix")
+      AtRest.append(shB.select("doc_id", "blk", "sh"), s"${namePrefix}_shingles")
+      AtRest.append(rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0)),
+        s"${namePrefix}_prefix")
     } finally shB.unpersist()
   }
 
@@ -895,27 +777,12 @@ object DedupOps {
     * recomputes to zero rows again). Returns the number of doc_ids
     * examined as missing. */
   def repairNgramPrefixIndex(spark: SparkSession, namePrefix: String): Long = {
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_prefix")
     val t0 = spark.table(s"${namePrefix}_meta").head().getDouble(0)
-    val sh = spark.table(s"${namePrefix}_shingles")
-    val missing = sh.select("doc_id").distinct()
-      .join(spark.table(s"${namePrefix}_prefix").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = missing.count()
-      if (n > 0) {
-        // the shingle table stores blk (derived from n_chars at index
-        // time, not recoverable otherwise); n_sh re-derives from sh
-        val shM = sh.join(missing, "doc_id")
-          .withColumn("n_sh", size(col("sh")))
-        rankedPrefix(shM, spark.table(s"${namePrefix}_df"), genThreshold(t0))
-          .write.mode("append").format("parquet")
-          .bucketBy(nBuckets, "blk", "t")
-          .saveAsTable(s"${namePrefix}_prefix")
-      }
-      n
-    } finally missing.unpersist()
+    // the shingle table stores blk (derived from n_chars at index time,
+    // not recoverable otherwise); n_sh re-derives from sh
+    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_prefix")(sh =>
+      rankedPrefix(sh.withColumn("n_sh", size(col("sh"))),
+        spark.table(s"${namePrefix}_df"), genThreshold(t0)))
   }
 
   /** TAKEDOWN for the at-rest prefix index — the index-side half of a
@@ -930,8 +797,7 @@ object DedupOps {
     * deletion). Idempotent; unknown ids are read-time no-ops. Give each
     * index family its own namePrefix — the tombstone table is per-prefix. */
   def removeFromNgramPrefixIndex(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_tombstones")
+    AtRest.tombstone(namePrefix, docIds)
 
   /** Fold accumulated tombstones into the prefix-index files: rewrite the
     * two DOC-KEYED tables (prefix, shingles) without the tombstoned docs
@@ -940,33 +806,9 @@ object DedupOps {
     * the frozen total order every surviving prefix was ranked under;
     * recomputing df over the survivors would change that order and
     * silently invalidate every stored prefix (recall would no longer be
-    * exact). Re-freeze only via a full [[indexNgramPrefix]] rebuild.
-    * Crash protocol mirrors [[compactCorpusIndex]]: per-table
-    * drop+rename, healed on the next call; tombstones dropped last. */
-  def compactNgramPrefixIndex(spark: SparkSession, namePrefix: String): Unit = {
-    for (t <- Seq("prefix", "shingles"))
-      if (!spark.catalog.tableExists(s"${namePrefix}_$t") &&
-          spark.catalog.tableExists(s"${namePrefix}_${t}_compact"))
-        spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    val ts = s"${namePrefix}_tombstones"
-    if (!spark.catalog.tableExists(ts)) return
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_prefix")
-    val dead = spark.table(ts).select("doc_id").distinct()
-    spark.table(s"${namePrefix}_prefix")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "blk", "t")
-      .saveAsTable(s"${namePrefix}_prefix_compact")
-    spark.table(s"${namePrefix}_shingles")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${namePrefix}_shingles_compact")
-    for (t <- Seq("prefix", "shingles")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${namePrefix}_$t")
-      spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $ts")
-  }
+    * exact). Re-freeze only via a full [[indexNgramPrefix]] rebuild. */
+  def compactNgramPrefixIndex(spark: SparkSession, namePrefix: String): Unit =
+    AtRest.compact(spark, namePrefix, "prefix", "shingles")()
 
   /** Build the prefix index over a (doc_id, text, n_chars) corpus at
     * `minJac`. Same shingle/block/df/prefix pipeline as
@@ -1113,18 +955,11 @@ object DedupOps {
       val s = postings.sparkSession
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        df.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "t")
-          .saveAsTable(s"${namePrefix}_df")
-        postings.write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "t")
-          .saveAsTable(s"${namePrefix}_postings")
-        shingles.write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${namePrefix}_shingles")
+        AtRest.save(df, s"${namePrefix}_df", nBuckets, Seq("t"))
+        AtRest.save(postings, s"${namePrefix}_postings", nBuckets, Seq("t"))
+        AtRest.save(shingles, s"${namePrefix}_shingles")
         import s.implicits._
-        Seq(threshold).toDF("threshold")
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${namePrefix}_meta")
+        AtRest.save(Seq(threshold).toDF("threshold"), s"${namePrefix}_meta")
       } finally df.unpersist()
     }
   }
@@ -1156,120 +991,65 @@ object DedupOps {
     * candidate selectivity, never exactness. */
   def loadNgramContainmentIndex(s: SparkSession, namePrefix: String): NgramContainmentIndex =
     NgramContainmentIndex(
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_postings")),
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_postings")),
       s.table(s"${namePrefix}_df"),
-      tombstoneFiltered(s, namePrefix, s.table(s"${namePrefix}_shingles")),
+      AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
       s.table(s"${namePrefix}_meta").head().getDouble(0))
 
   /** APPEND a batch to an at-rest containment index — O(batch): the
     * batch's postings rank under the FROZEN df order (unseen tokens
     * df = 0; any order is exact here, see the index scaladoc) and land in
-    * the existing bucket layout. CRASH PROTOCOL: shingles first, postings
-    * second — postings are a pure function of shingles + the frozen
-    * order, so a failed append heals via
-    * [[repairNgramContainmentIndex]]; do NOT blindly re-append (shingle
-    * rows would duplicate). Fails fast on a pending-tombstoned batch id
-    * (ids are never reused; compact first). Callers own batch-vs-corpus
-    * doc_id uniqueness. */
+    * the existing bucket layout. Shingles are the base table, postings
+    * derive from them: after a failed append call
+    * [[repairNgramContainmentIndex]] ([[AtRest]]). Callers own
+    * batch-vs-corpus doc_id uniqueness. */
   def appendToNgramContainmentIndex(namePrefix: String, newDocs: DataFrame): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val spark = newDocs.sparkSession
-    if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = newDocs.select("doc_id")
-        .join(spark.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendToNgramContainmentIndex: doc_id ${clash.head.get(0)} has a " +
-          s"pending tombstone in ${namePrefix}_tombstones — run " +
-          "compactNgramContainmentIndex before re-admitting purged ids")
-    }
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_postings")
+    AtRest.requireNoPendingTombstone("appendToNgramContainmentIndex", namePrefix,
+      newDocs, "compactNgramContainmentIndex")
     val sh = TextOps.withShingles(newDocs.select("doc_id", "text"))
       .select("doc_id", "sh")
       .withColumn("n_sh", size(col("sh")))
       .filter(col("n_sh") > 0)
     sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      sh.select("doc_id", "n_sh", "sh").write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_shingles")
-      sh.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("t"))
-        .join(spark.table(s"${namePrefix}_df"), Seq("t"), "left")
-        .withColumn("pos", row_number().over(
-          Window.partitionBy("doc_id").orderBy(coalesce(col("df"), lit(0L)), col("t"))))
-        .select("doc_id", "n_sh", "t", "pos")
-        .write.mode("append").format("parquet")
-        .bucketBy(nBuckets, "t")
-        .saveAsTable(s"${namePrefix}_postings")
+      AtRest.append(sh.select("doc_id", "n_sh", "sh"), s"${namePrefix}_shingles")
+      AtRest.append(rankedPostings(spark, namePrefix, sh), s"${namePrefix}_postings")
     } finally sh.unpersist()
+  }
+
+  /** (doc_id, n_sh, t, pos) postings of a (doc_id, n_sh, sh) frame under
+    * the index's frozen df order, unseen tokens df = 0. */
+  private def rankedPostings(spark: SparkSession, namePrefix: String,
+                             sh: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    sh.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("t"))
+      .join(spark.table(s"${namePrefix}_df"), Seq("t"), "left")
+      .withColumn("pos", row_number().over(
+        Window.partitionBy("doc_id").orderBy(coalesce(col("df"), lit(0L)), col("t"))))
+      .select("doc_id", "n_sh", "t", "pos")
   }
 
   /** Heal after a crashed [[appendToNgramContainmentIndex]]: re-rank and
     * append postings for exactly the doc_ids that have shingle rows but
     * no posting rows. Idempotent; returns the missing-doc count. */
-  def repairNgramContainmentIndex(spark: SparkSession, namePrefix: String): Long = {
-    import org.apache.spark.sql.expressions.Window
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_postings")
-    val sh = spark.table(s"${namePrefix}_shingles")
-    val missing = sh.select("doc_id").distinct()
-      .join(spark.table(s"${namePrefix}_postings").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = missing.count()
-      if (n > 0) {
-        sh.join(missing, "doc_id")
-          .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("t"))
-          .join(spark.table(s"${namePrefix}_df"), Seq("t"), "left")
-          .withColumn("pos", row_number().over(
-            Window.partitionBy("doc_id").orderBy(coalesce(col("df"), lit(0L)), col("t"))))
-          .select("doc_id", "n_sh", "t", "pos")
-          .write.mode("append").format("parquet")
-          .bucketBy(nBuckets, "t")
-          .saveAsTable(s"${namePrefix}_postings")
-      }
-      n
-    } finally missing.unpersist()
-  }
+  def repairNgramContainmentIndex(spark: SparkSession, namePrefix: String): Long =
+    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_postings")(
+      rankedPostings(spark, namePrefix, _))
 
   /** TAKEDOWN for the containment index: tombstone append, O(batch),
     * never a rewrite — [[loadNgramContainmentIndex]] hides the doc at
     * read time, [[compactNgramContainmentIndex]] folds it into the
     * files. Idempotent; unknown ids are read-time no-ops. */
   def removeFromNgramContainmentIndex(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_tombstones")
+    AtRest.tombstone(namePrefix, docIds)
 
   /** Fold tombstones into the containment-index files: rewrite the two
-    * doc-keyed tables without the dead docs (same bucket spec), swap,
-    * drop tombstones last. The `df` order table is never rewritten —
-    * stored positions were priced under it, and (index scaladoc) a stale
-    * order is a selectivity matter only. Crash protocol mirrors
-    * [[compactNgramPrefixIndex]]: per-table drop+rename, healed on the
-    * next call. */
-  def compactNgramContainmentIndex(spark: SparkSession, namePrefix: String): Unit = {
-    for (t <- Seq("postings", "shingles"))
-      if (!spark.catalog.tableExists(s"${namePrefix}_$t") &&
-          spark.catalog.tableExists(s"${namePrefix}_${t}_compact"))
-        spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    val ts = s"${namePrefix}_tombstones"
-    if (!spark.catalog.tableExists(ts)) return
-    val nBuckets = bucketCountOf(spark, s"${namePrefix}_postings")
-    val dead = spark.table(ts).select("doc_id").distinct()
-    spark.table(s"${namePrefix}_postings")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "t")
-      .saveAsTable(s"${namePrefix}_postings_compact")
-    spark.table(s"${namePrefix}_shingles")
-      .join(dead, Seq("doc_id"), "left_anti")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${namePrefix}_shingles_compact")
-    for (t <- Seq("postings", "shingles")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${namePrefix}_$t")
-      spark.sql(s"ALTER TABLE ${namePrefix}_${t}_compact RENAME TO ${namePrefix}_$t")
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $ts")
-  }
+    * doc-keyed tables without the dead docs and swap. The `df` order
+    * table is never rewritten — stored positions were priced under it,
+    * and (index scaladoc) a stale order is a selectivity matter only. */
+  def compactNgramContainmentIndex(spark: SparkSession, namePrefix: String): Unit =
+    AtRest.compact(spark, namePrefix, "postings", "shingles")()
 
   /** Batch-incident containment pairs AGAINST a prebuilt containment
     * index — output-identical to [[ngramContainmentPairs]] over
@@ -1802,17 +1582,7 @@ object DedupOps {
   WarmState.registerCache(() => splitStateCache.clear())
 
   private[graft] def dropSplitTables(s: SparkSession, p: String): Unit =
-    for (t <- Seq("_assign", "_assign_compact", "_meta", "_meta_migrate",
-        "_moves", "_moves_compact", "_pairs", "_pairs_compact", "_tombstones")) {
-      s.sql(s"DROP TABLE IF EXISTS $p$t")
-      // a PREVIOUS process may have left the managed location behind with
-      // no row in THIS metastore — creating the table would then fail
-      // with LOCATION_ALREADY_EXISTS; clear the orphaned directory too
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), s"$p$t".toLowerCase)
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    AtRest.dropFamily(s, p, "assign", "moves", "pairs")
 
   /** q119: init on the corpus (ids ≤ 90% watermark, q118's split point),
     * then assign the batch through the state against the UPDATED labels

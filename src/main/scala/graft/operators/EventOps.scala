@@ -182,7 +182,9 @@ object EventOps {
         .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           Num.tierFor(Tables.load(s, d, "events")).dsum(col("value")).as("sum_value"))
-        .transform(df => Tables.sortSmall(df, "hr", "event_type"))
+        // a global sort, not sortSmall: the hour groups grow with the time
+        // span the events cover, so coalesce(1) would merge them in one task
+        .orderBy("hr", "event_type")
     }),
 
     // Gap-based sessionization via window functions: new session when the

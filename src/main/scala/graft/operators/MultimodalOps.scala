@@ -255,15 +255,7 @@ object MultimodalOps {
   private def q125IndexPrefix(s: SparkSession, d: String): (Long, String) =
     mediaIndexCache.computeIfAbsent((s, mediaStateKey(d)), _ => {
       val p = "graft_media_phash_" + math.abs(mediaStateKey(d).hashCode)
-      for (t <- Seq("_chunks", "_chunks_compact", "_meta", "_tombstones")) {
-        s.sql(s"DROP TABLE IF EXISTS $p$t")
-        // clear an orphaned managed location a previous process left
-        // behind (LOCATION_ALREADY_EXISTS otherwise)
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), s"$p$t".toLowerCase)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-      }
+      AtRest.dropFamily(s, p, "chunks")
       val docs = Tables.spread(Tables.load(s, d, "documents"))
       val thr = math.floor(
         docs.agg(max("doc_id")).collect()(0).getLong(0) * 0.9).toLong
@@ -314,18 +306,15 @@ object MultimodalOps {
                           nBuckets: Int = 32): Unit = {
     val s = media.sparkSession
     import s.implicits._
-    phashChunks(mediaFingerprint(media))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "c", "ch")
-      .saveAsTable(s"${namePrefix}_chunks")
+    AtRest.save(phashChunks(mediaFingerprint(media)), s"${namePrefix}_chunks",
+      nBuckets, Seq("c", "ch"))
     val span = media.agg(min("doc_id"), max("doc_id")).head()
     val rows = if (span.isNullAt(0)) Seq.empty[(Long, Long, Long, Long)]
                else {
                  val (n, fp) = mediaFingerprintOf(media)
                  Seq((span.getLong(0), span.getLong(1), n, fp))
                }
-    rows.toDF("lo", "hi", "n", "fp").write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${namePrefix}_meta")
+    AtRest.save(rows.toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
   }
 
   /** Highest doc_id ever admitted — the append-only fence, O(1). */
@@ -337,13 +326,8 @@ object MultimodalOps {
     }
 
   /** The live chunk table: pending tombstones dropped at read. */
-  def loadMediaPhashChunks(s: SparkSession, namePrefix: String): DataFrame = {
-    val t = s.table(s"${namePrefix}_chunks")
-    if (!s.catalog.tableExists(s"${namePrefix}_tombstones")) t
-    else t.join(
-      s.table(s"${namePrefix}_tombstones").select("doc_id").distinct(),
-      Seq("doc_id"), "left_anti")
-  }
+  def loadMediaPhashChunks(s: SparkSession, namePrefix: String): DataFrame =
+    AtRest.live(s, namePrefix, s.table(s"${namePrefix}_chunks"))
 
   /** Admit a batch: O(batch) fingerprint + chunk append, `_meta` span
     * LAST. Crash replay re-runs against the anti-join (already-admitted
@@ -355,14 +339,8 @@ object MultimodalOps {
     val span = media.agg(min("doc_id"), max("doc_id")).head()
     if (span.isNullAt(0)) return
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
-    if (s.catalog.tableExists(s"${namePrefix}_tombstones")) {
-      val clash = media.select("doc_id")
-        .join(s.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-        .limit(1).collect()
-      require(clash.isEmpty,
-        s"appendToMediaPhashIndex: doc_id ${clash.head.get(0)} has a pending " +
-          s"tombstone — ids are never reused; compact first")
-    }
+    AtRest.requireNoPendingTombstone("appendToMediaPhashIndex", namePrefix, media,
+      "compactMediaPhashIndex")
     val metaRow = s.table(s"${namePrefix}_meta")
       .filter(col("lo") === bLo && col("hi") === bHi).limit(1).collect().headOption
     metaRow match {
@@ -380,47 +358,26 @@ object MultimodalOps {
               s"watermark $wm — ids are append-only and never reused")
         }
     }
-    val nB = DedupOps.bucketCountOf(s, s"${namePrefix}_chunks")
-    phashChunks(mediaFingerprint(media))
+    AtRest.append(phashChunks(mediaFingerprint(media))
       .join(loadMediaPhashChunks(s, namePrefix).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
-      .transform(Tables.pinEager(_)) // severs the read of the append target
-      .write.mode("append").format("parquet")
-      .bucketBy(nB, "c", "ch")
-      .saveAsTable(s"${namePrefix}_chunks")
+      .transform(Tables.pinEager(_)), // severs the read of the append target
+      s"${namePrefix}_chunks")
     if (metaRow.isEmpty) {
       val (n, fp) = mediaFingerprintOf(media)
-      Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp")
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_meta")
+      AtRest.append(Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
     }
   }
 
   /** TAKEDOWN: tombstone append, O(batch); [[loadMediaPhashChunks]]
     * hides the rows at read, [[compactMediaPhashIndex]] folds them in. */
   def removeFromMediaPhashIndex(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(s"${namePrefix}_tombstones")
+    AtRest.tombstone(namePrefix, docIds)
 
-  /** Fold tombstones into the chunk files: staging write, drop + rename
-    * (dangling staging from a crash healed at entry), tombstones dropped
-    * LAST — the standard graft compaction protocol. No re-attribution
-    * applies (a fingerprint belongs to exactly one asset). */
-  def compactMediaPhashIndex(s: SparkSession, namePrefix: String): Unit = {
-    val cT = s"${namePrefix}_chunks"
-    if (!s.catalog.tableExists(cT) && s.catalog.tableExists(s"${cT}_compact"))
-      s.sql(s"ALTER TABLE ${cT}_compact RENAME TO $cT")
-    val ts = s"${namePrefix}_tombstones"
-    if (!s.catalog.tableExists(ts)) return
-    val nB = DedupOps.bucketCountOf(s, cT)
-    loadMediaPhashChunks(s, namePrefix)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nB, "c", "ch")
-      .saveAsTable(s"${cT}_compact")
-    s.sql(s"DROP TABLE IF EXISTS $cT")
-    s.sql(s"ALTER TABLE ${cT}_compact RENAME TO $cT")
-    s.sql(s"DROP TABLE IF EXISTS $ts")
-  }
+  /** Fold tombstones into the chunk files ([[AtRest.compact]]). No
+    * re-attribution applies (a fingerprint belongs to exactly one asset). */
+  def compactMediaPhashIndex(s: SparkSession, namePrefix: String): Unit =
+    AtRest.compact(s, namePrefix, "chunks")()
 
   /** Batch-incident media near-dup pairs AGAINST the at-rest index —
     * output-identical to [[mediaNearDupPairs]] over (corpus ∪ batch)

@@ -97,19 +97,16 @@ object SplitState {
     when(bkt < 80, "train").when(bkt < 90, "valid").otherwise("test")
   }
 
-  private def assignT(p: String) = s"${p}_assign"
-  private def metaT(p: String) = s"${p}_meta"
-  private def movesT(p: String) = s"${p}_moves"
-  private def tombT(p: String) = s"${p}_tombstones"
-  private def pairsT(p: String) = s"${p}_pairs"
+  private def assignT(p: String) = AtRest.table(p, "assign")
+  private def metaT(p: String) = AtRest.table(p, "meta")
+  private def movesT(p: String) = AtRest.table(p, "moves")
+  private def pairsT(p: String) = AtRest.table(p, "pairs")
 
   /** Heal a `_meta` schema migration that crashed between drop and rename
-    * (see [[commitMeta]]'s staging protocol) — called before every `_meta`
-    * read so the fence table is never observed missing. */
+    * (see [[commitMeta]]) — called before every `_meta` read so the fence
+    * table is never observed missing. */
   private def healMeta(s: SparkSession, p: String): Unit =
-    if (!s.catalog.tableExists(metaT(p)) &&
-        s.catalog.tableExists(s"${metaT(p)}_migrate"))
-      s.sql(s"ALTER TABLE ${metaT(p)}_migrate RENAME TO ${metaT(p)}")
+    AtRest.healMigration(s, metaT(p))
 
   private def metaExists(s: SparkSession, p: String): Boolean = {
     healMeta(s, p)
@@ -183,10 +180,7 @@ object SplitState {
       .filter(col("seq") <= committed)
       .groupBy("doc_id")
       .agg(max_by(col("split"), col("seq")).as("split"))
-    if (!s.catalog.tableExists(tombT(namePrefix))) latest
-    else latest.join(
-      s.table(tombT(namePrefix)).select("doc_id").distinct(),
-      Seq("doc_id"), "left_anti")
+    AtRest.live(s, namePrefix, latest)
   }
 
   /** Bootstrap the family: the q117 assignment (hash of each doc's cluster
@@ -205,9 +199,7 @@ object SplitState {
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .withColumn("split", splitOf(coalesce(col("label"), col("doc_id"))))
       .select(col("doc_id"), col("split"), lit(0L).as("seq"))
-    rows.write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "doc_id")
-      .saveAsTable(assignT(namePrefix))
+    AtRest.save(rows, assignT(namePrefix), nBuckets, Seq("doc_id"))
     commitMeta(s, namePrefix, 0L, Some((span.getLong(0), span.getLong(1))),
       "init", Some(idFingerprint(docs.select("doc_id"))))
   }
@@ -357,9 +349,7 @@ object SplitState {
     val rows = pairs.select(col("a"), col("b"),
       col("jac").cast("double").as("jac"), lit(next).as("seq"))
     if (!s.catalog.tableExists(pairsT(namePrefix))) {
-      rows.write.mode("overwrite").format("parquet")
-        .bucketBy(nBuckets, "a")
-        .saveAsTable(pairsT(namePrefix))
+      AtRest.save(rows, pairsT(namePrefix), nBuckets, Seq("a"))
     } else {
       val orphans = s.table(pairsT(namePrefix))
         .filter(col("seq") === next).select("a", "b")
@@ -370,12 +360,9 @@ object SplitState {
           s"(${stray.headOption.map(r => s"${r.get(0)}, ${r.get(1)}")}) belong " +
           "to a different abandoned operation — run SplitState.compact to " +
           "purge them, then retry")
-      val nB = DedupOps.bucketCountOf(s, pairsT(namePrefix))
-      rows.join(orphans, Seq("a", "b"), "left_anti")
-        .transform(Tables.pinEager(_)) // severs the read of the append target
-        .write.mode("append").format("parquet")
-        .bucketBy(nB, "a")
-        .saveAsTable(pairsT(namePrefix))
+      AtRest.append(rows.join(orphans, Seq("a", "b"), "left_anti")
+        .transform(Tables.pinEager(_)), // severs the read of the append target
+        pairsT(namePrefix))
     }
     commitMeta(s, namePrefix, next, Some((lo, hi)), "pairs",
       Some(pairFingerprint(pairs)))
@@ -395,16 +382,7 @@ object SplitState {
     val live = s.table(pairsT(namePrefix))
       .filter(col("seq") <= committed)
       .select("a", "b", "jac")
-    if (!s.catalog.tableExists(tombT(namePrefix))) live
-    else {
-      val deadA = s.table(tombT(namePrefix))
-        .select(col("doc_id").as("a")).distinct()
-      val deadB = s.table(tombT(namePrefix))
-        .select(col("doc_id").as("b")).distinct()
-      live.join(deadA, Seq("a"), "left_anti")
-        .join(deadB, Seq("b"), "left_anti")
-        .select("a", "b", "jac")
-    }
+    AtRest.live(s, namePrefix, AtRest.live(s, namePrefix, live, "a"), "b")
   }
 
   /** Re-adjudicate after cluster maintenance COMMITTED (a q87 merge or a
@@ -489,9 +467,7 @@ object SplitState {
         lit("quarantine_enter").as("reason"), col("seq"))
       .transform(Tables.pinEager(_)) // severs the read of the append target
     val n = missing.count()
-    if (n > 0)
-      missing.write.mode("append").format("parquet")
-        .saveAsTable(movesT(namePrefix))
+    if (n > 0) AtRest.append(missing, movesT(namePrefix))
     n
   }
 
@@ -506,9 +482,8 @@ object SplitState {
         s.table(movesT(namePrefix)).filter(col("seq") === next).select("doc_id"),
         Seq("doc_id"), "left_anti")
         .transform(Tables.pinEager(_)) // severs the read of the append target
-    dedup.select("doc_id", "from_split", "to_split", "reason", "seq")
-      .write.mode("append").format("parquet")
-      .saveAsTable(movesT(namePrefix))
+    AtRest.append(dedup.select("doc_id", "from_split", "to_split", "reason", "seq"),
+      movesT(namePrefix))
   }
 
   /** Per-doc quarantine ENTRY seq: the durable `quarantine_enter` audit
@@ -647,16 +622,13 @@ object SplitState {
     * was its component's senior, the next [[resolve]] re-adjudicates from
     * the surviving members' RECORDED splits — survivors never re-hash. */
   def remove(namePrefix: String, docIds: DataFrame): Unit =
-    docIds.select("doc_id").write.mode("append").format("parquet")
-      .saveAsTable(tombT(namePrefix))
+    AtRest.tombstone(namePrefix, docIds)
 
   /** Collapse assignment history to one row per surviving doc (its latest
     * committed split), purge uncommitted orphan rows from crashed or
     * abandoned attempts, fold tombstones into the assign AND pairs files,
-    * and drop the tombstone table LAST. Crash protocol mirrors
-    * [[CorpusOps.compactFirstSeenIndex]] for EVERY rewritten table —
-    * staging write, drop + rename, a dangling `_compact` from a previous
-    * crash healed first; `_moves` especially, whose whole contract is
+    * and drop the tombstone table LAST — [[AtRest.rewrite]]'s staged swap
+    * for every rewritten table, so `_moves`, whose whole contract is
     * durability, is never exposed to a non-atomic in-place overwrite
     * (ADVICE r12). `_meta` (the watermark and commit fence) is
     * deliberately untouched; `_moves` keeps all COMMITTED history — the
@@ -664,50 +636,22 @@ object SplitState {
     * fence (a later operation committing the same seq would otherwise
     * silently legitimize the phantom moves). */
   def compact(s: SparkSession, namePrefix: String): Unit = {
-    val live = assignT(namePrefix)
-    for (t <- Seq(live, movesT(namePrefix), pairsT(namePrefix)))
-      if (!s.catalog.tableExists(t) && s.catalog.tableExists(s"${t}_compact"))
-        s.sql(s"ALTER TABLE ${t}_compact RENAME TO $t")
-    val nBuckets = DedupOps.bucketCountOf(s, live)
+    AtRest.heal(s, namePrefix, "assign", "moves", "pairs")
     val committed = committedSeq(s, namePrefix)
-    val haveTombs = s.catalog.tableExists(tombT(namePrefix))
-    def dropDead(df: DataFrame, key: String): DataFrame =
-      if (!haveTombs) df
-      else df.join(
-        s.table(tombT(namePrefix)).select(col("doc_id").as(key)).distinct(),
-        Seq(key), "left_anti")
-    val collapsed = s.table(live)
+    def live(df: DataFrame, key: String) = AtRest.live(s, namePrefix, df, key)
+    val collapsed = s.table(assignT(namePrefix))
       .filter(col("seq") <= committed)
       .groupBy("doc_id")
       .agg(max_by(col("split"), col("seq")).as("split"), max("seq").as("seq"))
-    dropDead(collapsed, "doc_id").select("doc_id", "split", "seq")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(nBuckets, "doc_id")
-      .saveAsTable(s"${live}_compact")
-    s.sql(s"DROP TABLE IF EXISTS $live")
-    s.sql(s"ALTER TABLE ${live}_compact RENAME TO $live")
-    // the verified-pairs artifact: fold tombstones (no re-attribution — a
-    // pair dies with either endpoint) and purge uncommitted orphan rows
-    if (s.catalog.tableExists(pairsT(namePrefix))) {
-      val pT = pairsT(namePrefix)
-      val nB = DedupOps.bucketCountOf(s, pT)
-      dropDead(dropDead(s.table(pT).filter(col("seq") <= committed), "a"), "b")
-        .select("a", "b", "jac", "seq")
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(nB, "a")
-        .saveAsTable(s"${pT}_compact")
-      s.sql(s"DROP TABLE IF EXISTS $pT")
-      s.sql(s"ALTER TABLE ${pT}_compact RENAME TO $pT")
-    }
-    if (s.catalog.tableExists(movesT(namePrefix))) {
-      val mT = movesT(namePrefix)
-      s.table(mT).filter(col("seq") <= committed)
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${mT}_compact")
-      s.sql(s"DROP TABLE IF EXISTS $mT")
-      s.sql(s"ALTER TABLE ${mT}_compact RENAME TO $mT")
-    }
-    s.sql(s"DROP TABLE IF EXISTS ${tombT(namePrefix)}")
+    AtRest.rewrite(s, namePrefix,
+      Seq("assign" -> live(collapsed, "doc_id").select("doc_id", "split", "seq")) ++
+        // the verified-pairs artifact: fold tombstones (no re-attribution —
+        // a pair dies with either endpoint) and purge uncommitted orphans
+        Option.when(s.catalog.tableExists(pairsT(namePrefix)))("pairs" ->
+          live(live(s.table(pairsT(namePrefix)).filter(col("seq") <= committed), "a"), "b")
+            .select("a", "b", "jac", "seq")) ++
+        Option.when(s.catalog.tableExists(movesT(namePrefix)))("moves" ->
+          s.table(movesT(namePrefix)).filter(col("seq") <= committed)))
   }
 
   /** Append `rows` (doc_id, split, seq=`next`) into the assign table,
@@ -726,15 +670,11 @@ object SplitState {
       s"SplitState: uncommitted rows at seq $next for doc_id " +
         s"${stray.headOption.map(_.get(0))} belong to a different abandoned " +
         "operation — run SplitState.compact to purge them, then retry")
-    val nBuckets = DedupOps.bucketCountOf(s, assignT(namePrefix))
     // EAGER checkpoint: `rows` (and the orphan anti-join) reads the very
     // table this write appends to — sever the lineage so the append never
     // re-lists its own source (batch-sized frame)
-    rows.join(orphans, Seq("doc_id"), "left_anti")
-      .transform(Tables.pinEager(_))
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "doc_id")
-      .saveAsTable(assignT(namePrefix))
+    AtRest.append(rows.join(orphans, Seq("doc_id"), "left_anti")
+      .transform(Tables.pinEager(_)), assignT(namePrefix))
   }
 
   /** The commit fence: the `_meta` row lands only after every data write
@@ -745,10 +685,8 @@ object SplitState {
     * only — never consulted by a guard, so commit-time skew is
     * harmless). A PRE-UPGRADE family whose `_meta` lacks columns is
     * migrated in place first (existing rows gain nulls — span-only
-    * exemption preserved), via staging + drop + rename so the fence
-    * table never risks a non-atomic overwrite (the
-    * [[CorpusOps.appendToFirstSeenIndex]] legacy-append crash, ADVICE
-    * r12; a crash between drop and rename is healed by [[healMeta]]). */
+    * exemption preserved) by [[AtRest.migrate]], so the fence table never
+    * risks a non-atomic overwrite (ADVICE r12). */
   private def commitMeta(s: SparkSession, namePrefix: String, seq: Long,
                          span: Option[(Long, Long)], kind: String,
                          fingerprint: Option[(Long, Long)]): Unit = {
@@ -758,20 +696,13 @@ object SplitState {
     if (s.catalog.tableExists(mT)) {
       val have = s.table(mT).schema.fieldNames.toSet
       val missing = Seq("n", "fp", "ts").filterNot(have)
-      if (missing.nonEmpty) {
-        missing.foldLeft(s.table(mT))(
-            (df, c) => df.withColumn(c, lit(null).cast("long")))
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(s"${mT}_migrate")
-        s.sql(s"DROP TABLE $mT")
-        s.sql(s"ALTER TABLE ${mT}_migrate RENAME TO $mT")
-      }
+      if (missing.nonEmpty)
+        AtRest.migrate(s, mT, missing.foldLeft(s.table(mT))(
+          (df, c) => df.withColumn(c, lit(null).cast("long"))))
     }
-    Seq((seq, span.map(_._1), span.map(_._2), kind,
+    AtRest.append(Seq((seq, span.map(_._1), span.map(_._2), kind,
         fingerprint.map(_._1), fingerprint.map(_._2),
         System.currentTimeMillis()))
-      .toDF("seq", "lo", "hi", "kind", "n", "fp", "ts")
-      .write.mode("append").format("parquet")
-      .saveAsTable(mT)
+      .toDF("seq", "lo", "hi", "kind", "n", "fp", "ts"), mT)
   }
 }

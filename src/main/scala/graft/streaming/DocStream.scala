@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import graft.operators.AtRest
 
 /** Streaming document-ingest gates: the text-hygiene operators applied as
   * documents ARRIVE rather than in a nightly batch. The quality filter is a
@@ -106,17 +107,9 @@ object DocStream {
         try {
           val b = pins.cache(EventStream.onCaller(spark, batch).select("doc_id", "text"))
           // tombstone fail-fast FIRST — before any audit or index write
-          // claims anything about this batch
-          if (spark.catalog.tableExists(s"${namePrefix}_tombstones")) {
-            val clash = b.select("doc_id")
-              .join(spark.table(s"${namePrefix}_tombstones").select("doc_id"), "doc_id")
-              .limit(1).collect()
-            require(clash.isEmpty,
-              s"admissionDrain: doc_id ${clash.head.get(0)} has a pending " +
-                s"tombstone in ${namePrefix}_tombstones — ids are never " +
-                "reused; run compactCorpusIndex, then re-run the drain (the " +
-                "checkpoint resumes at this batch)")
-          }
+          // claims anything about this batch; the checkpoint resumes here
+          AtRest.requireNoPendingTombstone("admissionDrain", namePrefix, b,
+            "compactCorpusIndex, then re-run the drain")
           // the kinds of manifest row this batch has (true = marker, false
           // = completion) in ONE job: each partition reports its distinct
           // kinds — a global aggregate would add a shuffle stage
@@ -229,13 +222,9 @@ object DocStream {
                   .exists(_ >= span.getLong(1)) && {
                 val committed = graft.operators.SplitState
                   .load(spark, splitPrefix).select("doc_id")
-                val committedOrDead =
-                  if (!spark.catalog.tableExists(s"${splitPrefix}_tombstones"))
-                    committed
-                  else committed.unionByName(
-                    spark.table(s"${splitPrefix}_tombstones").select("doc_id"))
                 b.select("doc_id")
-                  .join(committedOrDead, Seq("doc_id"), "left_anti")
+                  .join(AtRest.withTombstoned(spark, splitPrefix, committed),
+                    Seq("doc_id"), "left_anti")
                   .limit(1).collect().isEmpty
               })
             if (fence) {
@@ -245,11 +234,8 @@ object DocStream {
               // down, not because an append crashed)
               val have = spark.table(s"${indexPrefix}_shingles")
                 .select("doc_id").distinct()
-              val haveOrDead =
-                if (!spark.catalog.tableExists(s"${splitPrefix}_tombstones")) have
-                else have.unionByName(
-                  spark.table(s"${splitPrefix}_tombstones").select("doc_id"))
-              val missing = b.join(haveOrDead, Seq("doc_id"), "left_anti")
+              val missing = b.join(AtRest.withTombstoned(spark, splitPrefix, have),
+                  Seq("doc_id"), "left_anti")
                 .transform(graft.Tables.pinEager(_))
               if (missing.limit(1).collect().nonEmpty)
                 graft.operators.DedupOps.appendToNgramPrefixIndex(indexPrefix, missing)
@@ -368,12 +354,9 @@ object DocStream {
                     .exists(_ >= span.getLong(1)) && {
                   val committed = graft.operators.SplitState
                     .load(spark, sp).select("doc_id")
-                  val committedOrDead =
-                    if (!spark.catalog.tableExists(s"${sp}_tombstones")) committed
-                    else committed.unionByName(
-                      spark.table(s"${sp}_tombstones").select("doc_id"))
                   b.select("doc_id")
-                    .join(committedOrDead, Seq("doc_id"), "left_anti")
+                    .join(AtRest.withTombstoned(spark, sp, committed),
+                      Seq("doc_id"), "left_anti")
                     .limit(1).collect().isEmpty
                 })
               if (fence) {
@@ -385,12 +368,8 @@ object DocStream {
                 // the watermark guard)
                 val have = spark.table(s"${indexPrefix}_chunks")
                   .select("doc_id").distinct()
-                val haveOrDead =
-                  if (!spark.catalog.tableExists(s"${indexPrefix}_tombstones"))
-                    have
-                  else have.unionByName(
-                    spark.table(s"${indexPrefix}_tombstones").select("doc_id"))
-                val missing = b.join(haveOrDead, Seq("doc_id"), "left_anti")
+                val missing = b.join(AtRest.withTombstoned(spark, indexPrefix, have),
+                    Seq("doc_id"), "left_anti")
                   .transform(graft.Tables.pinEager(_))
                 if (missing.limit(1).collect().nonEmpty)
                   graft.operators.MultimodalOps.appendToMediaPhashIndex(
@@ -528,10 +507,9 @@ object DocStream {
       .parquet(root)
     val toAppend = nFresh > 0
     if (toAppend && !started)
-      spark.range(1)
-        .select(lit(batchId).as("batch_id"), lit(null).cast("long").as("doc_id"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_admissions")
+      AtRest.append(spark.range(1)
+        .select(lit(batchId).as("batch_id"), lit(null).cast("long").as("doc_id")),
+        s"${namePrefix}_admissions")
     if (toAppend)
       DedupOps.appendToCorpusIndex(namePrefix, DedupOps.MinHashCorpusIndex(
         sketch.shingles.join(freshFinal, Seq("doc_id"), "left_semi"),
@@ -539,9 +517,8 @@ object DocStream {
     if (started)
       DedupOps.repairCorpusIndex(spark, namePrefix)
     if (toAppend || healed.limit(1).collect().nonEmpty)
-      freshFinal.unionByName(healed).select(lit(batchId).as("batch_id"), col("doc_id"))
-        .write.mode("append").format("parquet")
-        .saveAsTable(s"${namePrefix}_admissions")
+      AtRest.append(freshFinal.unionByName(healed)
+        .select(lit(batchId).as("batch_id"), col("doc_id")), s"${namePrefix}_admissions")
   }
 
   /** The frames one micro-batch caches or pins, released together in the
@@ -599,9 +576,8 @@ object DocStream {
   private def seedAdmissions(spark: org.apache.spark.sql.SparkSession,
                              namePrefix: String): Unit =
     if (!spark.catalog.tableExists(s"${namePrefix}_admissions"))
-      spark.table(s"${namePrefix}_shingles")
-        .select(lit(-1L).as("batch_id"), col("doc_id"))
-        .write.format("parquet").saveAsTable(s"${namePrefix}_admissions")
+      AtRest.append(spark.table(s"${namePrefix}_shingles")
+        .select(lit(-1L).as("batch_id"), col("doc_id")), s"${namePrefix}_admissions")
 
   /** Drain a (doc_id, text) document stream, flagging each doc's best
     * verified corpus near-duplicate (`dup_of`, `dup_jac` — null when none

@@ -1143,4 +1143,125 @@ class DedupSpec extends AnyFunSuite {
     assert(out(14L) == (14L, "train"), s"fresh: ${out(14L)}")
     assert(out.size == 4) // batch docs only — corpus assignments never re-emitted
   }
+
+  test("at-rest fault injection: a crash after any step of append or compact recovers to a fresh build") {
+    import graft.operators.{AtRest, CorpusOps, DedupOps, MultimodalOps}
+    import org.apache.spark.sql.DataFrame
+    val started = System.nanoTime()
+    // 20 docs over a shared vocabulary, so shingles recur across docs (a
+    // first-seen takedown re-attributes) and ids ≡ mod 5 are near-dups
+    val texts = (1L to 20L).map { i =>
+      i -> ((0 until 12).map(j => s"w${(i % 5) * 3 + j}") :+ s"u$i").mkString(" ")
+    }.toMap
+    def docs(ids: Seq[Long]): DataFrame = ids.map(i => (i, texts(i))).toDF("doc_id", "text")
+      .withColumn("n_chars", length(col("text")))
+    def rowHashes(df: DataFrame): Seq[Long] =
+      df.select(xxhash64(df.columns.sorted.toSeq.map(col): _*)).collect().map(_.getLong(0)).sorted.toSeq
+    // true when the step countdown fired inside `op`
+    def crashedAfter(k: Int)(op: => Unit): Boolean = {
+      AtRest.crashAfterStep.set(k)
+      try { op; false } catch { case _: AtRest.InjectedCrash => true }
+      finally AtRest.crashAfterStep.set(0)
+    }
+    def media(d: DataFrame) =
+      d.select(col("doc_id"), lit("image").as("kind"), col("text").cast("binary").as("payload"))
+    /** One family's lifecycle. `recover` heals a crashed append of `batch`;
+      * `fresh` is a from-scratch build over the surviving docs, or None when
+      * the family ranks appends under a frozen order — then the reference is
+      * a twin index given the same operations without a crash. */
+    final case class Family(name: String, tables: Seq[String], save: (String, DataFrame) => Unit,
+        append: (String, DataFrame) => Unit, recover: (String, DataFrame) => Unit,
+        remove: (String, DataFrame) => Unit, compact: (String, DataFrame) => Unit,
+        load: String => Seq[DataFrame], fresh: Option[DataFrame => Seq[DataFrame]])
+    val families = Seq(
+      Family("minhash", Seq("shingles", "bands"),
+        (p, d) => DedupOps.indexCorpus(d.select("doc_id", "text")).saveAsTables(p, 4),
+        (p, d) => DedupOps.appendToCorpusIndex(p, d.select("doc_id", "text")),
+        (p, _) => DedupOps.repairCorpusIndex(spark, p),
+        DedupOps.removeFromCorpusIndex, (p, _) => DedupOps.compactCorpusIndex(spark, p),
+        p => { val i = DedupOps.loadCorpusIndex(spark, p); Seq(i.shingles, i.bands) },
+        Some(d => { val i = DedupOps.indexCorpus(d.select("doc_id", "text")); Seq(i.shingles, i.bands) })),
+      Family("prefix", Seq("prefix", "df", "shingles"),
+        (p, d) => DedupOps.indexNgramPrefix(d, 0.5).saveAsTables(p, 4),
+        DedupOps.appendToNgramPrefixIndex, (p, _) => DedupOps.repairNgramPrefixIndex(spark, p),
+        DedupOps.removeFromNgramPrefixIndex, (p, _) => DedupOps.compactNgramPrefixIndex(spark, p),
+        p => { val i = DedupOps.loadNgramPrefixIndex(spark, p); Seq(i.prefix, i.df, i.shingles) },
+        None),
+      Family("containment", Seq("postings", "df", "shingles"),
+        (p, d) => DedupOps.indexNgramContainment(d.select("doc_id", "text"), 0.8).saveAsTables(p, 4),
+        DedupOps.appendToNgramContainmentIndex,
+        (p, _) => DedupOps.repairNgramContainmentIndex(spark, p),
+        DedupOps.removeFromNgramContainmentIndex,
+        (p, _) => DedupOps.compactNgramContainmentIndex(spark, p),
+        p => { val i = DedupOps.loadNgramContainmentIndex(spark, p); Seq(i.postings, i.df, i.shingles) },
+        None),
+      Family("firstseen", Seq("firstseen"),
+        (p, d) => CorpusOps.saveFirstSeenIndex(d, p, 4),
+        (p, d) => CorpusOps.appendToFirstSeenIndex(spark, p, d),
+        (p, d) => CorpusOps.appendToFirstSeenIndex(spark, p, d), // re-run
+        CorpusOps.removeFromFirstSeenIndex, CorpusOps.compactFirstSeenIndex(spark, _, _),
+        p => Seq(CorpusOps.loadFirstSeenIndex(spark, p)),
+        Some(d => Seq(CorpusOps.firstSeenOf(d)))),
+      Family("media", Seq("chunks"),
+        (p, d) => MultimodalOps.saveMediaPhashIndex(media(d), p, 4),
+        (p, d) => MultimodalOps.appendToMediaPhashIndex(spark, p, media(d)),
+        (p, d) => MultimodalOps.appendToMediaPhashIndex(spark, p, media(d)), // re-run
+        MultimodalOps.removeFromMediaPhashIndex,
+        (p, _) => MultimodalOps.compactMediaPhashIndex(spark, p),
+        p => Seq(MultimodalOps.loadMediaPhashChunks(spark, p)),
+        Some(d => {
+          MultimodalOps.saveMediaPhashIndex(media(d), "graft_fi_media_fresh", 4)
+          Seq(MultimodalOps.loadMediaPhashChunks(spark, "graft_fi_media_fresh"))
+        })))
+    var crashPoints = 0
+    for (f <- families) {
+      val (p, twin) = (s"graft_fi_${f.name}", s"graft_fi_${f.name}_twin")
+      def dropAll(): Unit = Seq(p, twin, "graft_fi_media_fresh")
+        .foreach(AtRest.dropFamily(spark, _, f.tables: _*))
+      // an operation on the index under test, mirrored on the twin uncrashed
+      def both(op: String => Unit): Unit = { op(p); if (f.fresh.isEmpty) op(twin) }
+      try {
+        dropAll()
+        var live = (1L to 8L).toVector
+        var nextId = 9L
+        both(f.save(_, docs(live)))
+        def check(what: String): Unit = {
+          val want = f.fresh.fold(f.load(twin))(_(docs(live)))
+          assert(f.load(p).map(rowHashes) == want.map(rowHashes), s"${f.name}: $what")
+        }
+        // append: a crash after step k = 1, 2, ... until an append completes
+        var k = 1
+        var crashed = true
+        while (crashed) {
+          val batch = docs(Seq(nextId, nextId + 1))
+          crashed = crashedAfter(k)(f.append(p, batch))
+          if (crashed) { crashPoints += 1; f.recover(p, batch) }
+          if (f.fresh.isEmpty) f.append(twin, batch)
+          live ++= Seq(nextId, nextId + 1)
+          nextId += 2
+          check(s"append, crash after step $k")
+          k += 1
+        }
+        // compact: each round takes one doc down, crashes after step k and
+        // recovers by compacting again
+        k = 1
+        crashed = true
+        while (crashed) {
+          val gone = live(k % live.size)
+          live = live.filterNot(_ == gone)
+          both(f.remove(_, Seq(gone).toDF("doc_id")))
+          crashed = crashedAfter(k)(f.compact(p, docs(live)))
+          if (crashed) { crashPoints += 1; f.compact(p, docs(live)) }
+          if (f.fresh.isEmpty) f.compact(twin, docs(live))
+          check(s"compact, crash after step $k")
+          k += 1
+        }
+      } finally dropAll()
+    }
+    // append: 2 writes in every family; compact: per table a staged write,
+    // a drop and a rename, then the tombstone drop (3 two-table families,
+    // 2 one-table ones)
+    assert(crashPoints == 5 * 2 + 3 * 7 + 2 * 4, s"crash points: $crashPoints")
+    info(f"$crashPoints crash points in ${(System.nanoTime() - started) / 1e9}%.1f s")
+  }
 }

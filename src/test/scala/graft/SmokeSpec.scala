@@ -85,6 +85,17 @@ class SmokeSpec extends AnyFunSuite {
       s"local checkpoints outside Tables.scala: $sites — pin through Tables.pin/pinEager")
   }
 
+  test("AtRest is the only site of the at-rest lifecycle's table swaps, tombstones and layouts") {
+    // each hand-written copy of the protocol restated its own swap, bucket
+    // columns and tombstone table; the tombstone needle ends in a quote so
+    // it matches code, not scaladoc
+    for (needle <- Seq("RENAME" + " TO", "_tombstones" + "\"", "bucketBy" + "(")) {
+      val sites = sourcesContaining(needle, "src/main")
+      assert(sites == Seq("AtRest.scala"),
+        s"'$needle' outside AtRest.scala: $sites — go through graft.operators.AtRest")
+    }
+  }
+
   test("PlanDump headline list stays in sync with the query inventory") {
     // no stale names (a renamed query must not silently drop its plan dump)
     val stale = PlanDump.headline.toSet -- SparkEntry.queries.keySet

@@ -67,6 +67,19 @@ class WarmStateSpec extends AnyFunSuite {
     Seq(innerRdd, outerRdd).foreach(_.unpersist(blocking = false))
   }
 
+  test("a pin's checkpoint RDD is named after the line that pinned, not after Tables") {
+    val Seq(lazyRdd) = Tables.pinnedRdds(Tables.pin(spark.range(5).toDF("id")))
+    val Seq(eagerRdd) = Tables.pinnedRdds(Tables.pinEager(spark.range(5).toDF("id")))
+    val Seq(warmRdd) = Tables.pinnedRdds(WarmState.pin(spark.range(5).toDF("id")))
+    // an RDD prints as `<class>[<id>] at <creation site>`
+    for (r <- Seq(lazyRdd, eagerRdd, warmRdd))
+      assert(r.toString.contains(" at localCheckpoint at WarmStateSpec.scala:"), r.toString)
+    // the caller's own call site is back once the pin is made
+    assert(spark.sparkContext.getLocalProperty("callSite.short") == null)
+    WarmState.releaseAll(spark)
+    Seq(lazyRdd, eagerRdd).foreach(_.unpersist(blocking = false))
+  }
+
   test("releaseAll clears the query warm caches; queries rebuild and answer identically") {
     val d = TestSpark.sf
     def run() = graft.SparkEntry.queries("q87_incremental_clusters")(spark, d)
