@@ -19,12 +19,13 @@ import org.apache.spark.storage.StorageLevel
   *  - APPEND ([[append]]) writes into the live table's catalog bucket
   *    spec, so only a family's save states a layout and every batch lands
   *    in the buckets the corpus-stationary joins rely on. A family with
-  *    derived tables writes its BASE table first; a derived table is a pure
-  *    function of the base, so the only reachable inconsistency after a
-  *    crash is base rows without derived rows, healed by [[repair]]. Do not
-  *    re-append the crashed batch: a blind retry duplicates its base rows.
-  *    Families fenced by a `_meta` row (written last) heal by re-running
-  *    the append, which anti-joins away what already committed.
+  *    derived tables writes its BASE table first ([[appendDerived]]); a
+  *    derived table is a pure function of the base, so the only reachable
+  *    inconsistency after a crash is base rows without derived rows,
+  *    healed by [[repair]]. Do not re-append the crashed batch: a blind
+  *    retry duplicates its base rows. Families fenced by a `_meta` row
+  *    (written last) heal by re-running the append, which anti-joins away
+  *    what already committed.
   *  - TAKEDOWN ([[tombstone]]) appends ids to the tombstone table, O(batch),
   *    never a rewrite. [[live]] hides them at read with an un-hinted
   *    anti-join: AQE broadcasts a takedown-sized side, which keeps the
@@ -39,8 +40,9 @@ import org.apache.spark.storage.StorageLevel
   *    between two swaps leaves tables that still agree under the pending
   *    tombstones (applying a tombstone to a compacted table is a no-op); a
   *    crash between a drop and its rename leaves the live name dangling,
-  *    and the next compaction [[heal]]s it before any new work. The same
-  *    heal-and-swap rewrites a `_meta` table in place ([[migrate]]).
+  *    and the next compaction ([[heal]]) or append heals it before any new
+  *    work. The same heal-and-swap rewrites a `_meta` table in place
+  *    ([[migrate]]).
   *
   * Every write, drop and rename goes through one private step, so the
   * fault-injection spec can crash after any of them ([[crashAfterStep]]). */
@@ -86,10 +88,36 @@ object AtRest {
     write(df, t, "overwrite",
       if (bucketCols.isEmpty) None else Some(BucketSpec(nBuckets, bucketCols, Nil)))
 
-  /** Append `df` to `t` in `t`'s catalog bucket spec (creating a plain
-    * table if `t` does not exist yet). */
-  def append(df: DataFrame, t: String): Unit =
-    write(df, t, "append", layoutOf(df.sparkSession, t))
+  /** `t`'s catalog bucket spec for an append. A live name that a crashed
+    * compaction or migration left dangling is first healed from its
+    * staging: appending beside the staging would create a batch-only
+    * table, which the next heal keeps and whose staged rewrite then
+    * overwrites the staging that held the whole table. A `bucketed` target
+    * must exist with a bucket spec; any other missing target is created
+    * plain. */
+  private def target(s: SparkSession, t: String, bucketed: Boolean): Option[BucketSpec] = {
+    healStaged(s, t, staged(t))
+    healStaged(s, t, migrating(t))
+    val layout = layoutOf(s, t)
+    if (bucketed && layout.isEmpty) throw new IllegalStateException(
+      s"$t is missing or carries no bucket spec — not a table written by a graft index save")
+    layout
+  }
+
+  /** Append `df` to `t` in `t`'s catalog bucket spec ([[target]]). */
+  def append(df: DataFrame, t: String, bucketed: Boolean = false): Unit =
+    write(df, t, "append", target(df.sparkSession, t, bucketed))
+
+  /** A family's admit: the `base` rows, then the bucketed `derived` rows
+    * computed from them — the order [[repair]] relies on. Both targets are
+    * resolved before the base write, so a missing or unbucketed derived
+    * table fails before anything lands. */
+  def appendDerived(base: (DataFrame, String), derived: (DataFrame, String)): Unit = {
+    val s = base._1.sparkSession
+    val (bl, dl) = (target(s, base._2, bucketed = false), target(s, derived._2, bucketed = true))
+    write(base._1, base._2, "append", bl)
+    write(derived._1, derived._2, "append", dl)
+  }
 
   def tombstone(p: String, docIds: DataFrame): Unit =
     append(docIds.select("doc_id"), tombstones(p))
@@ -131,13 +159,14 @@ object AtRest {
     * appended. Idempotent; returns the number of such doc_ids. */
   def repair(s: SparkSession, base: String, derived: String)
             (rows: DataFrame => DataFrame): Long = {
+    val layout = target(s, derived, bucketed = true)
     val b = s.table(base)
     val missing = b.select("doc_id").distinct()
       .join(s.table(derived).select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = missing.count()
-      if (n > 0) append(rows(b.join(missing, "doc_id")), derived)
+      if (n > 0) write(rows(b.join(missing, "doc_id")), derived, "append", layout)
       n
     } finally missing.unpersist()
   }
@@ -184,10 +213,11 @@ object AtRest {
   /** Drop every table family `p` with tables `ts` can leave behind — their
     * staging, `_meta` and its migration, the tombstones — and any managed
     * directory an earlier process orphaned (a fresh create would otherwise
-    * fail with LOCATION_ALREADY_EXISTS). */
+    * fail with LOCATION_ALREADY_EXISTS). Each staging goes before its live
+    * table, so a crashed drop leaves no staging for an append to heal. */
   def dropFamily(s: SparkSession, p: String, ts: String*): Unit =
-    for (t <- ts.flatMap(t => Seq(table(p, t), staged(table(p, t)))) ++
-        Seq(table(p, "meta"), migrating(table(p, "meta")), tombstones(p))) {
+    for (t <- ts.flatMap(t => Seq(staged(table(p, t)), table(p, t))) ++
+        Seq(migrating(table(p, "meta")), table(p, "meta"), tombstones(p))) {
       sql(s, s"DROP TABLE IF EXISTS $t")
       val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), t.toLowerCase)
       val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -264,6 +264,7 @@ object CorpusOps {
   def appendToFirstSeenIndex(s: SparkSession, namePrefix: String,
                              batch: DataFrame): Unit = {
     healMetaMigrate(s, namePrefix)
+    AtRest.heal(s, namePrefix, "firstseen") // before the anti-join reads it
     val span = batch.agg(min("doc_id"), max("doc_id")).head()
     if (span.isNullAt(0)) return // empty batch
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
@@ -302,7 +303,7 @@ object CorpusOps {
       .groupBy("g").agg(min("doc_id").as("first_doc"))
     AtRest.append(
       bmin.join(loadFirstSeenIndex(s, namePrefix).select("g"), Seq("g"), "left_anti"),
-      s"${namePrefix}_firstseen")
+      s"${namePrefix}_firstseen", bucketed = true)
     if (!replay) {
       import s.implicits._
       val mT = s"${namePrefix}_meta"
@@ -359,7 +360,7 @@ object CorpusOps {
     AtRest.compact(spark, namePrefix, "firstseen") { _ =>
       val dead = AtRest.dead(spark, namePrefix)
       val fs = spark.table(s"${namePrefix}_firstseen")
-      val live = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_anti")
+      val live = AtRest.live(spark, namePrefix, fs, "first_doc")
       val orphanG = fs.join(dead, fs("first_doc") === dead("doc_id"), "left_semi")
         .select("g").distinct()
       val survivorPostings = TextOps.withShingles(

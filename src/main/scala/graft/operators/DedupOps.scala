@@ -266,8 +266,8 @@ object DedupOps {
   def appendToCorpusIndex(namePrefix: String, sketch: MinHashCorpusIndex): Unit = {
     AtRest.requireNoPendingTombstone("appendToCorpusIndex", namePrefix,
       sketch.shingles, "compactCorpusIndex")
-    AtRest.append(sketch.shingles, s"${namePrefix}_shingles")
-    AtRest.append(sketch.bands, s"${namePrefix}_bands")
+    AtRest.appendDerived(sketch.shingles -> s"${namePrefix}_shingles",
+      sketch.bands -> s"${namePrefix}_bands")
   }
 
   /** Heal a corpus index after a crashed [[appendToCorpusIndex]]: bands are
@@ -763,9 +763,9 @@ object DedupOps {
     val shB = shingleBlocks(newDocs)
     shB.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      AtRest.append(shB.select("doc_id", "blk", "sh"), s"${namePrefix}_shingles")
-      AtRest.append(rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0)),
-        s"${namePrefix}_prefix")
+      AtRest.appendDerived(shB.select("doc_id", "blk", "sh") -> s"${namePrefix}_shingles",
+        rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0)) ->
+          s"${namePrefix}_prefix")
     } finally shB.unpersist()
   }
 
@@ -1013,8 +1013,8 @@ object DedupOps {
       .filter(col("n_sh") > 0)
     sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      AtRest.append(sh.select("doc_id", "n_sh", "sh"), s"${namePrefix}_shingles")
-      AtRest.append(rankedPostings(spark, namePrefix, sh), s"${namePrefix}_postings")
+      AtRest.appendDerived(sh.select("doc_id", "n_sh", "sh") -> s"${namePrefix}_shingles",
+        rankedPostings(spark, namePrefix, sh) -> s"${namePrefix}_postings")
     } finally sh.unpersist()
   }
 

@@ -341,6 +341,7 @@ object MultimodalOps {
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
     AtRest.requireNoPendingTombstone("appendToMediaPhashIndex", namePrefix, media,
       "compactMediaPhashIndex")
+    AtRest.heal(s, namePrefix, "chunks") // before the anti-join reads it
     val metaRow = s.table(s"${namePrefix}_meta")
       .filter(col("lo") === bLo && col("hi") === bHi).limit(1).collect().headOption
     metaRow match {
@@ -362,7 +363,7 @@ object MultimodalOps {
       .join(loadMediaPhashChunks(s, namePrefix).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
       .transform(Tables.pinEager(_)), // severs the read of the append target
-      s"${namePrefix}_chunks")
+      s"${namePrefix}_chunks", bucketed = true)
     if (metaRow.isEmpty) {
       val (n, fp) = mediaFingerprintOf(media)
       AtRest.append(Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")

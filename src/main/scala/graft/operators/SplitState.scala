@@ -103,10 +103,13 @@ object SplitState {
   private def pairsT(p: String) = AtRest.table(p, "pairs")
 
   /** Heal a `_meta` schema migration that crashed between drop and rename
-    * (see [[commitMeta]]) — called before every `_meta` read so the fence
-    * table is never observed missing. */
-  private def healMeta(s: SparkSession, p: String): Unit =
+    * (see [[commitMeta]]) and the tables a crashed [[compact]] left
+    * dangling — called before every `_meta` read, so neither the fence nor
+    * a table an operation then reads or appends to is observed missing. */
+  private def healMeta(s: SparkSession, p: String): Unit = {
     AtRest.healMigration(s, metaT(p))
+    AtRest.heal(s, p, "assign", "moves", "pairs")
+  }
 
   private def metaExists(s: SparkSession, p: String): Boolean = {
     healMeta(s, p)
@@ -362,7 +365,7 @@ object SplitState {
           "purge them, then retry")
       AtRest.append(rows.join(orphans, Seq("a", "b"), "left_anti")
         .transform(Tables.pinEager(_)), // severs the read of the append target
-        pairsT(namePrefix))
+        pairsT(namePrefix), bucketed = true)
     }
     commitMeta(s, namePrefix, next, Some((lo, hi)), "pairs",
       Some(pairFingerprint(pairs)))
@@ -636,8 +639,7 @@ object SplitState {
     * fence (a later operation committing the same seq would otherwise
     * silently legitimize the phantom moves). */
   def compact(s: SparkSession, namePrefix: String): Unit = {
-    AtRest.heal(s, namePrefix, "assign", "moves", "pairs")
-    val committed = committedSeq(s, namePrefix)
+    val committed = committedSeq(s, namePrefix) // heals first (healMeta)
     def live(df: DataFrame, key: String) = AtRest.live(s, namePrefix, df, key)
     val collapsed = s.table(assignT(namePrefix))
       .filter(col("seq") <= committed)
@@ -674,7 +676,7 @@ object SplitState {
     // table this write appends to — sever the lineage so the append never
     // re-lists its own source (batch-sized frame)
     AtRest.append(rows.join(orphans, Seq("doc_id"), "left_anti")
-      .transform(Tables.pinEager(_)), assignT(namePrefix))
+      .transform(Tables.pinEager(_)), assignT(namePrefix), bucketed = true)
   }
 
   /** The commit fence: the `_meta` row lands only after every data write

@@ -1256,12 +1256,32 @@ class DedupSpec extends AnyFunSuite {
           check(s"compact, crash after step $k")
           k += 1
         }
+        // a compaction crashed between a table's drop and its rename, then
+        // an append BEFORE the next compaction: the append must heal the
+        // live name from its staging, not create a batch-only table that
+        // the next compaction's staged write copies over the staging
+        val nTables = (k - 2) / 3 // a whole compaction ran k - 2 steps
+        for (i <- 0 until nTables) {
+          val gone = live(i)
+          live = live.filterNot(_ == gone)
+          both(f.remove(_, Seq(gone).toDF("doc_id")))
+          val dropStep = nTables + 2 * i + 1
+          assert(crashedAfter(dropStep)(f.compact(p, docs(live))), s"${f.name}: step $dropStep")
+          crashPoints += 1
+          if (f.fresh.isEmpty) f.compact(twin, docs(live))
+          val batch = docs(Seq(nextId, nextId + 1))
+          both(f.append(_, batch))
+          live ++= Seq(nextId, nextId + 1)
+          nextId += 2
+          both(f.compact(_, docs(live)))
+          check(s"append after a compaction crashed at drop $i, then compact")
+        }
       } finally dropAll()
     }
     // append: 2 writes in every family; compact: per table a staged write,
     // a drop and a rename, then the tombstone drop (3 two-table families,
-    // 2 one-table ones)
-    assert(crashPoints == 5 * 2 + 3 * 7 + 2 * 4, s"crash points: $crashPoints")
+    // 2 one-table ones); then one append after a crash at each table's drop
+    assert(crashPoints == 5 * 2 + 3 * 7 + 2 * 4 + 3 * 2 + 2 * 1, s"crash points: $crashPoints")
     info(f"$crashPoints crash points in ${(System.nanoTime() - started) / 1e9}%.1f s")
   }
 }
