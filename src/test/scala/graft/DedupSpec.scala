@@ -1278,6 +1278,17 @@ class DedupSpec extends AnyFunSuite {
         }
       } finally dropAll()
     }
+    // a bucketed table that lost its bucket spec fails the admit before
+    // the base write lands
+    try {
+      val sketch = DedupOps.indexCorpus(docs(1L to 4L).select("doc_id", "text"))
+      sketch.saveAsTables("graft_fi_plain", 4)
+      AtRest.save(sketch.bands, "graft_fi_plain_bands")
+      val n = spark.table("graft_fi_plain_shingles").count()
+      intercept[IllegalStateException](
+        DedupOps.appendToCorpusIndex("graft_fi_plain", docs(Seq(5L)).select("doc_id", "text")))
+      assert(spark.table("graft_fi_plain_shingles").count() == n)
+    } finally AtRest.dropFamily(spark, "graft_fi_plain", "shingles", "bands")
     // append: 2 writes in every family; compact: per table a staged write,
     // a drop and a rename, then the tombstone drop (3 two-table families,
     // 2 one-table ones); then one append after a crash at each table's drop
