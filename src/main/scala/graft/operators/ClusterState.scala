@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * A production takedown or ingest pipeline restarts between batches; the
   * session-cached label frame the bench harness keeps is not a production
   * answer. This state round-trips parquet ([[save]]/[[ClusterState.load]],
-  * mirroring [[IvfIndex.save]]) and carries BOTH tables the maintenance
+  * like [[IvfIndex.save]]) and carries BOTH tables the maintenance
   * operations need:
   *
   *  - `labels` — the (node, label) component assignment, exactly what
@@ -32,43 +32,16 @@ import org.apache.spark.sql.functions._
   */
 final case class ClusterState(labels: DataFrame, edges: DataFrame) {
 
-  /** Persist both tables under `root`, VERSIONED: each save writes a fresh
-    * `v<N>/` directory and prunes superseded versions only after both
-    * writes commit. The naive overwrite-in-place is a trap this API must
-    * not have: the nightly loop is load → insert/remove → save TO THE SAME
-    * ROOT, and the maintenance plan still READS the loaded files while the
-    * save runs — an in-place overwrite deletes them mid-scan
-    * (FAILED_READ_FILE, caught by ClusterStateSpec's loop test). Versioning
-    * also gives crash atomicity for free: a save that dies between the two
-    * table writes leaves a version without both `_SUCCESS` markers, which
-    * [[ClusterState.load]] skips in favor of the last complete one
-    * (single writer assumed, as with [[DedupOps.appendToCorpusIndex]]; a
-    * transactional table format subsumes this at cluster scale). NOTE:
-    * when this state derives from [[ClusterState.load]] of the same root,
-    * the pruning invalidates THIS instance's DataFrames — save is the
-    * terminal step of a maintenance cycle; re-[[ClusterState.load]] to
+  /** Persist both tables under `root` as one versioned commit
+    * ([[AtRest.savePath]]): the nightly loop's load → insert/remove → save
+    * to the same root reads the loaded version while it writes the next.
+    * The superseded version is deleted after the commit, so when this
+    * state derives from [[ClusterState.load]] of the same root, save is
+    * the terminal step of a maintenance cycle; re-[[ClusterState.load]] to
     * continue. At 100 TB also key the edge layout on `label` so
     * [[remove]]'s affected-component join prunes at the file level. */
-  def save(root: String): Unit = {
-    val spark = labels.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // next = max over ALL version dirs (committed or crashed-partial) + 1:
-    // a partial left by a dead save is garbage to prune, never a directory
-    // to write into
-    val next = ClusterState.allVersions(fs, root).maxOption.getOrElse(-1L) + 1
-    labels.write.mode("overwrite").parquet(s"$root/v$next/labels")
-    edges.write.mode("overwrite").parquet(s"$root/v$next/edges")
-    // prune: every VERSION directory but the one just committed (stale
-    // fulls AND crashed partials). Match the same v<digits> shape
-    // allVersions/load recognize — a looser startsWith("v") would also
-    // destroy non-version sibling data a user parked under root
-    val gone = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-      .map(_.getPath).filter { p =>
-        p.getName.matches("v\\d+") && p.getName != s"v$next"
-      }
-    gone.foreach(p => fs.delete(p, true))
-  }
+  def save(root: String): Unit =
+    AtRest.savePath(labels.sparkSession, root, "labels" -> labels, "edges" -> edges)
 
   /** Materialize both tables and cut lineage — the in-session stand-in for
     * a saved-and-reloaded state (what Bench warms so timed trials pay only
@@ -159,38 +132,9 @@ object ClusterState {
     ClusterState(labels, edges)
   }
 
-  /** Load the newest fully-committed version written by
-    * [[ClusterState.save]] (both tables carry `_SUCCESS`; a version a
-    * crashed save left half-written is skipped). */
+  /** Load the newest version [[ClusterState.save]] committed. */
   def load(spark: SparkSession, root: String): ClusterState = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = committedVersions(fs, root).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"ClusterState.load: no fully-committed version under $root"))
-    ClusterState(
-      spark.read.parquet(s"$root/v$v/labels"),
-      spark.read.parquet(s"$root/v$v/edges"))
-  }
-
-  /** Every `v<N>` directory under `root`, committed or not. */
-  private def allVersions(fs: org.apache.hadoop.fs.FileSystem,
-                          root: String): Seq[Long] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(rootPath)) Seq.empty
-    else fs.listStatus(rootPath).toSeq.map(_.getPath)
-      .filter(_.getName.matches("v\\d+"))
-      .map(_.getName.drop(1).toLong)
-  }
-
-  /** Version numbers under `root` whose BOTH table writes committed. */
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                root: String): Seq[Long] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    allVersions(fs, root).filter { v =>
-      val p = new org.apache.hadoop.fs.Path(rootPath, s"v$v")
-      fs.exists(new org.apache.hadoop.fs.Path(p, "labels/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "edges/_SUCCESS"))
-    }
+    val t = AtRest.loadPath(spark, root)
+    ClusterState(t("labels"), t("edges"))
   }
 }

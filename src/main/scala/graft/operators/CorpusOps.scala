@@ -131,7 +131,6 @@ object CorpusOps {
   def saveFirstSeenIndex(docs: DataFrame, namePrefix: String,
                          nBuckets: Int = 32): Unit = {
     val s = docs.sparkSession
-    AtRest.save(firstSeenOf(docs), s"${namePrefix}_firstseen", nBuckets, Seq("g"))
     import s.implicits._
     val span = docs.agg(min("doc_id"), max("doc_id")).head()
     val rows = if (span.isNullAt(0)) Seq.empty[(Long, Long, Long, Long)]
@@ -139,7 +138,8 @@ object CorpusOps {
                  val (n, fp) = contentFingerprint(docs)
                  Seq((span.getLong(0), span.getLong(1), n, fp))
                }
-    AtRest.save(rows.toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
+    AtRest.save(namePrefix, AtRest.Version("firstseen", firstSeenOf(docs), nBuckets, Seq("g")),
+      AtRest.Version("meta", rows.toDF("lo", "hi", "n", "fp")))
   }
 
   /** Order-independent content fingerprint of a (doc_id, text) frame's
@@ -170,8 +170,10 @@ object CorpusOps {
     * compaction, which is the only point the index can see surviving
     * TEXT again (it stores one (g, first_doc) row per shingle, not
     * postings). */
-  def loadFirstSeenIndex(s: SparkSession, namePrefix: String): DataFrame =
+  def loadFirstSeenIndex(s: SparkSession, namePrefix: String): DataFrame = {
+    AtRest.open(s, namePrefix)
     AtRest.live(s, namePrefix, s.table(s"${namePrefix}_firstseen"), "first_doc")
+  }
 
   /** The highest doc_id ever admitted to the index (save + appends), read
     * from `_meta` at O(1) — None for an index written before the meta
@@ -179,19 +181,13 @@ object CorpusOps {
     * takedown, so the watermark only advances; compaction does not touch
     * it. */
   def firstSeenWatermark(s: SparkSession, namePrefix: String): Option[Long] = {
-    healMetaMigrate(s, namePrefix)
+    AtRest.open(s, namePrefix)
     if (!s.catalog.tableExists(s"${namePrefix}_meta")) None
     else s.table(s"${namePrefix}_meta").agg(max("hi")).head() match {
       case r if r.isNullAt(0) => None
       case r                  => Some(r.getLong(0))
     }
   }
-
-  /** Heal a `_meta` schema migration ([[appendToFirstSeenIndex]]) that
-    * crashed between drop and rename, so the watermark table is never
-    * observed missing. */
-  private def healMetaMigrate(s: SparkSession, namePrefix: String): Unit =
-    AtRest.healMigration(s, s"${namePrefix}_meta")
 
   /** O(batch) novelty of a NEW batch against an existing first-seen index:
     * [[ngramNovelty]]'s output for exactly the batch docs, without touching
@@ -263,8 +259,7 @@ object CorpusOps {
     * divergent shingles. */
   def appendToFirstSeenIndex(s: SparkSession, namePrefix: String,
                              batch: DataFrame): Unit = {
-    healMetaMigrate(s, namePrefix)
-    AtRest.heal(s, namePrefix, "firstseen") // before the anti-join reads it
+    AtRest.open(s, namePrefix)
     val span = batch.agg(min("doc_id"), max("doc_id")).head()
     if (span.isNullAt(0)) return // empty batch
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
@@ -301,25 +296,24 @@ object CorpusOps {
     val bmin = TextOps.withShingles(batch)
       .select(col("doc_id"), explode(col("sh")).as("g"))
       .groupBy("g").agg(min("doc_id").as("first_doc"))
-    AtRest.append(
+    AtRest.append(namePrefix, "firstseen",
       bmin.join(loadFirstSeenIndex(s, namePrefix).select("g"), Seq("g"), "left_anti"),
-      s"${namePrefix}_firstseen", bucketed = true)
+      bucketed = true)
     if (!replay) {
       import s.implicits._
       val mT = s"${namePrefix}_meta"
       // a PRE-UPGRADE index's `_meta` has only (lo, hi) — appending the
       // 4-column fingerprint row would throw, so the first new admission
-      // migrates it in place (existing rows gain null n/fp, preserving
-      // their span-only exemption), via staging + drop + rename so the
-      // watermark table never risks a non-atomic overwrite (ADVICE r12;
-      // a crash between drop and rename is healed at the entry check).
+      // migrates it (existing rows gain null n/fp, preserving their
+      // span-only exemption) in one at-rest commit, so the watermark table
+      // never risks a non-atomic overwrite (ADVICE r12)
       if (s.catalog.tableExists(mT) &&
           !s.table(mT).schema.fieldNames.contains("fp"))
-        AtRest.migrate(s, mT, s.table(mT)
+        AtRest.rewrite(s, namePrefix, Seq("meta" -> s.table(mT)
           .withColumn("n", lit(null).cast("long"))
-          .withColumn("fp", lit(null).cast("long")))
+          .withColumn("fp", lit(null).cast("long"))), fold = false)
       val (n, fp) = contentFingerprint(batch)
-      AtRest.append(Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"), mT)
+      AtRest.append(namePrefix, "meta", Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"))
     }
   }
 

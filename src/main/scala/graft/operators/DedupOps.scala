@@ -225,10 +225,9 @@ object DedupOps {
       // both writes read the shingle pipeline; cache it for the duration
       // so the expensive sketch aggregation runs once, not twice
       shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        AtRest.save(shingles, s"${namePrefix}_shingles")
-        AtRest.save(bands, s"${namePrefix}_bands", nBuckets, Seq("bucket_key", "band", "bsig"))
-      } finally shingles.unpersist()
+      try AtRest.save(namePrefix, AtRest.Version("shingles", shingles),
+        AtRest.Version("bands", bands, nBuckets, Seq("bucket_key", "band", "bsig")))
+      finally shingles.unpersist()
     }
   }
 
@@ -236,19 +235,20 @@ object DedupOps {
     * any pending tombstones ([[removeFromCorpusIndex]]) applied — removed
     * docs are invisible to every consumer without waiting for
     * [[compactCorpusIndex]]. */
-  def loadCorpusIndex(s: SparkSession, namePrefix: String): MinHashCorpusIndex =
+  def loadCorpusIndex(s: SparkSession, namePrefix: String): MinHashCorpusIndex = {
+    AtRest.open(s, namePrefix)
     MinHashCorpusIndex(
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_bands")))
+  }
 
   /** APPEND a new batch to an at-rest corpus index written by
     * [[MinHashCorpusIndex.saveAsTables]] — the admit step of the nightly
     * ingest loop (dedup the batch against the index, then append the
     * survivors). Cost is O(batch): only the batch's shingles/bands are
     * computed and written; the existing corpus files are untouched. The
-    * band append declares the SAME bucketing spec — read from the existing
-    * table's catalog metadata, so a caller can never silently mismatch it —
-    * and new files land in the correct buckets: subsequent batch joins stay
+    * band append lands in the table's recorded bucket spec, so a caller
+    * can never silently mismatch it: subsequent batch joins stay
     * corpus-stationary (zero corpus-side shuffle — parity with a full
     * rebuild is spec-asserted). Callers own batch-vs-corpus doc_id
     * uniqueness. Shingles are the base table, bands derive from them:
@@ -264,10 +264,10 @@ object DedupOps {
   /** [[appendToCorpusIndex]] of an already-computed batch sketch: its
     * shingle rows, then its band rows, are appended as they are. */
   def appendToCorpusIndex(namePrefix: String, sketch: MinHashCorpusIndex): Unit = {
+    AtRest.open(sketch.shingles.sparkSession, namePrefix)
     AtRest.requireNoPendingTombstone("appendToCorpusIndex", namePrefix,
       sketch.shingles, "compactCorpusIndex")
-    AtRest.appendDerived(sketch.shingles -> s"${namePrefix}_shingles",
-      sketch.bands -> s"${namePrefix}_bands")
+    AtRest.appendDerived(namePrefix, "shingles" -> sketch.shingles, "bands" -> sketch.bands)
   }
 
   /** Heal a corpus index after a crashed [[appendToCorpusIndex]]: bands are
@@ -277,7 +277,7 @@ object DedupOps {
     * Idempotent (a healthy index repairs zero docs). Returns the number of
     * repaired doc_ids. */
   def repairCorpusIndex(spark: SparkSession, namePrefix: String): Long =
-    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_bands")(bandedSignatures)
+    AtRest.repair(spark, namePrefix, "shingles", "bands")(bandedSignatures)
 
   /** TAKEDOWN for the at-rest corpus index — the index-side half of the
     * deletion story ([[ClusterState.remove]] is the cluster-side half):
@@ -295,7 +295,7 @@ object DedupOps {
     AtRest.tombstone(namePrefix, docIds)
 
   /** Fold accumulated tombstones into the index files: rewrite both tables
-    * without the tombstoned docs and swap them in ([[AtRest.compact]]). */
+    * without the tombstoned docs in one commit ([[AtRest.compact]]). */
   def compactCorpusIndex(spark: SparkSession, namePrefix: String): Unit =
     AtRest.compact(spark, namePrefix, "shingles", "bands")()
 
@@ -715,13 +715,12 @@ object DedupOps {
     def saveAsTables(namePrefix: String, nBuckets: Int = 32): Unit = {
       val s = prefix.sparkSession
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        AtRest.save(df, s"${namePrefix}_df", nBuckets, Seq("blk", "t"))
-        AtRest.save(prefix, s"${namePrefix}_prefix", nBuckets, Seq("blk", "t"))
-        AtRest.save(shingles, s"${namePrefix}_shingles")
-        import s.implicits._
-        AtRest.save(Seq(threshold).toDF("threshold"), s"${namePrefix}_meta")
-      } finally df.unpersist()
+      import s.implicits._
+      try AtRest.save(namePrefix, AtRest.Version("df", df, nBuckets, Seq("blk", "t")),
+        AtRest.Version("prefix", prefix, nBuckets, Seq("blk", "t")),
+        AtRest.Version("shingles", shingles),
+        AtRest.Version("meta", Seq(threshold).toDF("threshold")))
+      finally df.unpersist()
     }
   }
 
@@ -732,12 +731,14 @@ object DedupOps {
     * order table is NOT tombstone-filtered: it carries no doc rows, only
     * the frozen (blk, t) → df ranking every stored prefix was computed
     * under. */
-  def loadNgramPrefixIndex(s: SparkSession, namePrefix: String): NgramPrefixIndex =
+  def loadNgramPrefixIndex(s: SparkSession, namePrefix: String): NgramPrefixIndex = {
+    AtRest.open(s, namePrefix)
     NgramPrefixIndex(
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_prefix")),
       s.table(s"${namePrefix}_df"),
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
       s.table(s"${namePrefix}_meta").head().getDouble(0))
+  }
 
   /** APPEND a new batch of (doc_id, text, n_chars) docs to an at-rest
     * prefix index — the admit step of the nightly loop. O(batch): the
@@ -757,15 +758,15 @@ object DedupOps {
     * doc_id uniqueness. */
   def appendToNgramPrefixIndex(namePrefix: String, newDocs: DataFrame): Unit = {
     val spark = newDocs.sparkSession
+    AtRest.open(spark, namePrefix)
     AtRest.requireNoPendingTombstone("appendToNgramPrefixIndex", namePrefix, newDocs,
       "compactNgramPrefixIndex")
     val t0 = spark.table(s"${namePrefix}_meta").head().getDouble(0)
     val shB = shingleBlocks(newDocs)
     shB.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      AtRest.appendDerived(shB.select("doc_id", "blk", "sh") -> s"${namePrefix}_shingles",
-        rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0)) ->
-          s"${namePrefix}_prefix")
+      AtRest.appendDerived(namePrefix, "shingles" -> shB.select("doc_id", "blk", "sh"),
+        "prefix" -> rankedPrefix(shB, spark.table(s"${namePrefix}_df"), genThreshold(t0)))
     } finally shB.unpersist()
   }
 
@@ -777,10 +778,11 @@ object DedupOps {
     * recomputes to zero rows again). Returns the number of doc_ids
     * examined as missing. */
   def repairNgramPrefixIndex(spark: SparkSession, namePrefix: String): Long = {
+    AtRest.open(spark, namePrefix)
     val t0 = spark.table(s"${namePrefix}_meta").head().getDouble(0)
     // the shingle table stores blk (derived from n_chars at index time,
     // not recoverable otherwise); n_sh re-derives from sh
-    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_prefix")(sh =>
+    AtRest.repair(spark, namePrefix, "shingles", "prefix")(sh =>
       rankedPrefix(sh.withColumn("n_sh", size(col("sh"))),
         spark.table(s"${namePrefix}_df"), genThreshold(t0)))
   }
@@ -801,9 +803,8 @@ object DedupOps {
 
   /** Fold accumulated tombstones into the prefix-index files: rewrite the
     * two DOC-KEYED tables (prefix, shingles) without the tombstoned docs
-    * — same bucket spec, read from catalog metadata — swap them in, drop
-    * the tombstone table. The `df` ORDER TABLE IS NEVER REWRITTEN: it is
-    * the frozen total order every surviving prefix was ranked under;
+    * in one commit ([[AtRest.compact]]). The `df` ORDER TABLE IS NEVER
+    * REWRITTEN: it is the frozen total order every surviving prefix was ranked under;
     * recomputing df over the survivors would change that order and
     * silently invalidate every stored prefix (recall would no longer be
     * exact). Re-freeze only via a full [[indexNgramPrefix]] rebuild. */
@@ -954,13 +955,12 @@ object DedupOps {
     def saveAsTables(namePrefix: String, nBuckets: Int = 32): Unit = {
       val s = postings.sparkSession
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        AtRest.save(df, s"${namePrefix}_df", nBuckets, Seq("t"))
-        AtRest.save(postings, s"${namePrefix}_postings", nBuckets, Seq("t"))
-        AtRest.save(shingles, s"${namePrefix}_shingles")
-        import s.implicits._
-        AtRest.save(Seq(threshold).toDF("threshold"), s"${namePrefix}_meta")
-      } finally df.unpersist()
+      import s.implicits._
+      try AtRest.save(namePrefix, AtRest.Version("df", df, nBuckets, Seq("t")),
+        AtRest.Version("postings", postings, nBuckets, Seq("t")),
+        AtRest.Version("shingles", shingles),
+        AtRest.Version("meta", Seq(threshold).toDF("threshold")))
+      finally df.unpersist()
     }
   }
 
@@ -989,12 +989,14 @@ object DedupOps {
     * tables. The `df` order table is not filtered — it carries no doc
     * rows, and (see the index scaladoc) a stale order can only cost
     * candidate selectivity, never exactness. */
-  def loadNgramContainmentIndex(s: SparkSession, namePrefix: String): NgramContainmentIndex =
+  def loadNgramContainmentIndex(s: SparkSession, namePrefix: String): NgramContainmentIndex = {
+    AtRest.open(s, namePrefix)
     NgramContainmentIndex(
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_postings")),
       s.table(s"${namePrefix}_df"),
       AtRest.live(s, namePrefix, s.table(s"${namePrefix}_shingles")),
       s.table(s"${namePrefix}_meta").head().getDouble(0))
+  }
 
   /** APPEND a batch to an at-rest containment index — O(batch): the
     * batch's postings rank under the FROZEN df order (unseen tokens
@@ -1005,6 +1007,7 @@ object DedupOps {
     * batch-vs-corpus doc_id uniqueness. */
   def appendToNgramContainmentIndex(namePrefix: String, newDocs: DataFrame): Unit = {
     val spark = newDocs.sparkSession
+    AtRest.open(spark, namePrefix)
     AtRest.requireNoPendingTombstone("appendToNgramContainmentIndex", namePrefix,
       newDocs, "compactNgramContainmentIndex")
     val sh = TextOps.withShingles(newDocs.select("doc_id", "text"))
@@ -1013,8 +1016,8 @@ object DedupOps {
       .filter(col("n_sh") > 0)
     sh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      AtRest.appendDerived(sh.select("doc_id", "n_sh", "sh") -> s"${namePrefix}_shingles",
-        rankedPostings(spark, namePrefix, sh) -> s"${namePrefix}_postings")
+      AtRest.appendDerived(namePrefix, "shingles" -> sh.select("doc_id", "n_sh", "sh"),
+        "postings" -> rankedPostings(spark, namePrefix, sh))
     } finally sh.unpersist()
   }
 
@@ -1034,7 +1037,7 @@ object DedupOps {
     * append postings for exactly the doc_ids that have shingle rows but
     * no posting rows. Idempotent; returns the missing-doc count. */
   def repairNgramContainmentIndex(spark: SparkSession, namePrefix: String): Long =
-    AtRest.repair(spark, s"${namePrefix}_shingles", s"${namePrefix}_postings")(
+    AtRest.repair(spark, namePrefix, "shingles", "postings")(
       rankedPostings(spark, namePrefix, _))
 
   /** TAKEDOWN for the containment index: tombstone append, O(batch),
@@ -1045,7 +1048,7 @@ object DedupOps {
     AtRest.tombstone(namePrefix, docIds)
 
   /** Fold tombstones into the containment-index files: rewrite the two
-    * doc-keyed tables without the dead docs and swap. The `df` order
+    * doc-keyed tables without the dead docs in one commit. The `df` order
     * table is never rewritten — stored positions were priced under it,
     * and (index scaladoc) a stale order is a selectivity matter only. */
   def compactNgramContainmentIndex(spark: SparkSession, namePrefix: String): Unit =
@@ -1581,9 +1584,6 @@ object DedupOps {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   WarmState.registerCache(() => splitStateCache.clear())
 
-  private[graft] def dropSplitTables(s: SparkSession, p: String): Unit =
-    AtRest.dropFamily(s, p, "assign", "moves", "pairs")
-
   /** q119: init on the corpus (ids ≤ 90% watermark, q118's split point),
     * then assign the batch through the state against the UPDATED labels
     * (updateClusters over the batch-incident pairs — the committed-merge
@@ -1594,7 +1594,7 @@ object DedupOps {
   private def q119SplitPrefix(s: SparkSession, d: String): String =
     splitStateCache.computeIfAbsent((s, stateKey(d, "q119")), _ => {
       val p = "graft_split_assign_" + math.abs(stateKey(d, "q119").hashCode)
-      dropSplitTables(s, p)
+      AtRest.dropFamily(s, p)
       val (thr, corpusPairs, corpusLabels, idx) = q118State(s, d)
       val docs = Tables.spread(Tables.load(s, d, "documents")).select("doc_id", "text", "n_chars")
       val corpusIds = docs.filter(col("doc_id") <= thr).select("doc_id")
@@ -1621,7 +1621,7 @@ object DedupOps {
   private def q120SplitPrefix(s: SparkSession, d: String): String =
     splitStateCache.computeIfAbsent((s, stateKey(d, "q120")), _ => {
       val p = "graft_split_resolve_" + math.abs(stateKey(d, "q120").hashCode)
-      dropSplitTables(s, p)
+      AtRest.dropFamily(s, p)
       val docs = Tables.spread(Tables.load(s, d, "documents")).select("doc_id")
       val st = corpusClusterState(s, d)
       SplitState.init(s, p, docs, st.labels)
@@ -1647,7 +1647,7 @@ object DedupOps {
     splitStateCache.computeIfAbsent((s, stateKey(d, "q123")), _ => {
       import org.apache.spark.sql.expressions.Window
       val p = "graft_split_aging_" + math.abs(stateKey(d, "q123").hashCode)
-      dropSplitTables(s, p)
+      AtRest.dropFamily(s, p)
       val (thr, _, corpusLabels, _) = q118State(s, d)
       val corpusIds = Tables.spread(Tables.load(s, d, "documents"))
         .select("doc_id").filter(col("doc_id") <= thr)

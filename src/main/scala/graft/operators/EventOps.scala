@@ -228,7 +228,9 @@ object EventOps {
     "q82_unpivot" -> ((s, d) => {
       dailyPivot(s, d)
         .unpivot(Array(col("day")), eventTypes.map(col).toArray, "event_type", "n")
-        .transform(df => Tables.sortSmall(df, "day", "event_type"))
+        // a global sort, not sortSmall: the day groups grow with the span
+        // the events cover, as q40's hour groups do
+        .orderBy("day", "event_type")
     }),
 
     // As-of lookup as a window: for every event, the value of the user's

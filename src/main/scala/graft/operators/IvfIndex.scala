@@ -98,7 +98,7 @@ final case class IvfIndex(centroids: DataFrame, assigned: DataFrame) {
     * table search scans). Like [[append]] drift, heavy deletion can skew
     * occupancy — the same [[imbalanceFactor]] monitoring applies; emptied
     * cells simply stop matching probes. In-session form; a SAVED index is
-    * purged through [[IvfIndex.removeAtRest]] (staged rewrite) — the leg
+    * purged through [[IvfIndex.removeAtRest]] (a versioned commit) — the leg
     * the nightly takedown loop drives. */
   def remove(vecIds: DataFrame): IvfIndex =
     IvfIndex(centroids,
@@ -119,11 +119,10 @@ final case class IvfIndex(centroids: DataFrame, assigned: DataFrame) {
     if (row.isNullAt(0)) 1.0 else row.getDouble(0) / row.getDouble(1)
   }
 
-  /** Persist both index tables (overwrite). */
-  def save(root: String): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$root/centroids")
-    assigned.write.mode("overwrite").parquet(s"$root/assigned")
-  }
+  /** Persist both index tables under `root` as one versioned commit
+    * ([[AtRest.savePath]]). */
+  def save(root: String): Unit =
+    AtRest.savePath(centroids.sparkSession, root, "centroids" -> centroids, "assigned" -> assigned)
 }
 
 object IvfIndex {
@@ -407,57 +406,18 @@ object IvfIndex {
   }
 
   def load(spark: SparkSession, root: String): IvfIndex = {
-    healAssigned(spark, root)
-    IvfIndex(
-      spark.read.parquet(s"$root/centroids"),
-      spark.read.parquet(s"$root/assigned"))
+    val t = AtRest.loadPath(spark, root)
+    IvfIndex(t("centroids"), t("assigned"))
   }
 
   /** Durable TAKEDOWN — the vector-side half of a document deletion
     * (VERDICT r12 demand 3: a removed doc's embedding must not outlive it
-    * in a SAVED index, the way the tombstone story already guarantees for
-    * every shingle/cluster/split artifact). Loads the at-rest assignment,
-    * anti-joins the victims ([[IvfIndex.remove]]'s one-pass shape) and
-    * commits the survivors through a STAGED write — survivors land in
-    * `assigned_next` (reading the live files, so no self-overwrite
-    * lineage hazard), then delete + rename. A crash between the two is
-    * healed at [[load]]: a completed staging (parquet `_SUCCESS`) is
-    * committed, a partial one discarded — the plain overwrite
-    * [[IvfIndex.save]] uses for full rebuilds would lose the whole
-    * assignment on a mid-write crash here, and takedown is the one
-    * operation that must never be able to do that. Centroids are frozen
-    * (cells just thin out), so survivors' search results are
-    * bit-identical and the removed vector is unreachable at ANY nprobe —
-    * it is gone from the only table search scans. */
-  def removeAtRest(spark: SparkSession, root: String, vecIds: DataFrame): Unit = {
-    healAssigned(spark, root)
-    spark.read.parquet(s"$root/assigned")
-      .join(vecIds.select("vec_id"), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$root/assigned_next")
-    val (fs, live, next) = assignedPaths(spark, root)
-    fs.delete(live, true)
-    require(fs.rename(next, live),
-      s"IvfIndex.removeAtRest: rename $next -> $live failed")
-  }
-
-  /** Heal a takedown that crashed between staging commit and rename: a
-    * COMPLETE `assigned_next` (its `_SUCCESS` marker exists) supersedes
-    * the live directory; an incomplete one is a dead partial write and is
-    * discarded. */
-  private def healAssigned(spark: SparkSession, root: String): Unit = {
-    val (fs, live, next) = assignedPaths(spark, root)
-    if (fs.exists(next)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))) {
-        fs.delete(live, true)
-        require(fs.rename(next, live),
-          s"IvfIndex.healAssigned: rename $next -> $live failed")
-      } else fs.delete(next, true)
-    }
-  }
-
-  private def assignedPaths(spark: SparkSession, root: String) = {
-    val live = new org.apache.hadoop.fs.Path(s"$root/assigned")
-    val next = new org.apache.hadoop.fs.Path(s"$root/assigned_next")
-    (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live, next)
-  }
+    * in a SAVED index). Commits the at-rest assignment minus the victims
+    * ([[IvfIndex.remove]]'s one-pass shape) as the next version
+    * ([[AtRest.savePath]]). Centroids are frozen (cells just thin out), so
+    * survivors' search results are bit-identical and the removed vector is
+    * unreachable at ANY nprobe. */
+  def removeAtRest(spark: SparkSession, root: String, vecIds: DataFrame): Unit =
+    AtRest.savePath(spark, root, "assigned" ->
+      load(spark, root).assigned.join(vecIds.select("vec_id"), Seq("vec_id"), "left_anti"))
 }

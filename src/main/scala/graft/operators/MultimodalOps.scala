@@ -255,7 +255,7 @@ object MultimodalOps {
   private def q125IndexPrefix(s: SparkSession, d: String): (Long, String) =
     mediaIndexCache.computeIfAbsent((s, mediaStateKey(d)), _ => {
       val p = "graft_media_phash_" + math.abs(mediaStateKey(d).hashCode)
-      AtRest.dropFamily(s, p, "chunks")
+      AtRest.dropFamily(s, p)
       val docs = Tables.spread(Tables.load(s, d, "documents"))
       val thr = math.floor(
         docs.agg(max("doc_id")).collect()(0).getLong(0) * 0.9).toLong
@@ -306,28 +306,32 @@ object MultimodalOps {
                           nBuckets: Int = 32): Unit = {
     val s = media.sparkSession
     import s.implicits._
-    AtRest.save(phashChunks(mediaFingerprint(media)), s"${namePrefix}_chunks",
-      nBuckets, Seq("c", "ch"))
     val span = media.agg(min("doc_id"), max("doc_id")).head()
     val rows = if (span.isNullAt(0)) Seq.empty[(Long, Long, Long, Long)]
                else {
                  val (n, fp) = mediaFingerprintOf(media)
                  Seq((span.getLong(0), span.getLong(1), n, fp))
                }
-    AtRest.save(rows.toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
+    AtRest.save(namePrefix,
+      AtRest.Version("chunks", phashChunks(mediaFingerprint(media)), nBuckets, Seq("c", "ch")),
+      AtRest.Version("meta", rows.toDF("lo", "hi", "n", "fp")))
   }
 
   /** Highest doc_id ever admitted — the append-only fence, O(1). */
-  def mediaPhashWatermark(s: SparkSession, namePrefix: String): Option[Long] =
+  def mediaPhashWatermark(s: SparkSession, namePrefix: String): Option[Long] = {
+    AtRest.open(s, namePrefix)
     if (!s.catalog.tableExists(s"${namePrefix}_meta")) None
     else s.table(s"${namePrefix}_meta").agg(max("hi")).head() match {
       case r if r.isNullAt(0) => None
       case r                  => Some(r.getLong(0))
     }
+  }
 
   /** The live chunk table: pending tombstones dropped at read. */
-  def loadMediaPhashChunks(s: SparkSession, namePrefix: String): DataFrame =
+  def loadMediaPhashChunks(s: SparkSession, namePrefix: String): DataFrame = {
+    AtRest.open(s, namePrefix)
     AtRest.live(s, namePrefix, s.table(s"${namePrefix}_chunks"))
+  }
 
   /** Admit a batch: O(batch) fingerprint + chunk append, `_meta` span
     * LAST. Crash replay re-runs against the anti-join (already-admitted
@@ -339,9 +343,9 @@ object MultimodalOps {
     val span = media.agg(min("doc_id"), max("doc_id")).head()
     if (span.isNullAt(0)) return
     val (bLo, bHi) = (span.getLong(0), span.getLong(1))
+    AtRest.open(s, namePrefix)
     AtRest.requireNoPendingTombstone("appendToMediaPhashIndex", namePrefix, media,
       "compactMediaPhashIndex")
-    AtRest.heal(s, namePrefix, "chunks") // before the anti-join reads it
     val metaRow = s.table(s"${namePrefix}_meta")
       .filter(col("lo") === bLo && col("hi") === bHi).limit(1).collect().headOption
     metaRow match {
@@ -359,14 +363,14 @@ object MultimodalOps {
               s"watermark $wm — ids are append-only and never reused")
         }
     }
-    AtRest.append(phashChunks(mediaFingerprint(media))
+    AtRest.append(namePrefix, "chunks", phashChunks(mediaFingerprint(media))
       .join(loadMediaPhashChunks(s, namePrefix).select("doc_id").distinct(),
         Seq("doc_id"), "left_anti")
       .transform(Tables.pinEager(_)), // severs the read of the append target
-      s"${namePrefix}_chunks", bucketed = true)
+      bucketed = true)
     if (metaRow.isEmpty) {
       val (n, fp) = mediaFingerprintOf(media)
-      AtRest.append(Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"), s"${namePrefix}_meta")
+      AtRest.append(namePrefix, "meta", Seq((bLo, bHi, n, fp)).toDF("lo", "hi", "n", "fp"))
     }
   }
 

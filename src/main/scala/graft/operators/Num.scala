@@ -106,12 +106,4 @@ object Num {
     * tiers differ only in Spark-side buffer width, never in value. */
   def dsumSql(e: String, scale: Int = 2): String =
     s"CAST(round(sum(CAST($e AS DECIMAL(12,2))), $scale) AS DOUBLE)"
-
-  /** DuckDB oracle text for [[Tier.dsumDec]] (expression already decimal). */
-  def dsumDecSql(e: String, scale: Int = 2): String =
-    s"CAST(round(sum($e), $scale) AS DOUBLE)"
-
-  /** DuckDB oracle text for [[Tier.davg]]. */
-  def davgSql(e: String, scale: Int = 4): String =
-    s"round(CAST(sum(CAST($e AS DECIMAL(12,2))) AS DOUBLE) / count($e), $scale)"
 }

@@ -42,8 +42,8 @@ import graft.Tables
   *    allowed to move a doc ([[resolve]]) records every move with its
   *    reason (`realign` / `quarantine_drain`). COMMITTED history is never
   *    dropped; [[compact]] only purges uncommitted orphan rows a crashed
-  *    resolve left below no fence (staged rewrite — the audit trail is
-  *    never exposed to a non-atomic in-place overwrite).
+  *    resolve left below no fence (one at-rest commit — the audit trail
+  *    is never exposed to a non-atomic in-place overwrite).
   *  - `{p}_pairs(a, b, jac, seq)` — the VERIFIED near-dup pairs the
   *    assignments were derived FROM (the sixth at-rest artifact, VERDICT
   *    r12 demand 1): day-0 corpus pairs at init time, each batch's
@@ -102,17 +102,11 @@ object SplitState {
   private def movesT(p: String) = AtRest.table(p, "moves")
   private def pairsT(p: String) = AtRest.table(p, "pairs")
 
-  /** Heal a `_meta` schema migration that crashed between drop and rename
-    * (see [[commitMeta]]) and the tables a crashed [[compact]] left
-    * dangling — called before every `_meta` read, so neither the fence nor
-    * a table an operation then reads or appends to is observed missing. */
-  private def healMeta(s: SparkSession, p: String): Unit = {
-    AtRest.healMigration(s, metaT(p))
-    AtRest.heal(s, p, "assign", "moves", "pairs")
-  }
-
+  /** Opens the family ([[AtRest.open]]) — called before every `_meta`
+    * read, so the fence and every table an operation then reads or appends
+    * to are the durable ones. */
   private def metaExists(s: SparkSession, p: String): Boolean = {
-    healMeta(s, p)
+    AtRest.open(s, p)
     s.catalog.tableExists(metaT(p))
   }
 
@@ -202,9 +196,9 @@ object SplitState {
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .withColumn("split", splitOf(coalesce(col("label"), col("doc_id"))))
       .select(col("doc_id"), col("split"), lit(0L).as("seq"))
-    AtRest.save(rows, assignT(namePrefix), nBuckets, Seq("doc_id"))
-    commitMeta(s, namePrefix, 0L, Some((span.getLong(0), span.getLong(1))),
-      "init", Some(idFingerprint(docs.select("doc_id"))))
+    AtRest.save(namePrefix, AtRest.Version("assign", rows, nBuckets, Seq("doc_id")),
+      AtRest.Version("meta", metaRow(s, 0L, Some((span.getLong(0), span.getLong(1))),
+        "init", Some(idFingerprint(docs.select("doc_id"))))))
   }
 
   /** Record splits for a NEW batch of docs, consulting the state FIRST —
@@ -352,7 +346,7 @@ object SplitState {
     val rows = pairs.select(col("a"), col("b"),
       col("jac").cast("double").as("jac"), lit(next).as("seq"))
     if (!s.catalog.tableExists(pairsT(namePrefix))) {
-      AtRest.save(rows, pairsT(namePrefix), nBuckets, Seq("a"))
+      AtRest.save(namePrefix, AtRest.Version("pairs", rows, nBuckets, Seq("a")))
     } else {
       val orphans = s.table(pairsT(namePrefix))
         .filter(col("seq") === next).select("a", "b")
@@ -363,9 +357,9 @@ object SplitState {
           s"(${stray.headOption.map(r => s"${r.get(0)}, ${r.get(1)}")}) belong " +
           "to a different abandoned operation — run SplitState.compact to " +
           "purge them, then retry")
-      AtRest.append(rows.join(orphans, Seq("a", "b"), "left_anti")
+      AtRest.append(namePrefix, "pairs", rows.join(orphans, Seq("a", "b"), "left_anti")
         .transform(Tables.pinEager(_)), // severs the read of the append target
-        pairsT(namePrefix), bucketed = true)
+        bucketed = true)
     }
     commitMeta(s, namePrefix, next, Some((lo, hi)), "pairs",
       Some(pairFingerprint(pairs)))
@@ -441,6 +435,7 @@ object SplitState {
     * the documented reads-low caveat applies permanently. Idempotent;
     * returns the number of synthesized rows. */
   def backfillQuarantineEnters(s: SparkSession, namePrefix: String): Long = {
+    AtRest.open(s, namePrefix)
     if (!s.catalog.tableExists(assignT(namePrefix))) return 0L
     import org.apache.spark.sql.expressions.Window
     val committed = committedSeq(s, namePrefix)
@@ -470,7 +465,7 @@ object SplitState {
         lit("quarantine_enter").as("reason"), col("seq"))
       .transform(Tables.pinEager(_)) // severs the read of the append target
     val n = missing.count()
-    if (n > 0) AtRest.append(missing, movesT(namePrefix))
+    if (n > 0) AtRest.append(namePrefix, "moves", missing)
     n
   }
 
@@ -485,8 +480,8 @@ object SplitState {
         s.table(movesT(namePrefix)).filter(col("seq") === next).select("doc_id"),
         Seq("doc_id"), "left_anti")
         .transform(Tables.pinEager(_)) // severs the read of the append target
-    AtRest.append(dedup.select("doc_id", "from_split", "to_split", "reason", "seq"),
-      movesT(namePrefix))
+    AtRest.append(namePrefix, "moves",
+      dedup.select("doc_id", "from_split", "to_split", "reason", "seq"))
   }
 
   /** Per-doc quarantine ENTRY seq: the durable `quarantine_enter` audit
@@ -543,6 +538,7 @@ object SplitState {
     * (doc_id, entered_seq, drained_seq, age, entered_ts, drained_ts,
     * age_ms). */
   def quarantineAgingWallClock(s: SparkSession, namePrefix: String): DataFrame = {
+    AtRest.open(s, namePrefix)
     val meta = s.table(metaT(namePrefix))
     val ts =
       (if (meta.schema.fieldNames.contains("ts")) meta.select(col("seq"), col("ts"))
@@ -630,16 +626,15 @@ object SplitState {
   /** Collapse assignment history to one row per surviving doc (its latest
     * committed split), purge uncommitted orphan rows from crashed or
     * abandoned attempts, fold tombstones into the assign AND pairs files,
-    * and drop the tombstone table LAST — [[AtRest.rewrite]]'s staged swap
-    * for every rewritten table, so `_moves`, whose whole contract is
-    * durability, is never exposed to a non-atomic in-place overwrite
+    * in one [[AtRest.rewrite]] commit, so `_moves`, whose whole contract
+    * is durability, is never exposed to a non-atomic in-place overwrite
     * (ADVICE r12). `_meta` (the watermark and commit fence) is
     * deliberately untouched; `_moves` keeps all COMMITTED history — the
     * rewrite only purges orphan rows a crashed resolve left below no
     * fence (a later operation committing the same seq would otherwise
     * silently legitimize the phantom moves). */
   def compact(s: SparkSession, namePrefix: String): Unit = {
-    val committed = committedSeq(s, namePrefix) // heals first (healMeta)
+    val committed = committedSeq(s, namePrefix) // opens first
     def live(df: DataFrame, key: String) = AtRest.live(s, namePrefix, df, key)
     val collapsed = s.table(assignT(namePrefix))
       .filter(col("seq") <= committed)
@@ -653,7 +648,7 @@ object SplitState {
           live(live(s.table(pairsT(namePrefix)).filter(col("seq") <= committed), "a"), "b")
             .select("a", "b", "jac", "seq")) ++
         Option.when(s.catalog.tableExists(movesT(namePrefix)))("moves" ->
-          s.table(movesT(namePrefix)).filter(col("seq") <= committed)))
+          s.table(movesT(namePrefix)).filter(col("seq") <= committed)), fold = true)
   }
 
   /** Append `rows` (doc_id, split, seq=`next`) into the assign table,
@@ -675,8 +670,8 @@ object SplitState {
     // EAGER checkpoint: `rows` (and the orphan anti-join) reads the very
     // table this write appends to — sever the lineage so the append never
     // re-lists its own source (batch-sized frame)
-    AtRest.append(rows.join(orphans, Seq("doc_id"), "left_anti")
-      .transform(Tables.pinEager(_)), assignT(namePrefix), bucketed = true)
+    AtRest.append(namePrefix, "assign", rows.join(orphans, Seq("doc_id"), "left_anti")
+      .transform(Tables.pinEager(_)), bucketed = true)
   }
 
   /** The commit fence: the `_meta` row lands only after every data write
@@ -686,25 +681,29 @@ object SplitState {
     * [[quarantineAgingWallClock]] (VERDICT r13 item 8; informational
     * only — never consulted by a guard, so commit-time skew is
     * harmless). A PRE-UPGRADE family whose `_meta` lacks columns is
-    * migrated in place first (existing rows gain nulls — span-only
-    * exemption preserved) by [[AtRest.migrate]], so the fence table never
+    * migrated first (existing rows gain nulls — span-only exemption
+    * preserved) by one [[AtRest.rewrite]] commit, so the fence table never
     * risks a non-atomic overwrite (ADVICE r12). */
   private def commitMeta(s: SparkSession, namePrefix: String, seq: Long,
                          span: Option[(Long, Long)], kind: String,
                          fingerprint: Option[(Long, Long)]): Unit = {
-    import s.implicits._
     val mT = metaT(namePrefix)
-    healMeta(s, namePrefix)
-    if (s.catalog.tableExists(mT)) {
+    if (metaExists(s, namePrefix)) {
       val have = s.table(mT).schema.fieldNames.toSet
       val missing = Seq("n", "fp", "ts").filterNot(have)
       if (missing.nonEmpty)
-        AtRest.migrate(s, mT, missing.foldLeft(s.table(mT))(
-          (df, c) => df.withColumn(c, lit(null).cast("long"))))
+        AtRest.rewrite(s, namePrefix, Seq("meta" -> missing.foldLeft(s.table(mT))(
+          (df, c) => df.withColumn(c, lit(null).cast("long")))), fold = false)
     }
-    AtRest.append(Seq((seq, span.map(_._1), span.map(_._2), kind,
-        fingerprint.map(_._1), fingerprint.map(_._2),
-        System.currentTimeMillis()))
-      .toDF("seq", "lo", "hi", "kind", "n", "fp", "ts"), mT)
+    AtRest.append(namePrefix, "meta", metaRow(s, seq, span, kind, fingerprint))
+  }
+
+  /** The `_meta` row of operation `seq`, stamped now. */
+  private def metaRow(s: SparkSession, seq: Long, span: Option[(Long, Long)], kind: String,
+                      fingerprint: Option[(Long, Long)]): DataFrame = {
+    import s.implicits._
+    Seq((seq, span.map(_._1), span.map(_._2), kind,
+        fingerprint.map(_._1), fingerprint.map(_._2), System.currentTimeMillis()))
+      .toDF("seq", "lo", "hi", "kind", "n", "fp", "ts")
   }
 }

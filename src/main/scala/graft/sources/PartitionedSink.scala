@@ -42,7 +42,10 @@ object PartitionedSink {
     * into ~`targetBytes`-sized files. Daily micro-batch / streaming sinks
     * accrete small files; unchecked, a 100 TB table becomes metadata-bound
     * (every scan lists millions of objects). Run as a maintenance pass per
-    * closed partition; overwrite keeps it idempotent. Returns file count. */
+    * closed partition; overwrite keeps it idempotent. Returns file count.
+    * This keeps its own rename swap rather than an [[graft.operators.AtRest]]
+    * layout commit: readers discover the `load_date=` directories directly,
+    * so a layout file could not commit a partition they would see. */
   def compactPartition(spark: SparkSession, root: String, date: String,
                        targetBytes: Long = 128L * 1024 * 1024): Int = {
     val path = new org.apache.hadoop.fs.Path(s"$root/$LoadDateCol=$date")

@@ -106,6 +106,7 @@ object DocStream {
         val pins = new BatchPins
         try {
           val b = pins.cache(EventStream.onCaller(spark, batch).select("doc_id", "text"))
+          AtRest.open(spark, namePrefix) // the manifest and index reads below see the layout
           // tombstone fail-fast FIRST — before any audit or index write
           // claims anything about this batch; the checkpoint resumes here
           AtRest.requireNoPendingTombstone("admissionDrain", namePrefix, b,
@@ -203,31 +204,10 @@ object DocStream {
         val b = EventStream.onCaller(spark, batch).select("doc_id", "text", "n_chars")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+          Seq(splitPrefix, indexPrefix).foreach(AtRest.open(spark, _)) // before the fence reads
           val span = b.agg(min("doc_id"), max("doc_id")).head()
           if (!span.isNullAt(0)) {
-            val exactFence = spark.table(s"${splitPrefix}_meta")
-              .filter(col("lo") === span.getLong(0) &&
-                col("hi") === span.getLong(1) && col("kind") === "apply")
-              .limit(1).collect().nonEmpty
-            // changed-batching replay: every batch id at-or-below the
-            // watermark AND already committed means the docs landed
-            // under DIFFERENT spans (a rebatched redeploy) — heal, don't
-            // die on the watermark guard (ADVICE r12). "Committed"
-            // includes since-TOMBSTONED docs: load() hides them, but a
-            // fully-committed rebatched replay containing one must still
-            // read as committed, not die on the watermark guard with the
-            // misleading ids-reused message (ADVICE r13).
-            val fence = exactFence ||
-              (graft.operators.SplitState.watermark(spark, splitPrefix)
-                  .exists(_ >= span.getLong(1)) && {
-                val committed = graft.operators.SplitState
-                  .load(spark, splitPrefix).select("doc_id")
-                b.select("doc_id")
-                  .join(AtRest.withTombstoned(spark, splitPrefix, committed),
-                    Seq("doc_id"), "left_anti")
-                  .limit(1).collect().isEmpty
-              })
-            if (fence) {
+            if (splitCommitted(spark, splitPrefix, b, span)) {
               // HEAL path: splits committed; make the index whole — but
               // never resurrect a since-TOMBSTONED doc into the index (it
               // is absent from the shingle table because it was taken
@@ -342,24 +322,11 @@ object DocStream {
         val b = EventStream.onCaller(spark, batch).select("doc_id", "kind", "payload")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+          (splitPrefix.toSeq :+ indexPrefix).foreach(AtRest.open(spark, _)) // before the fence reads
           val span = b.agg(min("doc_id"), max("doc_id")).head()
           if (!span.isNullAt(0)) (splitPrefix, clusterRoot) match {
             case (Some(sp), Some(cr)) =>
-              val exactFence = spark.table(s"${sp}_meta")
-                .filter(col("lo") === span.getLong(0) &&
-                  col("hi") === span.getLong(1) && col("kind") === "apply")
-                .limit(1).collect().nonEmpty
-              val fence = exactFence ||
-                (graft.operators.SplitState.watermark(spark, sp)
-                    .exists(_ >= span.getLong(1)) && {
-                  val committed = graft.operators.SplitState
-                    .load(spark, sp).select("doc_id")
-                  b.select("doc_id")
-                    .join(AtRest.withTombstoned(spark, sp, committed),
-                      Seq("doc_id"), "left_anti")
-                    .limit(1).collect().isEmpty
-                })
-              if (fence) {
+              if (splitCommitted(spark, sp, b, span)) {
                 // HEAL: splits committed; make the phash index whole by
                 // appending only the docs it is MISSING (tombstoned docs
                 // count as present — a takedown is not a crashed append;
@@ -431,6 +398,24 @@ object DocStream {
       .mode("overwrite")
       .parquet(root)
   }
+
+  /** Whether batch `b` (doc_id span `span`) already committed its split
+    * assignment under `sp`: its exact apply fence exists, or every batch id
+    * is at or below the watermark and already committed — a
+    * changed-batching replay (a rebatched redeploy) whose docs landed under
+    * DIFFERENT spans heals instead of dying on the watermark guard (ADVICE
+    * r12). "Committed" includes since-TOMBSTONED docs: load() hides them,
+    * but such a replay must not die with the misleading ids-reused message
+    * (ADVICE r13). */
+  private def splitCommitted(spark: SparkSession, sp: String, b: DataFrame, span: Row): Boolean =
+    spark.table(s"${sp}_meta")
+      .filter(col("lo") === span.getLong(0) && col("hi") === span.getLong(1) && col("kind") === "apply")
+      .limit(1).collect().nonEmpty ||
+      (graft.operators.SplitState.watermark(spark, sp).exists(_ >= span.getLong(1)) &&
+        b.select("doc_id")
+          .join(AtRest.withTombstoned(spark, sp,
+            graft.operators.SplitState.load(spark, sp).select("doc_id")), Seq("doc_id"), "left_anti")
+          .limit(1).collect().isEmpty)
 
   /** One non-completed-replay micro-batch of [[admissionDrain]]: sketch,
     * pairs, verdict, audit, admit. `started` = a marker row exists but no
@@ -507,9 +492,8 @@ object DocStream {
       .parquet(root)
     val toAppend = nFresh > 0
     if (toAppend && !started)
-      AtRest.append(spark.range(1)
-        .select(lit(batchId).as("batch_id"), lit(null).cast("long").as("doc_id")),
-        s"${namePrefix}_admissions")
+      AtRest.append(namePrefix, "admissions", spark.range(1)
+        .select(lit(batchId).as("batch_id"), lit(null).cast("long").as("doc_id")))
     if (toAppend)
       DedupOps.appendToCorpusIndex(namePrefix, DedupOps.MinHashCorpusIndex(
         sketch.shingles.join(freshFinal, Seq("doc_id"), "left_semi"),
@@ -517,8 +501,8 @@ object DocStream {
     if (started)
       DedupOps.repairCorpusIndex(spark, namePrefix)
     if (toAppend || healed.limit(1).collect().nonEmpty)
-      AtRest.append(freshFinal.unionByName(healed)
-        .select(lit(batchId).as("batch_id"), col("doc_id")), s"${namePrefix}_admissions")
+      AtRest.append(namePrefix, "admissions", freshFinal.unionByName(healed)
+        .select(lit(batchId).as("batch_id"), col("doc_id")))
   }
 
   /** The frames one micro-batch caches or pins, released together in the
@@ -574,10 +558,12 @@ object DocStream {
     * never-reused fence, and a purged id must stay fenced after its
     * tombstone compacts away. One corpus scan per index LIFETIME. */
   private def seedAdmissions(spark: org.apache.spark.sql.SparkSession,
-                             namePrefix: String): Unit =
+                             namePrefix: String): Unit = {
+    AtRest.open(spark, namePrefix)
     if (!spark.catalog.tableExists(s"${namePrefix}_admissions"))
-      AtRest.append(spark.table(s"${namePrefix}_shingles")
-        .select(lit(-1L).as("batch_id"), col("doc_id")), s"${namePrefix}_admissions")
+      AtRest.append(namePrefix, "admissions", spark.table(s"${namePrefix}_shingles")
+        .select(lit(-1L).as("batch_id"), col("doc_id")))
+  }
 
   /** Drain a (doc_id, text) document stream, flagging each doc's best
     * verified corpus near-duplicate (`dup_of`, `dup_jac` — null when none

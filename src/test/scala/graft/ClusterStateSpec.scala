@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{ClusterState, DedupPipeline}
+import graft.operators.{AtRest, ClusterState, DedupPipeline}
 
 /** Durable cluster-state lifecycle: build → save → load (FRESH session) →
   * insert/remove must equal the in-session result, which itself must equal
@@ -223,10 +223,7 @@ class ClusterStateSpec extends AnyFunSuite {
         .count() == 0, s"removed doc $victimId still pairs through the index")
       assert(ClusterState.load(spark, root).labels
         .filter(col("node") === victimId).count() == 0)
-    } finally {
-      for (t <- Seq("prefix", "df", "shingles", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS nightly_np_$t")
-    }
+    } finally AtRest.dropFamily(spark, "nightly_np")
   }
 
   test("nightly loop, ALL SEVEN at-rest artifacts plus the served IVF index: takedown reaches every artifact including the vector and media sides; quarantine drains") {
@@ -486,35 +483,26 @@ class ClusterStateSpec extends AnyFunSuite {
       assert(pairSet(SplitState.loadPairs(spark.newSession(), "n4_sp")) ==
         pairSet(DedupOps.ngramJaccardPairsOf(
           allDocs.filter(col("doc_id") =!= 2L), 0.5)))
-    } finally {
-      for (t <- Seq("shingles", "bands", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS n4_mh_$t")
-      for (t <- Seq("prefix", "df", "shingles", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS n4_np_$t")
-      for (t <- Seq("firstseen", "firstseen_compact", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS n4_fs_$t")
-      for (t <- Seq("chunks", "chunks_compact", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS n4_mp_$t")
-      for (t <- Seq("assign", "assign_compact", "meta", "meta_migrate",
-          "moves", "moves_compact", "pairs", "pairs_compact", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS n4_sp_$t")
-    }
+    } finally Seq("n4_mh", "n4_np", "n4_fs", "n4_mp", "n4_sp").foreach(AtRest.dropFamily(spark, _))
   }
 
   test("versioned save: half-written version is skipped by load; next save prunes it") {
     val st = ClusterState.build(Seq((1L, 2L), (10L, 11L)).toDF("a", "b"))
     val root = java.nio.file.Files.createTempDirectory("graft-cluster-crash").toString
-    st.save(root) // v0, complete
+    st.save(root) // layout 0: labels and edges at v0
     // simulate a save that died between the two table writes: v1 has
-    // labels but no committed edges
-    st.labels.write.parquet(s"$root/v1/labels")
-    val loaded = ClusterState.load(spark, root) // must fall back to v0
+    // labels but no edges and no layout file
+    st.labels.write.parquet(s"$root/labels/v1")
+    val loaded = ClusterState.load(spark, root) // must read layout 0
     assert(labelMap(loaded.labels) == Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L))
-    // the recovery save commits a fresh complete version and prunes BOTH
-    // the stale v0 and the crashed partial v1
+    // the recovery save commits layout 1 over the crashed partial v1 and
+    // prunes the stale v0 and layout 0
     loaded.remove(Seq(10L).toDF("node")).save(root)
-    val dirs = new java.io.File(root).listFiles().map(_.getName).toSet
-    assert(dirs == Set("v2"), s"unexpected versions left: $dirs")
+    def names(d: String) = new java.io.File(s"$root/$d").listFiles().map(_.getName)
+      .filterNot(_.endsWith(".crc")).toSet
+    assert(names("") == Set("_layout", "labels", "edges"))
+    assert(names("labels") == Set("v1") && names("edges") == Set("v1") && names("_layout") == Set("1"),
+      s"unexpected versions left: ${names("labels")} ${names("edges")} ${names("_layout")}")
     assert(labelMap(ClusterState.load(spark, root).labels) == Map(1L -> 1L, 2L -> 1L))
   }
 

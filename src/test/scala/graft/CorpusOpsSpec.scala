@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.CorpusOps
+import graft.operators.{AtRest, CorpusOps}
 
 class CorpusOpsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -156,15 +156,8 @@ class CorpusOpsSpec extends AnyFunSuite {
         q.collect()
         assert(q.queryExecution.executedPlan.toString.contains("Bucketed: true"))
       } finally spark.conf.set(bcKey, prevBc)
-    } finally
-      for (t <- Seq("firstseen", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS graft_fs_$t")
+    } finally AtRest.dropFamily(spark, "graft_fs")
   }
-
-  private def dropFsTables(prefix: String): Unit =
-    for (t <- Seq("firstseen", "firstseen_compact", "meta", "meta_migrate",
-        "tombstones"))
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t")
 
   test("first-seen takedown: interim drop semantics, compact re-attributes to next-senior survivor, parity with from-scratch") {
     // doc 0 introduces x1x2x3 (shared with doc 2), x2x3x4, x3x4x5 (its own);
@@ -206,7 +199,7 @@ class CorpusOpsSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       assert(noveltyRows(CorpusOps.noveltyVsIndex(spark, "graft_fst", probe2)) ==
         noveltyRows(CorpusOps.noveltyVsIndex(CorpusOps.firstSeenOf(survivors), probe2)))
-    } finally dropFsTables("graft_fst")
+    } finally AtRest.dropFamily(spark, "graft_fst")
   }
 
   test("first-seen guards: out-of-order append and novelty fail fast; crashed-append re-run passes; tombstoned id rejected") {
@@ -246,7 +239,7 @@ class CorpusOpsSpec extends AnyFunSuite {
         CorpusOps.appendToFirstSeenIndex(spark, "graft_fsg",
           Seq((10L, "e1 e2 e3")).toDF("doc_id", "text")))
       assert(e3.getMessage.contains("tombstone"))
-    } finally dropFsTables("graft_fsg")
+    } finally AtRest.dropFamily(spark, "graft_fsg")
   }
 
   test("first-seen legacy _meta (span-only) migrates on the first new admission instead of crashing the append") {
@@ -255,10 +248,8 @@ class CorpusOpsSpec extends AnyFunSuite {
       CorpusOps.saveFirstSeenIndex(corpus, "graft_fsl", nBuckets = 2)
       // rewrite _meta in the PRE-UPGRADE shape: (lo, hi) only — the state
       // an index built before the fingerprint columns existed is in
-      val legacy = spark.table("graft_fsl_meta").select("lo", "hi")
-        .localCheckpoint(true)
-      spark.sql("DROP TABLE graft_fsl_meta")
-      legacy.write.format("parquet").saveAsTable("graft_fsl_meta")
+      AtRest.rewrite(spark, "graft_fsl", Seq("meta" -> spark.table("graft_fsl_meta").select("lo", "hi")),
+        fold = false)
       // the first admission to the legacy index must migrate, not throw a
       // column-count AnalysisException (ADVICE r12)
       val b = Seq((10L, "p1 p2 p3")).toDF("doc_id", "text")
@@ -278,32 +269,6 @@ class CorpusOpsSpec extends AnyFunSuite {
         CorpusOps.appendToFirstSeenIndex(spark, "graft_fsl",
           Seq((10L, "DIVERGED q1")).toDF("doc_id", "text")))
       assert(eFp.getMessage.contains("fingerprint"))
-      // crash between the migration's drop and rename: healed at entry
-      spark.table("graft_fsl_meta").write.format("parquet")
-        .saveAsTable("graft_fsl_meta_migrate")
-      spark.sql("DROP TABLE graft_fsl_meta")
-      assert(CorpusOps.firstSeenWatermark(spark, "graft_fsl").contains(10L))
-      assert(spark.catalog.tableExists("graft_fsl_meta"))
-    } finally dropFsTables("graft_fsl")
-  }
-
-  test("first-seen compact crash-heal: dangling _compact staging is renamed back before new work") {
-    val corpus = Seq((0L, "h1 h2 h3 h4")).toDF("doc_id", "text")
-    try {
-      CorpusOps.saveFirstSeenIndex(corpus, "graft_fsc", nBuckets = 2)
-      val before = spark.table("graft_fsc_firstseen").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
-      // simulate a crash between DROP and RENAME: live name missing, data
-      // safe in the staging table
-      spark.table("graft_fsc_firstseen").write.mode("overwrite")
-        .format("parquet").bucketBy(2, "g")
-        .saveAsTable("graft_fsc_firstseen_compact")
-      spark.sql("DROP TABLE graft_fsc_firstseen")
-      CorpusOps.compactFirstSeenIndex(spark, "graft_fsc",
-        corpus.limit(0)) // no tombstones: heal, then no-op
-      assert(spark.table("graft_fsc_firstseen").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet == before)
-      assert(!spark.catalog.tableExists("graft_fsc_firstseen_compact"))
-    } finally dropFsTables("graft_fsc")
+    } finally AtRest.dropFamily(spark, "graft_fsl")
   }
 }

@@ -347,8 +347,7 @@ class DedupSpec extends AnyFunSuite {
       assert(!sawExchange,
         s"corpus side shuffles between its bucketed scan and the candidate join:\n$plan")
     } finally spark.conf.set(bcKey, prevBc)
-    spark.sql("DROP TABLE IF EXISTS graft_mh_idx_shingles")
-    spark.sql("DROP TABLE IF EXISTS graft_mh_idx_bands")
+    graft.operators.AtRest.dropFamily(spark, "graft_mh_idx")
   }
 
   test("dedupAgainstCorpus rejects thresholds below the LSH recall floor; empty batch is a no-op") {
@@ -551,17 +550,13 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("pending"))
     DedupOps.compactCorpusIndex(spark, "graft_rm_idx")
     DedupOps.appendToCorpusIndex("graft_rm_idx", readd) // now legal
-    // crash-heal: simulate a compaction that died between DROP and RENAME
-    // (live name gone, data in _compact) — the next compact restores it
-    spark.table("graft_rm_idx_bands").write.mode("overwrite").format("parquet")
-      .bucketBy(4, "bucket_key", "band", "bsig")
-      .saveAsTable("graft_rm_idx_bands_compact")
+    // the catalog loses a name (as a new process would): the next entry
+    // point re-registers it from the family's layout
     spark.sql("DROP TABLE graft_rm_idx_bands")
     DedupOps.compactCorpusIndex(spark, "graft_rm_idx")
     assert(spark.catalog.tableExists("graft_rm_idx_bands"))
     assert(pairs(DedupOps.loadCorpusIndex(spark, "graft_rm_idx")) == expect)
-    spark.sql("DROP TABLE IF EXISTS graft_rm_idx_shingles")
-    spark.sql("DROP TABLE IF EXISTS graft_rm_idx_bands")
+    graft.operators.AtRest.dropFamily(spark, "graft_rm_idx")
   }
 
   test("ngramJaccardPairsIncident == full thresholded pairs filtered to incident endpoints") {
@@ -638,8 +633,7 @@ class DedupSpec extends AnyFunSuite {
         assert(smj.queryExecution.executedPlan.toString.contains("Bucketed: true"))
       } finally spark.conf.set(bcKey, prevBc)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_mh_app_shingles")
-      spark.sql("DROP TABLE IF EXISTS graft_mh_app_bands")
+      graft.operators.AtRest.dropFamily(spark, "graft_mh_app")
     }
   }
 
@@ -665,8 +659,7 @@ class DedupSpec extends AnyFunSuite {
       // ...and a second repair is a no-op (idempotent on a healthy index)
       assert(DedupOps.repairCorpusIndex(spark, "graft_mh_rep") === 0L)
     } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_mh_rep_shingles")
-      spark.sql("DROP TABLE IF EXISTS graft_mh_rep_bands")
+      graft.operators.AtRest.dropFamily(spark, "graft_mh_rep")
     }
   }
 
@@ -695,11 +688,6 @@ class DedupSpec extends AnyFunSuite {
   private def npCanon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.select("a", "b", "jac").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-  private def dropNpTables(prefix: String): Unit =
-    for (t <- Seq("prefix", "df", "shingles", "meta", "tombstones",
-      "prefix_compact", "shingles_compact"))
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t")
 
   test("ngram prefix index round-trips disk in a FRESH session and joins without shuffling the corpus side") {
     import graft.operators.DedupOps
@@ -755,7 +743,7 @@ class DedupSpec extends AnyFunSuite {
         assert(!sawExchange,
           s"corpus side shuffles between its bucketed scan and the candidate join:\n$plan")
       } finally spark.conf.set(bcKey, prevBc)
-    } finally dropNpTables("graft_np_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_np_idx")
   }
 
   test("prefix index takedown: tombstones hide docs at read time; compaction folds them in and never rewrites the frozen order") {
@@ -805,15 +793,12 @@ class DedupSpec extends AnyFunSuite {
       assert(e.getMessage.contains("pending"))
       DedupOps.compactNgramPrefixIndex(spark, "graft_np_rm")
       DedupOps.appendToNgramPrefixIndex("graft_np_rm", readd) // now legal
-      // crash-heal: compaction died between DROP and RENAME — next call
-      // restores the live name before doing new work
-      val nb = 4
-      spark.table("graft_np_rm_prefix").write.mode("overwrite").format("parquet")
-        .bucketBy(nb, "blk", "t").saveAsTable("graft_np_rm_prefix_compact")
+      // the catalog loses a name (as a new process would): the next call
+      // re-registers it from the family's layout before doing new work
       spark.sql("DROP TABLE graft_np_rm_prefix")
       DedupOps.compactNgramPrefixIndex(spark, "graft_np_rm")
       assert(spark.catalog.tableExists("graft_np_rm_prefix"))
-    } finally dropNpTables("graft_np_rm")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_np_rm")
   }
 
   test("appendToNgramPrefixIndex: index(A) + append(B) answers like a rebuild over A∪B; repair heals a crashed append") {
@@ -861,7 +846,7 @@ class DedupSpec extends AnyFunSuite {
       assert(healed == rebuiltABC)
       // idempotent up to docs that legitimately have zero prefix rows
       assert(DedupOps.repairNgramPrefixIndex(spark, "graft_np_app") === emptyC)
-    } finally dropNpTables("graft_np_app")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_np_app")
   }
 
   test("ngramContainmentPairs: flags a short doc embedded in a long one that Jaccard misses") {
@@ -930,11 +915,6 @@ class DedupSpec extends AnyFunSuite {
   private def ciCanon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.select("a", "b", "containment").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-
-  private def dropCiTables(prefix: String): Unit =
-    for (t <- Seq("postings", "df", "shingles", "meta", "tombstones",
-      "postings_compact", "shingles_compact"))
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t")
 
   /** Incident restriction of the full [[DedupOps.ngramContainmentPairs]]
     * over corpus ∪ batch — the ground truth every vsIndex test compares
@@ -1013,7 +993,7 @@ class DedupSpec extends AnyFunSuite {
             s"corpus postings shuffle between scan (line $scanIdx) and join:\n$plan")
         }
       } finally spark.conf.set(bcKey, prevBc)
-    } finally dropCiTables("graft_ci_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_ci_idx")
   }
 
   test("containment index lifecycle: append parity, crash repair, takedown, compaction") {
@@ -1035,12 +1015,8 @@ class DedupSpec extends AnyFunSuite {
       // crash repair: drop one appended doc's posting rows, heal, re-check
       val victim = admit.select("doc_id").orderBy("doc_id").limit(1)
         .collect()(0).getLong(0)
-      spark.table("graft_ci_app_postings")
-        .filter(col("doc_id") =!= victim)
-        .write.mode("overwrite").format("parquet").bucketBy(4, "t")
-        .saveAsTable("graft_ci_app_postings_tmp")
-      spark.sql("DROP TABLE graft_ci_app_postings")
-      spark.sql("ALTER TABLE graft_ci_app_postings_tmp RENAME TO graft_ci_app_postings")
+      graft.operators.AtRest.rewrite(spark, "graft_ci_app", Seq("postings" ->
+        spark.table("graft_ci_app_postings").filter(col("doc_id") =!= victim)), fold = false)
       assert(DedupOps.repairNgramContainmentIndex(spark, "graft_ci_app") == 1L)
       assert(DedupOps.repairNgramContainmentIndex(spark, "graft_ci_app") == 0L)
       assert(pairs() == ciTruth(docs, _ % 10 == 0))
@@ -1068,7 +1044,7 @@ class DedupSpec extends AnyFunSuite {
       assert(spark.table("graft_ci_app_postings")
         .filter(col("doc_id") === dead).count() == 0L)
       assert(pairs() == expectSurvive)
-    } finally dropCiTables("graft_ci_app")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_ci_app")
   }
 
   test("q117 cluster split: every doc gets exactly one split and no near-dup cluster straddles splits") {
@@ -1145,16 +1121,17 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("at-rest fault injection: a crash after any step of append or compact recovers to a fresh build") {
-    import graft.operators.{AtRest, CorpusOps, DedupOps, MultimodalOps}
+    import graft.operators.{AtRest, ClusterState, CorpusOps, DedupOps, IvfIndex, MultimodalOps, SplitState}
     import org.apache.spark.sql.DataFrame
     val started = System.nanoTime()
-    // 20 docs over a shared vocabulary, so shingles recur across docs (a
+    // 24 docs over a shared vocabulary, so shingles recur across docs (a
     // first-seen takedown re-attributes) and ids ≡ mod 5 are near-dups
-    val texts = (1L to 20L).map { i =>
+    val texts = (1L to 24L).map { i =>
       i -> ((0 until 12).map(j => s"w${(i % 5) * 3 + j}") :+ s"u$i").mkString(" ")
     }.toMap
     def docs(ids: Seq[Long]): DataFrame = ids.map(i => (i, texts(i))).toDF("doc_id", "text")
       .withColumn("n_chars", length(col("text")))
+    def idsOf(d: DataFrame): Seq[Long] = d.select("doc_id").as[Long].collect().toSeq
     def rowHashes(df: DataFrame): Seq[Long] =
       df.select(xxhash64(df.columns.sorted.toSeq.map(col): _*)).collect().map(_.getLong(0)).sorted.toSeq
     // true when the step countdown fired inside `op`
@@ -1165,29 +1142,51 @@ class DedupSpec extends AnyFunSuite {
     }
     def media(d: DataFrame) =
       d.select(col("doc_id"), lit("image").as("kind"), col("text").cast("binary").as("payload"))
+    def vecs(d: DataFrame) = d.select(col("doc_id").as("vec_id"),
+      array((col("doc_id") % 5).cast("double"), lit(1.0), (col("doc_id") % 3).cast("double")).as("emb"),
+      (col("doc_id") % 2).as("label"))
+    // the near-dup pairs among `ids` with an endpoint in `of`
+    def pairsOf(ids: Seq[Long], of: Seq[Long]): DataFrame =
+      (for (a <- ids; b <- ids if a < b && a % 5 == b % 5 && (of.contains(a) || of.contains(b)))
+        yield (a, b)).toDF("a", "b")
+    val noLabels = Seq.empty[(Long, Long)].toDF("node", "label")
+    def catalogNames(p: String): Seq[String] =
+      spark.sessionState.catalog.listTables("default", s"${p}_*").map(_.table)
+    // the surviving docs of the family under test
+    var live = Vector.empty[Long]
     /** One family's lifecycle. `recover` heals a crashed append of `batch`;
       * `fresh` is a from-scratch build over the surviving docs, or None when
       * the family ranks appends under a frozen order — then the reference is
-      * a twin index given the same operations without a crash. */
-    final case class Family(name: String, tables: Seq[String], save: (String, DataFrame) => Unit,
+      * a twin index given the same operations without a crash. A path
+      * family takes its takedowns at compaction. */
+    final case class Family(name: String, catalog: Boolean, save: (String, DataFrame) => Unit,
         append: (String, DataFrame) => Unit, recover: (String, DataFrame) => Unit,
         remove: (String, DataFrame) => Unit, compact: (String, DataFrame) => Unit,
         load: String => Seq[DataFrame], fresh: Option[DataFrame => Seq[DataFrame]])
+    def clusterAppend(p: String, d: DataFrame): Unit = {
+      val b = idsOf(d)
+      ClusterState.load(spark, p).insert(pairsOf(live ++ b, b)).save(p)
+    }
+    def ivfAppend(p: String, d: DataFrame): Unit = {
+      val cur = IvfIndex.load(spark, p)
+      cur.append(vecs(d).select("vec_id", "emb")
+        .join(cur.assigned.select("vec_id"), Seq("vec_id"), "left_anti")).save(p)
+    }
     val families = Seq(
-      Family("minhash", Seq("shingles", "bands"),
+      Family("minhash", catalog = true,
         (p, d) => DedupOps.indexCorpus(d.select("doc_id", "text")).saveAsTables(p, 4),
         (p, d) => DedupOps.appendToCorpusIndex(p, d.select("doc_id", "text")),
         (p, _) => DedupOps.repairCorpusIndex(spark, p),
         DedupOps.removeFromCorpusIndex, (p, _) => DedupOps.compactCorpusIndex(spark, p),
         p => { val i = DedupOps.loadCorpusIndex(spark, p); Seq(i.shingles, i.bands) },
         Some(d => { val i = DedupOps.indexCorpus(d.select("doc_id", "text")); Seq(i.shingles, i.bands) })),
-      Family("prefix", Seq("prefix", "df", "shingles"),
+      Family("prefix", catalog = true,
         (p, d) => DedupOps.indexNgramPrefix(d, 0.5).saveAsTables(p, 4),
         DedupOps.appendToNgramPrefixIndex, (p, _) => DedupOps.repairNgramPrefixIndex(spark, p),
         DedupOps.removeFromNgramPrefixIndex, (p, _) => DedupOps.compactNgramPrefixIndex(spark, p),
         p => { val i = DedupOps.loadNgramPrefixIndex(spark, p); Seq(i.prefix, i.df, i.shingles) },
         None),
-      Family("containment", Seq("postings", "df", "shingles"),
+      Family("containment", catalog = true,
         (p, d) => DedupOps.indexNgramContainment(d.select("doc_id", "text"), 0.8).saveAsTables(p, 4),
         DedupOps.appendToNgramContainmentIndex,
         (p, _) => DedupOps.repairNgramContainmentIndex(spark, p),
@@ -1195,14 +1194,14 @@ class DedupSpec extends AnyFunSuite {
         (p, _) => DedupOps.compactNgramContainmentIndex(spark, p),
         p => { val i = DedupOps.loadNgramContainmentIndex(spark, p); Seq(i.postings, i.df, i.shingles) },
         None),
-      Family("firstseen", Seq("firstseen"),
+      Family("firstseen", catalog = true,
         (p, d) => CorpusOps.saveFirstSeenIndex(d, p, 4),
         (p, d) => CorpusOps.appendToFirstSeenIndex(spark, p, d),
         (p, d) => CorpusOps.appendToFirstSeenIndex(spark, p, d), // re-run
         CorpusOps.removeFromFirstSeenIndex, CorpusOps.compactFirstSeenIndex(spark, _, _),
         p => Seq(CorpusOps.loadFirstSeenIndex(spark, p)),
         Some(d => Seq(CorpusOps.firstSeenOf(d)))),
-      Family("media", Seq("chunks"),
+      Family("media", catalog = true,
         (p, d) => MultimodalOps.saveMediaPhashIndex(media(d), p, 4),
         (p, d) => MultimodalOps.appendToMediaPhashIndex(spark, p, media(d)),
         (p, d) => MultimodalOps.appendToMediaPhashIndex(spark, p, media(d)), // re-run
@@ -1210,35 +1209,78 @@ class DedupSpec extends AnyFunSuite {
         (p, _) => MultimodalOps.compactMediaPhashIndex(spark, p),
         p => Seq(MultimodalOps.loadMediaPhashChunks(spark, p)),
         Some(d => {
-          MultimodalOps.saveMediaPhashIndex(media(d), "graft_fi_media_fresh", 4)
-          Seq(MultimodalOps.loadMediaPhashChunks(spark, "graft_fi_media_fresh"))
-        })))
+          MultimodalOps.saveMediaPhashIndex(media(d), "graft_fi_fresh_media", 4)
+          Seq(MultimodalOps.loadMediaPhashChunks(spark, "graft_fi_fresh_media"))
+        })),
+      Family("split", catalog = true,
+        (p, d) => SplitState.init(spark, p, d.select("doc_id"), noLabels, 4),
+        (p, d) => SplitState.assign(spark, p, d.select("doc_id"), noLabels),
+        (p, d) => SplitState.assign(spark, p, d.select("doc_id"), noLabels), // re-run
+        SplitState.remove, (p, _) => SplitState.compact(spark, p),
+        p => Seq(SplitState.load(spark, p)),
+        Some(d => {
+          AtRest.dropFamily(spark, "graft_fi_fresh_split")
+          SplitState.init(spark, "graft_fi_fresh_split", d.select("doc_id"), noLabels, 4)
+          Seq(SplitState.load(spark, "graft_fi_fresh_split"))
+        })),
+      Family("cluster", catalog = false,
+        (p, d) => ClusterState.build(pairsOf(idsOf(d), idsOf(d))).save(p),
+        clusterAppend, clusterAppend, // re-run: an insert absorbs its pairs once
+        (_, _) => (),
+        (p, d) => {
+          val st = ClusterState.load(spark, p)
+          st.remove(st.labels.select("node")
+            .join(d.select(col("doc_id").as("node")), Seq("node"), "left_anti")).save(p)
+        },
+        p => { val st = ClusterState.load(spark, p); Seq(st.labels, st.edges) },
+        Some(d => { val st = ClusterState.build(pairsOf(idsOf(d), idsOf(d))); Seq(st.labels, st.edges) })),
+      Family("ivf", catalog = false,
+        (p, d) => IvfIndex.build(vecs(d)).save(p),
+        ivfAppend, ivfAppend, // re-run: appends only the vectors not yet assigned
+        (_, _) => (),
+        (p, d) => IvfIndex.removeAtRest(spark, p, IvfIndex.load(spark, p).assigned.select("vec_id")
+          .join(d.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_anti")),
+        p => { val i = IvfIndex.load(spark, p); Seq(i.centroids, i.assigned) },
+        None))
+    val pathRoot = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("graft-fi").toString)
+    val pathFs = pathRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var crashPoints = 0
     for (f <- families) {
-      val (p, twin) = (s"graft_fi_${f.name}", s"graft_fi_${f.name}_twin")
-      def dropAll(): Unit = Seq(p, twin, "graft_fi_media_fresh")
-        .foreach(AtRest.dropFamily(spark, _, f.tables: _*))
+      val (p, twin) =
+        if (f.catalog) (s"graft_fi_${f.name}", s"graft_fi_twin_${f.name}")
+        else (s"$pathRoot/${f.name}", s"$pathRoot/twin_${f.name}")
+      def dropAll(): Unit =
+        if (f.catalog) Seq(p, twin, "graft_fi_fresh_media", "graft_fi_fresh_split")
+          .foreach(AtRest.dropFamily(spark, _))
+        else Seq(p, twin).foreach(r => pathFs.delete(new org.apache.hadoop.fs.Path(r), true))
       // an operation on the index under test, mirrored on the twin uncrashed
       def both(op: String => Unit): Unit = { op(p); if (f.fresh.isEmpty) op(twin) }
       try {
         dropAll()
-        var live = (1L to 8L).toVector
+        live = (1L to 8L).toVector
         var nextId = 9L
         both(f.save(_, docs(live)))
         def check(what: String): Unit = {
           val want = f.fresh.fold(f.load(twin))(_(docs(live)))
           assert(f.load(p).map(rowHashes) == want.map(rowHashes), s"${f.name}: $what")
+          assert(catalogNames(p).forall(!_.contains("__v")),
+            s"${f.name}: $what left a transient name: ${catalogNames(p)}")
+        }
+        def admit(): DataFrame = {
+          val batch = docs(Seq(nextId, nextId + 1))
+          nextId += 2
+          batch
         }
         // append: a crash after step k = 1, 2, ... until an append completes
         var k = 1
         var crashed = true
         while (crashed) {
-          val batch = docs(Seq(nextId, nextId + 1))
+          val batch = admit()
           crashed = crashedAfter(k)(f.append(p, batch))
           if (crashed) { crashPoints += 1; f.recover(p, batch) }
           if (f.fresh.isEmpty) f.append(twin, batch)
-          live ++= Seq(nextId, nextId + 1)
-          nextId += 2
+          live ++= idsOf(batch)
           check(s"append, crash after step $k")
           k += 1
         }
@@ -1256,43 +1298,44 @@ class DedupSpec extends AnyFunSuite {
           check(s"compact, crash after step $k")
           k += 1
         }
-        // a compaction crashed between a table's drop and its rename, then
-        // an append BEFORE the next compaction: the append must heal the
-        // live name from its staging, not create a batch-only table that
-        // the next compaction's staged write copies over the staging
-        val nTables = (k - 2) / 3 // a whole compaction ran k - 2 steps
-        for (i <- 0 until nTables) {
-          val gone = live(i)
-          live = live.filterNot(_ == gone)
-          both(f.remove(_, Seq(gone).toDF("doc_id")))
-          val dropStep = nTables + 2 * i + 1
-          assert(crashedAfter(dropStep)(f.compact(p, docs(live))), s"${f.name}: step $dropStep")
-          crashPoints += 1
-          if (f.fresh.isEmpty) f.compact(twin, docs(live))
-          val batch = docs(Seq(nextId, nextId + 1))
-          both(f.append(_, batch))
-          live ++= Seq(nextId, nextId + 1)
-          nextId += 2
-          both(f.compact(_, docs(live)))
-          check(s"append after a compaction crashed at drop $i, then compact")
-        }
+        // restart: the catalog forgets every name of the family (its files
+        // stay, as in a new process); the next entry point re-registers
+        // them from the layout. The MinHash family carries the admission
+        // drain's manifest too.
+        val admitted = live.size
+        if (f.name == "minhash")
+          AtRest.append(p, "admissions", docs(live).select(lit(-1L).as("batch_id"), col("doc_id")))
+        catalogNames(p).foreach(n => spark.sql(s"DROP TABLE $n"))
+        val batch = admit()
+        both(f.append(_, batch))
+        live ++= idsOf(batch)
+        val gone = live.head
+        live = live.tail
+        both(f.remove(_, Seq(gone).toDF("doc_id")))
+        both(f.compact(_, docs(live)))
+        check("append, remove and compact after the catalog lost the family")
+        if (f.name == "minhash") assert(spark.table(s"${p}_admissions").count() == admitted)
       } finally dropAll()
     }
-    // a bucketed table that lost its bucket spec fails the admit before
-    // the base write lands
+    // a bucketed table committed without its bucket spec fails the admit
+    // before the base write lands
     try {
       val sketch = DedupOps.indexCorpus(docs(1L to 4L).select("doc_id", "text"))
       sketch.saveAsTables("graft_fi_plain", 4)
-      AtRest.save(sketch.bands, "graft_fi_plain_bands")
-      val n = spark.table("graft_fi_plain_shingles").count()
+      AtRest.save("graft_fi_plain", AtRest.Version("bands", sketch.bands))
+      val n = DedupOps.loadCorpusIndex(spark, "graft_fi_plain").shingles.count()
       intercept[IllegalStateException](
         DedupOps.appendToCorpusIndex("graft_fi_plain", docs(Seq(5L)).select("doc_id", "text")))
       assert(spark.table("graft_fi_plain_shingles").count() == n)
-    } finally AtRest.dropFamily(spark, "graft_fi_plain", "shingles", "bands")
-    // append: 2 writes in every family; compact: per table a staged write,
-    // a drop and a rename, then the tombstone drop (3 two-table families,
-    // 2 one-table ones); then one append after a crash at each table's drop
-    assert(crashPoints == 5 * 2 + 3 * 7 + 2 * 4 + 3 * 2 + 2 * 1, s"crash points: $crashPoints")
+    } finally AtRest.dropFamily(spark, "graft_fi_plain")
+    // append: 2 writes in the five index families; 3 in split (assign,
+    // moves, meta — its first assign, which also creates `_moves`, is the
+    // k = 1 round); a path commit of two versions and the layout in
+    // cluster and ivf. compact: per rewritten table a version write and a
+    // catalog re-point, plus the layout and the tombstone drop (2 tables in
+    // minhash, prefix, containment and split, 1 in firstseen and media);
+    // cluster's versions and layout; ivf's assignment and layout
+    assert(crashPoints == 5 * 2 + 3 + 2 * 3 + 4 * 6 + 2 * 4 + 3 + 2, s"crash points: $crashPoints")
     info(f"$crashPoints crash points in ${(System.nanoTime() - started) / 1e9}%.1f s")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.MultimodalOps
+import graft.operators.{AtRest, MultimodalOps}
 import graft.operators.MultimodalOps.MediaIn
 
 class MultimodalSpec extends AnyFunSuite {
@@ -56,9 +56,7 @@ class MultimodalSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val p = "graft_mp_idx"
-    def dropAll(): Unit =
-      for (t <- Seq("chunks", "chunks_compact", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS ${p}_$t")
+    def dropAll(): Unit = AtRest.dropFamily(spark, p)
     def blob(tag: String): Array[Byte] =
       (0 until 40).map(j => s"${tag}byte$j").mkString(" ").getBytes("UTF-8")
     def perturbed(tag: String): Array[Byte] =
@@ -151,12 +149,6 @@ class MultimodalSpec extends AnyFunSuite {
       assert(MultimodalOps.mediaNearDupVsIndex(b2, spark.newSession(), p,
         maxHamming = 10).collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
         Set((10L, 20L)))
-      // compact crash-heal: live table missing, staging parked
-      spark.table(s"${p}_chunks").write.mode("overwrite").format("parquet")
-        .bucketBy(4, "c", "ch").saveAsTable(s"${p}_chunks_compact")
-      spark.sql(s"DROP TABLE ${p}_chunks")
-      MultimodalOps.compactMediaPhashIndex(spark, p)
-      assert(spark.catalog.tableExists(s"${p}_chunks"))
     } finally dropAll()
   }
 
@@ -234,9 +226,7 @@ class MultimodalSpec extends AnyFunSuite {
     // ...and therefore the same split: rep-hash assignment puts the copy
     // exactly where its original went, never across the wall
     val p = "graft_media_split"
-    def dropAll(): Unit =
-      for (t <- Seq("_assign", "_meta", "_moves", "_pairs", "_tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS $p$t")
+    def dropAll(): Unit = AtRest.dropFamily(spark, p)
     try {
       dropAll()
       SplitState.init(spark, p, media.select("doc_id"), labels)

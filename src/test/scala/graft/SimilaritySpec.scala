@@ -195,7 +195,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(noop.assigned.count() == after.assigned.count())
   }
 
-  test("IvfIndex.removeAtRest: staged purge of a SAVED index; crash between stage and rename heals; partial staging discarded") {
+  test("IvfIndex.removeAtRest: a purge of a SAVED index commits a version that a fresh session serves") {
     import graft.operators.IvfIndex
     import spark.implicits._
     val v = Tables.load(spark, TestSpark.sf, "embeddings")
@@ -205,8 +205,7 @@ class SimilaritySpec extends AnyFunSuite {
     val purge = v.filter(col("vec_id") % 7 === 0).select("vec_id")
       .localCheckpoint(true)
     IvfIndex.removeAtRest(spark, root, purge)
-    // a FRESH session serves no purged vector at any probe width, and the
-    // staging dir is gone
+    // a FRESH session serves no purged vector at any probe width
     val s2 = spark.newSession()
     val reloaded = IvfIndex.load(s2, root)
     assert(reloaded.assigned.join(purge, Seq("vec_id")).count() == 0)
@@ -215,23 +214,6 @@ class SimilaritySpec extends AnyFunSuite {
     val nCells = reloaded.centroids.count().toInt
     val res = reloaded.search(queries, k = 5, nprobe = nCells)
     assert(res.join(purge.select(col("vec_id").as("n_id")), Seq("n_id")).count() == 0)
-    assert(!new java.io.File(s"$root/assigned_next").exists())
-    // CRASH between staging commit and rename: live dir gone, complete
-    // staging present → load heals by committing the staging
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = reloaded.assigned.count()
-    spark.read.parquet(s"$root/assigned").write.parquet(s"$root/assigned_next")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/assigned"), true)
-    assert(IvfIndex.load(spark, root).assigned.count() == before)
-    assert(new java.io.File(s"$root/assigned").exists())
-    // CRASH mid-staging-write (no _SUCCESS): the partial dir is discarded,
-    // the live assignment untouched
-    spark.read.parquet(s"$root/assigned").limit(3)
-      .write.parquet(s"$root/assigned_next")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/assigned_next/_SUCCESS"), false)
-    assert(IvfIndex.load(spark, root).assigned.count() == before)
-    assert(!new java.io.File(s"$root/assigned_next").exists())
   }
 
   test("IvfIndex.refine recovers true clusters from scrambled seeds") {

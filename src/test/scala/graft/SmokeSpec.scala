@@ -89,11 +89,13 @@ class SmokeSpec extends AnyFunSuite {
     // each hand-written copy of the protocol restated its own swap, bucket
     // columns and tombstone table; the tombstone needle ends in a quote so
     // it matches code, not scaladoc
-    for (needle <- Seq("RENAME" + " TO", "_tombstones" + "\"", "bucketBy" + "(")) {
+    for (needle <- Seq("SET" + " LOCATION", "_tombstones" + "\"", "bucketBy" + "(")) {
       val sites = sourcesContaining(needle, "src/main")
       assert(sites == Seq("AtRest.scala"),
         s"'$needle' outside AtRest.scala: $sites — go through graft.operators.AtRest")
     }
+    // an at-rest commit is a layout-file rename, never a catalog rename
+    assert(sourcesContaining("RENAME" + " TO", "src/main").isEmpty)
   }
 
   test("PlanDump headline list stays in sync with the query inventory") {

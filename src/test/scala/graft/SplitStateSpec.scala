@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.SplitState
+import graft.operators.{AtRest, SplitState}
 
 /** The fifth at-rest artifact (VERDICT r11 demands 1-2): durable split
   * assignments that survive committed merges, deletions and session
@@ -20,10 +20,7 @@ class SplitStateSpec extends AnyFunSuite {
   private def idWith(want: String, from: Long = 1L): Long =
     (from to 1999L).find(i => bucketOf(i) == want).get
 
-  private def drop(p: String): Unit =
-    for (t <- Seq("_assign", "_assign_compact", "_meta", "_meta_migrate",
-        "_moves", "_moves_compact", "_pairs", "_pairs_compact", "_tombstones"))
-      spark.sql(s"DROP TABLE IF EXISTS $p$t")
+  private def drop(p: String): Unit = AtRest.dropFamily(spark, p)
 
   private def loadMap(s: org.apache.spark.sql.SparkSession, p: String): Map[Long, String] =
     SplitState.load(s, p).collect()
@@ -360,10 +357,8 @@ class SplitStateSpec extends AnyFunSuite {
       // pre-upgrade index); the next commit must MIGRATE it instead of
       // throwing a column-count mismatch, and the legacy span row falls
       // back to the span-only exemption
-      val legacy = spark.table(s"${p}_meta").select("seq", "lo", "hi", "kind")
-        .localCheckpoint(true)
-      spark.sql(s"DROP TABLE ${p}_meta")
-      legacy.write.format("parquet").saveAsTable(s"${p}_meta")
+      AtRest.rewrite(spark, p, Seq("meta" -> spark.table(s"${p}_meta").select("seq", "lo", "hi", "kind")),
+        fold = false)
       SplitState.assign(spark, p, Seq(20L).toDF("doc_id"),
         Seq.empty[(Long, Long)].toDF("node", "label"))
       assert(loadMap(spark, p).contains(20L))
@@ -473,10 +468,8 @@ class SplitStateSpec extends AnyFunSuite {
         .map(_.toSeq).toSet
       // simulate a pre-r14 family: strip the quarantine_enter audit rows
       // (but leave _assign history — NOT yet compacted, so recoverable)
-      val legacy = spark.table(s"${p}_moves")
-        .filter(col("reason") =!= "quarantine_enter")
-        .localCheckpoint(eager = true)
-      legacy.write.mode("overwrite").format("parquet").saveAsTable(s"${p}_moves")
+      AtRest.rewrite(spark, p, Seq("moves" ->
+        spark.table(s"${p}_moves").filter(col("reason") =!= "quarantine_enter")), fold = false)
       // ADVICE r15: a LATER-stint enter row (as written by r14+ code on a
       // re-quarantine) must not mask the missing first-stint row — the
       // anti-join keys on (doc_id, seq) per stint, not doc_id alone
@@ -516,10 +509,8 @@ class SplitStateSpec extends AnyFunSuite {
       // history (the quarantine row vanishes), then strip the audit rows
       // from _moves — the drain event is now orphaned
       SplitState.compact(spark, p)
-      val legacy = spark.table(s"${p}_moves")
-        .filter(col("reason") =!= "quarantine_enter")
-        .localCheckpoint(eager = true)
-      legacy.write.mode("overwrite").format("parquet").saveAsTable(s"${p}_moves")
+      AtRest.rewrite(spark, p, Seq("moves" ->
+        spark.table(s"${p}_moves").filter(col("reason") =!= "quarantine_enter")), fold = false)
       val pool = SplitState.quarantinePool(spark, p).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // without the clamp the drain seq reads -1 (corruption to an
@@ -547,7 +538,7 @@ class SplitStateSpec extends AnyFunSuite {
     } finally drop(p)
   }
 
-  test("remove + compact: tombstone filters at read, compact collapses history and folds the takedown, staging crash heals") {
+  test("remove + compact: tombstone filters at read, compact collapses history and folds the takedown, a lost catalog heals") {
     val p = "graft_sp_cmp"
     try {
       drop(p)
@@ -578,22 +569,12 @@ class SplitStateSpec extends AnyFunSuite {
       // the audit trail and the watermark survive compaction
       assert(spark.table(s"${p}_moves").count() == 1L)
       assert(SplitState.watermark(spark, p).contains(math.max(a, b)))
-      // staged-crash heal: live table missing, data parked in _compact
-      spark.table(s"${p}_assign").write.mode("overwrite").format("parquet")
-        .bucketBy(4, "doc_id").saveAsTable(s"${p}_assign_compact")
-      spark.sql(s"DROP TABLE ${p}_assign")
+      // the catalog loses the assignment and the AUDIT trail (as a new
+      // process would): compact re-registers both from the family's layout
+      Seq("assign", "moves").foreach(t => spark.sql(s"DROP TABLE ${p}_$t"))
       SplitState.compact(spark, p)
       assert(loadMap(spark, p) == Map(b -> bucketOf(a)))
-      // the AUDIT table gets the same staged protocol (ADVICE r12: an
-      // in-place overwrite would lose the whole trail on a mid-rewrite
-      // crash): park the moves in _moves_compact, drop the live table,
-      // and compact must heal instead of leaving the trail dangling
-      spark.table(s"${p}_moves").write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${p}_moves_compact")
-      spark.sql(s"DROP TABLE ${p}_moves")
-      SplitState.compact(spark, p)
-      assert(spark.table(s"${p}_moves").count() == 1L,
-        "dangling _moves_compact not healed — audit trail lost")
+      assert(spark.table(s"${p}_moves").count() == 1L, "audit trail lost")
     } finally drop(p)
   }
 }

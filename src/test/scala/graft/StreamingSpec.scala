@@ -323,15 +323,8 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(ids.keySet == Set(100L, 2L, 5L), s"index ids: ${ids.keySet}")
       assert(ids.values.forall(_ == 1L), s"duplicated index rows: $ids")
-    } finally {
-      for (t <- Seq("shingles", "bands", "tombstones", "admissions"))
-        spark.sql(s"DROP TABLE IF EXISTS graft_adm_idx_$t")
-    }
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm_idx")
   }
-
-  private def dropAdmTables(prefix: String): Unit =
-    for (t <- Seq("shingles", "bands", "tombstones", "admissions"))
-      spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t")
 
   test("splitDrain ≡ batch-mode split maintenance; bridge quarantines and drains in-stream; replay is a no-op") {
     import graft.operators.{DedupOps, ClusterState, SplitState, DedupPipeline}
@@ -358,14 +351,8 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft-spd-src")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-spd-ck").toString
     val root = java.nio.file.Files.createTempDirectory("graft-spd-cs").toString
-    def dropAll(): Unit = {
-      for (t <- Seq("prefix", "df", "shingles", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS spd_np_$t")
-      for (p <- Seq("spd_sp", "spd_sp2");
-           t <- Seq("assign", "assign_compact", "meta", "meta_migrate",
-             "moves", "moves_compact", "pairs", "pairs_compact", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS ${p}_$t")
-    }
+    def dropAll(): Unit =
+      Seq("spd_np", "spd_sp", "spd_sp2").foreach(graft.operators.AtRest.dropFamily(spark, _))
     try {
       dropAll()
       // day 0: the four at-rest artifacts (corpus pairs recorded so the
@@ -481,9 +468,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft-mdu-src")
     val ckpt = java.nio.file.Files.createTempDirectory("graft-mdu-ck").toString
     val auditRoot = java.nio.file.Files.createTempDirectory("graft-mdu-au").toString
-    def dropAll(): Unit =
-      for (t <- Seq("chunks", "chunks_compact", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS mdu_mp_$t")
+    def dropAll(): Unit = graft.operators.AtRest.dropFamily(spark, "mdu_mp")
     try {
       dropAll()
       MultimodalOps.saveMediaPhashIndex(corpus, "mdu_mp", nBuckets = 4)
@@ -554,13 +539,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-md-ck").toString
     val auditRoot = java.nio.file.Files.createTempDirectory("graft-md-au").toString
     val clRoot = java.nio.file.Files.createTempDirectory("graft-md-cs").toString
-    def dropAll(): Unit = {
-      for (t <- Seq("chunks", "chunks_compact", "meta", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS md_mp_$t")
-      for (t <- Seq("assign", "assign_compact", "meta", "meta_migrate",
-          "moves", "moves_compact", "pairs", "pairs_compact", "tombstones"))
-        spark.sql(s"DROP TABLE IF EXISTS md_sp_$t")
-    }
+    def dropAll(): Unit = Seq("md_mp", "md_sp").foreach(graft.operators.AtRest.dropFamily(spark, _))
     try {
       dropAll()
       // day 0: phash index + cluster + split state + recorded corpus pairs
@@ -673,7 +652,7 @@ class StreamingSpec extends AnyFunSuite {
       // seeded ids ARE probe-visible (day-0 corpus fence)
       assert(graft.streaming.DocStream.replayProbe(spark, "graft_adm_pp",
         Seq((100L, "y")).toDF("doc_id", "text")).collect().isEmpty)
-    } finally dropAdmTables("graft_adm_pp")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm_pp")
   }
 
   test("admissionDrain: probe-skipped survivor audits admitted=false with null dup_of and never re-enters the index") {
@@ -704,7 +683,7 @@ class StreamingSpec extends AnyFunSuite {
       // and the index did not gain a duplicate id-100 row set
       assert(spark.table("graft_adm2_idx_shingles")
         .filter(col("doc_id") === 100L).count() == 1L)
-    } finally dropAdmTables("graft_adm2_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm2_idx")
   }
 
   test("admissionDrain fails fast on a pending-tombstoned batch id, before any audit row lands") {
@@ -735,7 +714,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(rootMsg(e).contains("tombstone"), s"wrong failure: ${rootMsg(e)}")
       // no audit partition was written for the failed batch
       assert(!new java.io.File(sinkRoot).listFiles().exists(_.getName.startsWith("batch_id=")))
-    } finally dropAdmTables("graft_adm3_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm3_idx")
   }
 
   test("admissionDrain recovery: a batch replayed after a mid-append crash heals bands + manifest, audits identically") {
@@ -797,7 +776,7 @@ class StreamingSpec extends AnyFunSuite {
           r.getBoolean(r.fieldIndex("admitted"))).toMap
       assert(audit2 == Map(1L -> true, 2L -> true), s"$audit2")
       assert(spark.table("graft_adm4_idx_shingles").count() == 3L)
-    } finally dropAdmTables("graft_adm4_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm4_idx")
   }
 
   test("admissionDrain: two drains audit like the DataFrame operators, leave the index equal to indexCorpus(day 0 ∪ admitted), recompile nothing and leak no pin") {
@@ -873,7 +852,7 @@ class StreamingSpec extends AnyFunSuite {
       // classes the first compiled — a batch run on the stream's fresh
       // cloned session compiles them all again
       assert(compiled(1) <= 20, s"second drain compiled ${compiled(1)} classes")
-    } finally dropAdmTables("graft_adm5_idx")
+    } finally graft.operators.AtRest.dropFamily(spark, "graft_adm5_idx")
   }
 
   test("foreachBatch streams into the idempotent partitioned sink") {
