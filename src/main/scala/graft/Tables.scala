@@ -77,7 +77,7 @@ object Tables {
   /** events.ts as TIMESTAMP(NANOS) parquet surfaces as LongType nanos (see
     * above); truncate to microseconds — the same truncation DuckDB/pandas
     * apply when downcasting — so both engines see identical values. */
-  private def normalizeEventTs(df: DataFrame): DataFrame =
+  private[graft] def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _        => df
@@ -135,70 +135,57 @@ object Tables {
       s"${sorted.head}:${scala.util.hashing.MurmurHash3.orderedHash(sorted.toSeq)}:${files.length}")
   }
 
-  /** spread decisions keyed by file layout ([[layoutKey]]) and threshold:
-    * the decision is a pure function of (layout, floor), and the per-file
-    * FS stat behind the split estimate is the probe's only non-trivial
-    * cost — pay it once per table per session, not once per query
-    * construction. */
-  private val spreadCache =
-    new java.util.concurrent.ConcurrentHashMap[((String, String), Long), Boolean]()
+  /** Per-file on-disk lengths keyed by file layout ([[layoutKey]]): file
+    * length is ground truth where optimizer row-count stats are estimates,
+    * and one FS metadata call per file per session is the probe's only
+    * non-trivial cost — pay it once per table per session, not once per
+    * query construction. */
+  private val lengthsCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[Long]]()
+
+  private def lengths(spark: SparkSession, files: Array[String]): Array[Long] =
+    lengthsCache.computeIfAbsent(layoutKey(spark, files), _ => {
+      val hconf = spark.sparkContext.hadoopConfiguration
+      files.map { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(hconf).getFileStatus(p).getLen
+      }
+    })
+
+  /** The one read of input size: summed on-disk bytes of the frame's input
+    * files, or None when it has none (an in-memory, cached, pinned or
+    * streamed frame has no known size). `inputFiles` reads the relation's
+    * cached listing — no RDD materialization, no job. Every size-based
+    * dispatch takes its safe side on None. */
+  def sizeOf(df: DataFrame): Option[Long] = {
+    val files = df.inputFiles
+    if (files.isEmpty) None else Some(lengths(df.sparkSession, files).sum)
+  }
 
   def spread(df: DataFrame): DataFrame = spread(df, MinSpreadBytes)
 
   def spread(df: DataFrame, minBytes: Long): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    // inputFiles reads the relation's cached listing — no RDD
-    // materialization, no job. Bare file COUNT is not a bound on splits in
-    // either direction (a large file splits into multiple byte-range
-    // partitions), so only the trivial cases short-circuit here; the real
+    // Bare file COUNT is not a bound on splits in either direction (a large
+    // file splits into multiple byte-range partitions), so only the trivial
+    // cases short-circuit here — at scale that stats nothing; the real
     // decision estimates splits from file SIZES below.
     val files = df.inputFiles
     if (files.isEmpty || files.length >= target) return df
-    val key = (layoutKey(spark, files), minBytes)
-    val go = spreadCache.computeIfAbsent(key, _ => {
-      // ≤ target-1 files to stat (guaranteed by the short-circuit above),
-      // one FS metadata call each — cheap even against an object store.
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val maxPB = math.max(1L, org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")))
-      val lens = files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(hconf).getFileStatus(p).getLen
-      }
-      // splits ≈ Σ ceil(len / maxPartitionBytes): a few-large-files layout
-      // (e.g. 8×1 GB on 32 cores) already scans with ≥ target byte-range
-      // splits and must NOT pay a full round-robin exchange of the payload.
-      // Caveat this estimate cannot see: byte-range splits over a file with
-      // ONE giant row group still hand all rows to one task — writers that
-      // produce such files (the pre-r17 ScaleUp did) need fixing at the
-      // writer, not here (ScaleUp now writes spread files).
-      val estSplits = lens.map(l => math.max(1L, (l + maxPB - 1) / maxPB)).sum
-      estSplits < target && lens.sum >= minBytes
-    })
-    if (go) df.repartition(target) else df
-  }
-
-  /** Summed on-disk bytes of a scan-rooted frame's input files — the cheap
-    * scale probe behind stats-conditional dispatches (pin-vs-recompute,
-    * spread): file length is ground truth where optimizer row-count stats
-    * are estimates. Cached per (session uuid, file layout — [[layoutKey]],
-    * so a same-path regeneration can't serve stale bytes); ≤ one FS
-    * metadata call per file per session. */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
-
-  def inputBytes(df: DataFrame): Long = {
-    val files = df.inputFiles
-    if (files.isEmpty) return 0L
-    val spark = df.sparkSession
-    bytesCache.computeIfAbsent(layoutKey(spark, files), _ => {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(hconf).getFileStatus(p).getLen
-      }.sum
-    })
+    // ≤ target-1 files (guaranteed by the short-circuit above)
+    val lens = lengths(spark, files)
+    val maxPB = math.max(1L, org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")))
+    // splits ≈ Σ ceil(len / maxPartitionBytes): a few-large-files layout
+    // (e.g. 8×1 GB on 32 cores) already scans with ≥ target byte-range
+    // splits and must NOT pay a full round-robin exchange of the payload.
+    // Caveat this estimate cannot see: byte-range splits over a file with
+    // ONE giant row group still hand all rows to one task — writers that
+    // produce such files (the pre-r17 ScaleUp did) need fixing at the
+    // writer, not here (ScaleUp now writes spread files).
+    val estSplits = lens.map(l => math.max(1L, (l + maxPB - 1) / maxPB)).sum
+    if (estSplits < target && lens.sum >= minBytes) df.repartition(target) else df
   }
 
   /** Pin-then-sort for presentation ORDER BYs over scan-rooted NARROW

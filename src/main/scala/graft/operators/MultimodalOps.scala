@@ -433,31 +433,18 @@ object MultimodalOps {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Write-then-sort pin for the exact-pair ORDER BY, CONDITIONED on
-    * corpus scale (optimization r18; guide §1.4/§3.3): the ORDER BY's
-    * range sampler re-executes its child, and for q122/q127 that child is
-    * the whole MIH enumeration + verify join — the bench paid the
-    * candidate pipeline twice per run. Pinning unconditionally is the
-    * q114 treatment, but here the pinned mass is the PAIR SET, which
-    * under planted-clique geometry grows ~quadratically per decade — the
-    * r16 sf10 sweep ENOSPC'd on exactly this query's shuffle mass, so
-    * adding a pair-set pin on top of the sort's own spill at that scale
-    * courts the same failure. Dispatch on input file bytes (ground
-    * truth, cached): below 1 GB of documents the pin is pure win —
-    * measured at sf10 on the r18 power-law corpus (~507 MB input), the
-    * unpinned ORDER BY ran the 331M-row candidate join+verify TWICE
-    * (StageProbe stages 19/22: 1279 + 1404 task-s reading the same
-    * 3.6 GB candidate shuffle) while the verified pair set a pin holds
-    * is 20.5M rows / 189 MB — realistic-geometry pair mass is
-    * near-linear in input, so the pinned mass is far inside the sort's
-    * own spill headroom. Above 1 GB (production corpora, where pair
-    * mass cannot be bounded a priori) the committed recompute-over-disk
-    * trade stands and the plan is byte-identical to r17's. The scale
-    * answer to q122's cost remains q128's rep mode, not a faster
-    * exact-pair sort. */
-  private def pinPairsIfSmall(pairs: DataFrame, basis: DataFrame): DataFrame =
-    if (Tables.inputBytes(basis) <= (1L << 30))
-      Tables.pin(pairs)
+  /** Write-then-sort pin for the exact-pair ORDER BY, conditioned on
+    * corpus scale (optimization r18): the ORDER BY's range sampler
+    * re-executes the whole MIH enumeration + verify join, but the pinned
+    * mass is the pair set, which under planted-clique geometry grows
+    * ~quadratically per decade (the r16 sf10 sweep ENOSPC'd on this
+    * query's shuffle mass). Pins only when [[graft.Tables.sizeOf]] of the
+    * basis is known and at most 1 GB (sf10, ~507 MB: a 189 MB pair set
+    * saved a second 1279 task-s candidate pass); a larger or unknown size
+    * keeps the recompute-over-disk plan. The scale answer to q122's cost
+    * remains q128's rep mode. */
+  private[graft] def pinPairsIfSmall(pairs: DataFrame, basis: DataFrame): DataFrame =
+    if (Tables.sizeOf(basis).exists(_ <= (1L << 30))) Tables.pin(pairs)
     else pairs
 
   /** The planted q122/q127/q128 corpus (originals ∪ perturbed copies of
@@ -539,8 +526,8 @@ object MultimodalOps {
       // court exactly the r16 ENOSPC on a bench-sized disk. Below the
       // dispatch threshold the pin is pure win; above it the committed
       // recompute-over-disk trade stands unchanged. The dispatch basis
-      // is the CORPUS FRAME ITSELF (scan-rooted on documents, so
-      // inputFiles resolve) — not the raw documents table — so the
+      // is the CORPUS FRAME ITSELF (scan-rooted on documents, so its
+      // size is known) — not the raw documents table — so the
       // threshold tracks what the pair set is actually derived from
       // (ADVICE r18: the documents-table basis silently coupled the
       // measured headroom to mediaOf's derivation and the plant rate).

@@ -85,22 +85,14 @@ object Num {
     * can bound its input (see the object doc for the safety argument). */
   val Compact = new Tier("decimal(8,2)")
 
-  /** Pick the tier from the frame's on-disk input bytes (ground truth,
-    * cached — [[graft.Tables.inputBytes]]); non-scan-rooted frames read 0
-    * bytes and stay Compact, which suits the in-memory test frames the
-    * path serves. */
+  /** Pick the tier from the frame's on-disk input size
+    * ([[graft.Tables.sizeOf]]): Compact only under [[CompactMaxBytes]];
+    * a frame of unknown size (no input files) takes the scale-safe Wide. */
   def tierFor(df: DataFrame): Tier =
-    if (graft.Tables.inputBytes(df) <= CompactMaxBytes) Compact else Wide
+    if (graft.Tables.sizeOf(df).exists(_ <= CompactMaxBytes)) Compact else Wide
 
   /** Exact decimal literal 1.00 for (1 ± rate) factors. */
   val one: Column = lit(new java.math.BigDecimal("1.00"))
-
-  // Static API (the Wide tier) — for call sites with no frame in scope.
-  def money(c: Column): Column = Wide.money(c)
-  def dsum(c: Column, scale: Int = 2): Column = Wide.dsum(c, scale)
-  def dsumDec(c: Column, scale: Int = 2): Column = Wide.dsumDec(c, scale)
-  def dsumOver(c: Column, w: WindowSpec, scale: Int = 2): Column = Wide.dsumOver(c, w, scale)
-  def davg(c: Column, scale: Int = 4): Column = Wide.davg(c, scale)
 
   /** DuckDB oracle text for [[Tier.dsum]] — ONE text for both tiers: the
     * tiers differ only in Spark-side buffer width, never in value. */

@@ -182,12 +182,11 @@ object TextOps {
     * (sf0.01 drives the window path; TokenStatsSpec pins the join path). */
   private[graft] val TokenWindowMaxBytes: Long = 64L << 20
 
-  /** A frame with no input files (in-memory, cached or streamed docs) has
-    * no known size, so it takes the skew-safe join path: reading its 0
-    * input bytes as "small" would send an unbounded corpus down the window
-    * whose hot-token partition cannot be split (ADVICE r19). */
+  /** Window path only for a corpus of known size
+    * ([[graft.Tables.sizeOf]]) under [[TokenWindowMaxBytes]]; an unknown
+    * size takes the skew-safe join path. */
   private[graft] def tokenWindowSafe(docs: DataFrame): Boolean =
-    docs.inputFiles.nonEmpty && Tables.inputBytes(docs) < TokenWindowMaxBytes
+    Tables.sizeOf(docs).exists(_ < TokenWindowMaxBytes)
 
   /** q57's body over any (doc_id, text) frame — df computed along the path
     * [[tokenWindowSafe]] picked; ONE tokenize pass on both paths (the r18

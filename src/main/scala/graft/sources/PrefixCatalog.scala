@@ -84,9 +84,13 @@ object PrefixCatalog {
     * identifier. */
   final class SparkCatalogSync(spark: SparkSession) extends CatalogSync {
     def existingTargets(namePrefix: String): Set[String] = {
+      // the session catalog lists names without a Spark job (the public
+      // `catalog.listTables()` runs one per call); its pattern is a regex,
+      // so the literal prefix test stays
       val p = s"${namePrefix}_".toLowerCase(java.util.Locale.ROOT)
-      spark.catalog.listTables().collect()
-        .map(_.name.toLowerCase(java.util.Locale.ROOT))
+      val catalog = spark.sessionState.catalog
+      catalog.listTables(catalog.getCurrentDatabase, s"$p*")
+        .map(_.table.toLowerCase(java.util.Locale.ROOT))
         .filter(_.startsWith(p)).toSet
     }
     def register(name: String, path: String): Unit =

@@ -26,12 +26,9 @@ object EventStream {
   def fromDirectory(spark: SparkSession, dir: String): DataFrame = {
     val schema = spark.read.parquet(dir).schema
     val raw = spark.readStream.schema(schema).parquet(dir)
-    // timestamp-normalization mirror of Tables.load (nanos-as-long AND
-    // NTZ-micros testdata encodings both collapse to session-UTC TIMESTAMP)
-    val ntzFixed = graft.Tables.normalizeTimestamps(raw)
-    if (ntzFixed.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      ntzFixed.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else ntzFixed
+    // Tables.load's normalization: nanos-as-long AND NTZ-micros testdata
+    // encodings both collapse to session-UTC TIMESTAMP
+    graft.Tables.normalizeEventTs(graft.Tables.normalizeTimestamps(raw))
   }
 
   /** Hourly tumbling-window counts by type (streaming q40). */
@@ -39,7 +36,7 @@ object EventStream {
     events
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), graft.operators.Num.dsum(col("value")).as("sum_value"))
+      .agg(count(lit(1)).as("n"), graft.operators.Num.Wide.dsum(col("value")).as("sum_value"))
       .select(col("w.start").as("hr"), col("event_type"), col("n"), col("sum_value"))
 
   /** Session windows with a 30-minute gap (streaming q42). */

@@ -50,6 +50,10 @@ class MultimodalSpec extends AnyFunSuite {
     assert(sigs.filter(col("doc_id") >= 1000L).count() == 0L)
     val pairs = MultimodalOps.mediaNearDupPairs(media, maxHamming = 10)
     assert(pairs.count() == 0L, "short payloads must not form a candidate clique")
+    // an in-memory basis has no known size: the pair set stays unpinned
+    val memPairs = Seq((1L, 2L)).toDF("a", "b")
+    assert(Tables.pinnedRdds(MultimodalOps.pinPairsIfSmall(memPairs, media)).isEmpty,
+      "a basis with no input files must keep the recompute path")
   }
 
   test("media phash index: at-rest round-trip, batch-over-batch append, takedown + compact, zero corpus-side shuffle (plan-asserted), vsIndex == full restricted") {

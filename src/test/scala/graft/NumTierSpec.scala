@@ -42,5 +42,7 @@ class NumTierSpec extends AnyFunSuite {
     val scanned = spark.read.parquet(dir)
     assert(operators.Num.tierFor(scanned) eq operators.Num.Compact,
       "a kilobyte input must take the Compact tier")
+    assert(operators.Num.tierFor(rows) eq operators.Num.Wide,
+      "a frame with no input files has no known size and must take the Wide tier")
   }
 }

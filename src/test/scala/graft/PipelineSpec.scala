@@ -156,6 +156,24 @@ class PipelineSpec extends AnyFunSuite {
     val (added1, removed1) = PrefixCatalog.syncPrefixTables(spark, base.toString, "drift")
     assert(added1.toSet == Set("drift_alpha", "drift_beta") && removed1.isEmpty)
     assert(spark.table("drift_alpha").count() == 3)
+    // listing the registry reads the session catalog and starts no job
+    val sc = spark.sparkContext
+    def inGroup[T](g: String)(body: => T): T = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    assert(inGroup("graft-drift-list")(
+      new PrefixCatalog.SparkCatalogSync(spark).existingTargets("drift")) ==
+      Set("drift_alpha", "drift_beta"))
+    // the status store fills in event order: once the fence job shows,
+    // a job of the listing's group would show too
+    inGroup("graft-drift-fence")(sc.parallelize(Seq(1)).count())
+    val deadline = System.currentTimeMillis() + 10000
+    while (sc.statusTracker.getJobIdsForGroup("graft-drift-fence").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-drift-fence").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("graft-drift-list").isEmpty,
+      "listing the registry must not start a Spark job")
     // idempotent re-run: no changes
     val (added2, removed2) = PrefixCatalog.syncPrefixTables(spark, base.toString, "drift")
     assert(added2.isEmpty && removed2.isEmpty)

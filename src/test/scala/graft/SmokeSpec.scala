@@ -98,6 +98,15 @@ class SmokeSpec extends AnyFunSuite {
     assert(sourcesContaining("RENAME" + " TO", "src/main").isEmpty)
   }
 
+  test("Tables is the only reader of input files in src/main") {
+    // a second read of input size is how the dispatches drifted apart:
+    // some read an unknown size as 0 bytes and took the fast path; size
+    // frames through Tables.sizeOf, whose None each dispatch reads as large
+    val sites = sourcesContaining("input" + "Files", "src/main")
+    assert(sites == Seq("Tables.scala"),
+      s"input-file reads outside Tables.scala: $sites — size frames through Tables.sizeOf")
+  }
+
   test("PlanDump headline list stays in sync with the query inventory") {
     // no stale names (a renamed query must not silently drop its plan dump)
     val stale = PlanDump.headline.toSet -- SparkEntry.queries.keySet

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (at 100 TB this must be a zero-cost identity);
   *  - small single-file inputs pass through untouched (the exchange costs
   *    more than the serial work it parallelizes — measured at sf0.1);
+  *  - inputs of unknown size (no input files) pass through untouched;
   *  - LARGE single-file inputs gain a round-robin exchange so downstream
   *    narrow stages use every core;
   *  - rows are never added, dropped, or altered.
@@ -26,6 +27,10 @@ class SpreadSpec extends AnyFunSuite {
     assert(!df.queryExecution.executedPlan.toString.contains("Exchange"),
       "sub-threshold table must not pay an exchange")
     assert(df.count() == 1000)
+    // no input files: no size to spread on, even under a zero floor
+    val mem = Tables.spread(spark.range(1000).toDF("id"), 0L)
+    assert(!mem.queryExecution.executedPlan.toString.contains("Exchange"),
+      "a frame with no input files must pass through")
   }
 
   test("multi-file scan passes through with no exchange") {

@@ -40,7 +40,7 @@ class TokenStatsSpec extends AnyFunSuite {
   }
 
   test("dispatch: sub-threshold corpus takes the window path") {
-    // a scan-rooted frame is required for inputBytes; write a small one
+    // a scan-rooted frame has a known size (Tables.sizeOf); write a small one
     val dir = java.nio.file.Files.createTempDirectory("graft-tokwin").toString
     docs.write.mode("overwrite").parquet(dir)
     val scanned = spark.read.parquet(dir)
